@@ -130,9 +130,6 @@ object AsOf {
     merged.union(padded)
   }
 
-  /** Convenience: epoch-long projection helper for timestamp columns. */
-  def epochMicros(c: Column): Column = unix_micros(c)
-
   /** The PLANNED form: same backward as-of semantics through the custom
     * Catalyst operator ([[graft.plans.AsOfJoinPlan]] ->
     * [[graft.plans.AsOfJoinExec]]), so EnsureRequirements places the

@@ -58,11 +58,6 @@ private[graft] object BuildOnce {
       dir
     })
 
-  /** Forget every memoized build (the dirs stay on disk until JVM
-    * exit) — lets a build-pricing probe measure cold builds in one JVM.
-    */
-  private[graft] def reset(): Unit = builtDirs.clear()
-
   private def cleanupAll(): Unit =
     builtDirs.values.forEach { d =>
       try {

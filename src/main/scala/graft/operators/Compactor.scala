@@ -750,13 +750,13 @@ object Compactor {
     *    OUTPUT FILE COUNT (totalBytes / targetBytes), and it runs
     *    once per OPTIMIZE, not per query.
     *
-    * Caveat discovered by measurement (ZOrderProbe): Spark's DEFAULT
-    * parquet timestamp encoding is INT96, which carries NO usable
-    * min/max stats — a time predicate can never skip a row group no
-    * matter how the lake is sorted. A lake that wants time-column
-    * pruning must be WRITTEN with
+    * Caveat discovered by measurement (BENCH_zorder_probe.json):
+    * Spark's DEFAULT parquet timestamp encoding is INT96, which carries
+    * NO usable min/max stats — a time predicate can never skip a row
+    * group no matter how the lake is sorted. A lake that wants
+    * time-column pruning must be WRITTEN with
     * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` (writer-
-    * session property; the probe session sets it and measures 100%
+    * session property; the recorded runs set it and measured 100%
     * scanned without it vs 1-8% with).
     *
     * Row preservation is the caller-visible contract: the returned

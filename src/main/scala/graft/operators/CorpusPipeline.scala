@@ -15,8 +15,8 @@ import graft.functions.TextFns
   *   (SHARED shingle pass) -> PII redact -> token-budget pack ->
   *   shard assign
   *
-  * Composition properties this operator owns (and PipelineE2ESpec +
-  * PipelineProbe assert):
+  * Composition properties this operator owns (PipelineE2ESpec asserts
+  * them; BENCH_pipeline_probe.json records their measured walls):
   *
   *   - near-dedup and decontamination both probe the SAME memoized
   *     shingle table of the post-exact corpus — the lake is shingled
@@ -139,8 +139,7 @@ object CorpusPipeline {
   }
 
   /** Shards of `out` whose positions are NOT a dense 1..n ranking —
-    * the shard-permutation invariant both the spec and the probe pin
-    * (one shared definition, so they cannot drift apart).
+    * the shard-permutation invariant CorpusPipelineSpec pins.
     */
   def nonDensePositionShards(out: DataFrame): Long =
     out.groupBy(col("shard"))

@@ -233,11 +233,8 @@ object IncrementalPipeline {
   // a base-CPU-sized pass even though its output was tiny). Appends
   // ride the day-N commit alongside the other index tables and heal
   // the same way: rows beyond the committed horizon are ignored.
-  // private[graft]: the retro probe (IncPipeProbe) prunes by the SAME
-  // partition function — a re-derived copy there would silently read
-  // the wrong _kp directories if this ever changed (ADVICE r15)
-  private[graft] val KeyParts = 64
-  private[graft] def keyPart(k: Column): Column = pmod(xxhash64(k), lit(KeyParts))
+  private val KeyParts = 64
+  private def keyPart(k: Column): Column = pmod(xxhash64(k), lit(KeyParts))
 
   // Writer task count: a dynamic-partition write pays per-task
   // file-open/commit overhead for every (task, partition) pair it

@@ -605,7 +605,6 @@ object Similarity {
           e: java.util.Map.Entry[String, Array[Array[Double]]]): Boolean =
         size() > ivfCacheCap
     }
-  private[graft] def ivfCacheSize: Int = ivfCache.synchronized(ivfCache.size())
 
   /** [[trainIvfCentroids]] through the session LRU cache — the
     * build-once amortization every trained-index consumer shares

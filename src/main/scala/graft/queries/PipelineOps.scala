@@ -84,8 +84,8 @@ object PipelineOps extends QuerySet {
       import s.implicits._
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       // per-stratum budget = 60% of the distinct-text token mass / 4
-      // strata (the probe's sizing rule: dedup removes the copy mass
-      // before the pack, so sizing on RAW tokens would never bite).
+      // strata (dedup removes the copy mass before the pack, so
+      // sizing on RAW tokens would never bite).
       // Keyed on md5(text), per-row token counts max-folded per group —
       // dropDuplicates("text") shuffled full document bodies to count
       // tokens (see corpusSizing's shuffle note; same population, md5
@@ -500,7 +500,8 @@ object PipelineOps extends QuerySet {
       import s.implicits._
       val docs = Tables.load(s, d, "documents").select($"doc_id", $"text")
       // ONE scalar job for both sizing knobs (they were two serial
-      // corpus-pass collects — ~0.7 s of the reset wall, P05Prof).
+      // corpus-pass collects — ~0.7 s of the reset wall, measured in
+      // OPTIMIZATION_r20.md).
       // Values are identical to the two-job form by construction;
       // oracle re-proven.
       val (budget, mxid) = corpusSizing(s, d)

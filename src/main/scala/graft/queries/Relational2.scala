@@ -247,12 +247,14 @@ object Relational2 extends QuerySet {
     // --- Distinct aggregate per group.
     //
     // r13 scale audit (solo sf10join 12.2 s / 8.8x, above the 3-5x
-    // join band): PROFILE-ATTRIBUTED, not a plan flaw — Q15Prof times
-    // the sub-plans solo at sf10join: the partkey join alone is 2.8 s;
-    // ONE single-distinct aggregate (no Expand anywhere) is 11.5-14.3 s;
-    // the two-distinct Expand form is 13.6 s — i.e. Expand's second
-    // copy of the fact rides the same wall as one distinct, and the
-    // cost IS the 60M-row distinct-dedup volume (irreducible for an
+    // join band; the q15 row of BENCH_sf10_join_probe.json is the
+    // current record): PROFILE-ATTRIBUTED, not a plan flaw — its
+    // sub-plans timed solo at sf10join: the partkey join alone is
+    // 2.8 s; ONE single-distinct aggregate (no Expand anywhere) is
+    // 11.5-14.3 s; the two-distinct Expand form is 13.6 s — i.e.
+    // Expand's second copy of the fact rides the same wall as one
+    // distinct, and the cost IS the 60M-row distinct-dedup volume
+    // (irreducible for an
     // exact answer: (brand, orderkey) pairs are near-unique, so no
     // layout crushes them map-side). Falsified rewrites, measured:
     // distinct-(partkey,suppkey)-first two-branch 21.0 s (a random

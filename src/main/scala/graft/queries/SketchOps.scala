@@ -17,8 +17,8 @@ import graft.Tables
   * promises rank ±1/1000, checked 10× wider), shared with the
   * QueriesSpec pins. The pure sketch-only serving plans (no exact
   * twin — what a 100 TB job runs) are exercised by SketchMergeSpec and
-  * the rollup probe; the exact twins here are the verification
-  * harness, not the serving shape.
+  * measured in BENCH_sketch_probe.json; the exact twins here are the
+  * verification harness, not the serving shape.
   */
 object SketchOps extends QuerySet {
 

@@ -112,9 +112,10 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("composed day loop: compact -> flag vs index -> fold novel; day 2 dups of day 1 novelty flag via the fold") {
-    // The DayLoopProbe composition at spec scale: each day's crawl
-    // residue is compacted with optimizeParquet, flagged against the
-    // persisted index, and its novel slice folded with appendNovel.
+    // The day-loop composition of BENCH_dayloop_probe.json at spec
+    // scale: each day's crawl residue is compacted with
+    // optimizeParquet, flagged against the persisted index, and its
+    // novel slice folded with appendNovel.
     // Day 2's duplicate half replicates DAY 1'S NOVEL docs — text the
     // index only knows because day 1's fold ran — so the day-2 exact
     // flags are a witness for the loop itself, not just for write().
@@ -164,10 +165,10 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("day-2 NEAR-dups of day-1 novelty flag `near` with the true source match_id") {
-    // The DayLoopProbe near-dup slice at spec scale: day 1 folds novel
-    // md5-token docs into the index; day 2's delta contains
-    // last-token-dropout copies of them (23 of 24 tokens => shingle
-    // Jaccard 21/22 ~ 0.954). Flagging them `near` requires the
+    // The near-dup slice of BENCH_dayloop_probe.json at spec scale:
+    // day 1 folds novel md5-token docs into the index; day 2's delta
+    // contains last-token-dropout copies of them (23 of 24 tokens =>
+    // shingle Jaccard 21/22 ~ 0.954). Flagging them `near` requires the
     // band-key x Jaccard-refinement path to probe shingles the index
     // only has because day 1's fold persisted them — the persisted
     // near-dup machinery's whole contract. match_id must be the TRUE
