@@ -37,11 +37,38 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle. The three phases live in [[PrefixSum.runningTotal]],
   * shared verbatim with [[Curation.packByBudget]] (stratum = constant
   * here).
+  *
+  * Bucket count: the directory passes, whose rows are files, size it
+  * from the file count the listing already holds — one bucket per
+  * `FilesPerBucket` (2^18) files, clamped to
+  * `[1, spark.sql.shuffle.partitions]` (`listingBuckets`). The
+  * constant bounds what one phase-3 task sorts: at most 262,144 narrow
+  * (path, mtime, size) rows. Below it the pass runs one bucket, which
+  * needs none of phases 1-2: no quantile pass, narrow persist, totals
+  * aggregation or offsets checkpoint, each a driver round-trip — and at
+  * a scheduled collector's scale (hundreds of files per pass)
+  * round-trips are the whole cost. Assignment does not depend on the
+  * bucket count. [[withBundleId]] called directly keeps its
+  * `spark.sql.shuffle.partitions` default.
   */
 object Compactor {
 
   /** Columns appended by [[withBundleId]]. */
   val BundleCol = "bundle_id"
+
+  /** Files per prefix-sum bucket in the directory passes: one phase-3
+    * task sorts at most this many listing rows. */
+  private val FilesPerBucket: Long = 1L << 18
+
+  /** Bucket count for bundling `nFiles` listed files: one bucket per
+    * [[FilesPerBucket]] files, clamped to
+    * `[1, spark.sql.shuffle.partitions]`. */
+  private def listingBuckets(nFiles: Long)
+                            (implicit spark: org.apache.spark.sql.SparkSession): Int = {
+    val byCount = (nFiles + FilesPerBucket - 1) / FilesPerBucket
+    math.max(1L, math.min(byCount,
+      spark.sessionState.conf.numShufflePartitions.toLong)).toInt
+  }
 
   /** Assign `bundle_id = floor(exclusive_prefix_sum(size) / targetBytes)`
     * over the total order `(primaryOrder, tieBreakers...)`.
@@ -110,11 +137,13 @@ object Compactor {
     // payloads. Content is then read once and shuffled once (the
     // per-bundle co-location below); payload bytes never pass through a
     // sort. The tiny assignment table is cached (Caches.release() hook)
-    // because the join and the manifest both consume it.
+    // because the join and the manifest both consume it. The bucket
+    // count comes from the file index's listing (no job).
     val listing = files.select(col("path"), col("modificationTime"), col("length"))
       .filter(col("length") > 0)
     val assign = Caches.track(withBundleId(listing, col("modificationTime"),
-      Seq(col("path")), col("length"), targetBytes))
+      Seq(col("path")), col("length"), targetBytes,
+      listingBuckets(files.inputFiles.length)))
     val content = files.select(col("path"), col("content"))
     content
       // no broadcast hint: AQE broadcasts the assignment while it fits
@@ -225,8 +254,8 @@ object Compactor {
     try {
       val (fs, p) = hadoopPath(outputDir, WatermarkFile)
       val out = fs.create(p, true)
-      out.write(s"""{"max_dir":"$maxDir"}""".getBytes("UTF-8"))
-      out.close()
+      try out.write(s"""{"max_dir":"$maxDir"}""".getBytes("UTF-8"))
+      finally out.close()
     } catch { case _: Exception => () } // advisory: losing it costs speed only
 
   private val DateLikeKeys =
@@ -345,6 +374,9 @@ object Compactor {
     else None
   }
 
+  /** A lake file's bundle id, from its `bundle_id=N` partition dir. */
+  private val BundleDir = s"/$BundleCol=([0-9]+)/".r
+
   /** Incremental compaction pass: bundle only files not already present
     * in the output lake (the written bundles carry their source `path`
     * column — the lake IS the processed-set), appending new bundles
@@ -356,7 +388,13 @@ object Compactor {
     * (empty when nothing new).
     *
     * Scale: the anti-join is listing-vs-path-column — both narrow; the
-    * processed-set read prunes to the `path` column only.
+    * processed-set read prunes to the `path` column only. The delta is
+    * evaluated once and pinned; its one `agg(count, max(path))` gives
+    * emptiness, the bucket count (one per 2^18 new files, so a periodic
+    * delta of hundreds of files is a single-bucket prefix sum with no
+    * quantile or offsets pass) and the watermark's max path.
+    * The next bundle id comes from the lake's `bundle_id=N` directory
+    * names, which the lake's file index has already listed — no scan.
     *
     * == High-water-mark fast path ==
     * On date-shaped inputs (every partition level a `k=v` directory
@@ -440,13 +478,25 @@ object Compactor {
               .filter(c.map(d => col("path").contains(s"/$d/")).reduce(_ || _))
           case None => p.select(col("path"))
         }
-        val nextBundle = p.agg(max(col(BundleCol).cast("long"))).collect()(0)
-          .getLong(0) + 1
-        val listing = files
+        // numeric max over the listed bundle dirs: a string max would
+        // rank bundle_id=9 above bundle_id=10
+        val nextBundle = p.inputFiles.iterator
+          .flatMap(f => BundleDir.findFirstMatchIn(f).map(_.group(1).toLong))
+          .foldLeft(-1L)(math.max) + 1
+        // The new-file delta, evaluated ONCE: eager localCheckpoint of its
+        // narrow (path, mtime, size) rows. Its lineage reads outputDir
+        // through the anti-join, so the append below would invalidate a
+        // mere cache and a recompute would see its own output —
+        // anti-joining away every new file. The stats, the assignment
+        // and the empty manifest all read the pinned PRE-write delta.
+        val delta = files
           .select(col("path"), col("modificationTime"), col("length"))
           .filter(col("length") > 0)
           .join(done, Seq("path"), "left_anti")
-        if (listing.isEmpty) {
+          .localCheckpoint()
+        val stats = delta.agg(count(lit(1)), max(col("path"))).collect()(0)
+        val nNew = stats.getLong(0)
+        if (nNew == 0) {
           // nothing new. Install the watermark if the layout supports
           // one and none exists yet (one narrow max(path) scan of the
           // lake buys every subsequent pass the pruned listing).
@@ -454,17 +504,16 @@ object Compactor {
             installMark(Option(
               p.agg(max(col("path"))).collect()(0).getString(0)))
           // empty manifest with the standard schema
-          manifest(listing
+          manifest(delta
             .withColumn(BundleCol, lit(0L))
             .withColumn("record_bytes", lit(0L)), col("path"))
         } else {
-          // localCheckpoint (eager, narrow rows only): the assignment's
-          // lineage reads outputDir through the anti-join, so the append
-          // below would invalidate a mere cache and the recompute would
-          // see its own output — anti-joining away every new file.
-          // Checkpointing pins the PRE-write assignment.
-          val assign = withBundleId(listing, col("modificationTime"),
-            Seq(col("path")), col("length"), targetBytes)
+          // The assignment is pinned too: the write and the returned
+          // manifest both consume it, and the manifest is read after the
+          // append. A localCheckpoint, not a Caches entry, which would
+          // stay referenced until Caches.release() — one per pass.
+          val assign = withBundleId(delta, col("modificationTime"),
+            Seq(col("path")), col("length"), targetBytes, listingBuckets(nNew))
             .withColumn(BundleCol, col(BundleCol) + nextBundle)
             .localCheckpoint()
           files.select(col("path"), col("content"))
@@ -476,13 +525,12 @@ object Compactor {
             .partitionBy(BundleCol)
             .parquet(outputDir)
           // advance the watermark to the newest dir this pass bundled
-          // from (max over the tiny checkpointed assignment; never
-          // regresses below the existing mark — a full-depth new mark
-          // always compares past the shorter prefix it refines)
+          // from (the delta's max path; never regresses below the
+          // existing mark — a full-depth new mark always compares past
+          // the shorter prefix it refines)
           markDepth.foreach { d =>
-            val maxPath = assign.agg(max(col("path"))).collect()(0).getString(0)
-            val newMark = (mark.toSeq ++ Option(maxPath).flatMap(relPartitionOf(_, d)))
-              .maxOption
+            val newMark = (mark.toSeq ++
+              Option(stats.getString(1)).flatMap(relPartitionOf(_, d))).maxOption
             newMark.foreach(writeWatermark(outputDir, _))
           }
           manifest(assign, col("path"))
@@ -545,7 +593,8 @@ object Compactor {
     // sees payload bytes
     val listing = files.select(col("path"), col("mtime"), col("size"))
     val assign = Caches.track(withBundleId(listing, col("mtime"),
-      Seq(col("path")), col("size"), effectiveTarget))
+      Seq(col("path")), col("size"), effectiveTarget,
+      listingBuckets(files.inputFiles.length)))
     val writer = files.select(col("path"), col("content"))
       .join(assign, "path")
       .select(col(BundleCol), col("content").as("value"))

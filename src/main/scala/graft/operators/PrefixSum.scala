@@ -32,6 +32,11 @@ import org.apache.spark.sql.functions._
   *     more than one bucket and a hot group fans out across `buckets`
   *     tasks.
   *
+  * One bucket (`buckets` = 1) is the small-input case: no quantile
+  * pass, no narrow persist, no totals pass — every offset is 0 and
+  * phase 3 alone is the running sum. Callers that know their row count
+  * size `buckets` from it ([[Compactor]] sizes from the file listing).
+  *
   * `offset(group, bucket) + local_prefix == group_prefix` for ANY bucket
   * boundaries, so results never depend on sketch accuracy or boundary
   * placement — only balance does (pinned by the bucket-count-independence
@@ -153,18 +158,24 @@ private[graft] object PrefixSum {
 
     // Phase 3 (lazy, computed when the caller materializes): ONE fresh
     // pass over the full source — bucket, broadcast-join the offset,
-    // within-bucket running sum over the ORIGINAL order columns.
+    // within-bucket running sum over the ORIGINAL order columns. With
+    // one bucket per group every exclusive bucket offset is 0, so the
+    // totals aggregation and its join are skipped: the plan is the plain
+    // per-group window.
     val w = Window.partitionBy(col("_pk_st"), col("_pk_bucket"))
       .orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding,
         if (inclusive) Window.currentRow else -1L)
-    val summed = df
+    val bucketed = df
       .withColumn("_pk_st", groupCol)
       .withColumn("_pk_val", coalesce(valueCol.cast("long"), lit(0L)))
       .withColumn("_pk_bucket", bucketOf(ordKey))
-      .join(broadcast(offsets),
+    val withOffset =
+      if (b <= 1) bucketed.withColumn("_offset", lit(0L))
+      else bucketed.join(broadcast(offsets),
         col("_pk_st") <=> col("_off_st") &&
           col("_pk_bucket") === col("_off_bucket"))
+    val summed = withOffset
       .withColumn(outCol,
         coalesce(sum(col("_pk_val")).over(w), lit(0L)) + col("_offset"))
       .drop("_pk_st", "_pk_bucket", "_off_st", "_off_bucket", "_offset")
