@@ -38,37 +38,31 @@ import org.apache.spark.sql.functions._
   * shared verbatim with [[Curation.packByBudget]] (stratum = constant
   * here).
   *
-  * Bucket count: the directory passes, whose rows are files, size it
-  * from the file count the listing already holds — one bucket per
-  * `FilesPerBucket` (2^18) files, clamped to
-  * `[1, spark.sql.shuffle.partitions]` (`listingBuckets`). The
-  * constant bounds what one phase-3 task sorts: at most 262,144 narrow
-  * (path, mtime, size) rows. Below it the pass runs one bucket, which
-  * needs none of phases 1-2: no quantile pass, narrow persist, totals
-  * aggregation or offsets checkpoint, each a driver round-trip — and at
-  * a scheduled collector's scale (hundreds of files per pass)
-  * round-trips are the whole cost. Assignment does not depend on the
-  * bucket count. [[withBundleId]] called directly keeps its
-  * `spark.sql.shuffle.partitions` default.
+  * Bucket count: the directory passes, whose rows are files, pick it
+  * from the file count the listing already holds (`listingBuckets`).
+  * A listing of at most `SingleBucketFiles` (2^18) files runs as ONE
+  * bucket, which needs none of phases 1-2: no quantile pass, narrow
+  * persist, totals aggregation or offsets checkpoint, each a driver
+  * round-trip — and at a scheduled collector's scale (hundreds of
+  * files per pass) round-trips are the whole cost. The constant bounds
+  * what that one task sorts: at most 262,144 narrow (path, mtime, size)
+  * rows. Larger listings keep the `spark.sql.shuffle.partitions`
+  * default, as [[withBundleId]] called directly does. Assignment does
+  * not depend on the bucket count.
   */
 object Compactor {
 
   /** Columns appended by [[withBundleId]]. */
   val BundleCol = "bundle_id"
 
-  /** Files per prefix-sum bucket in the directory passes: one phase-3
-    * task sorts at most this many listing rows. */
-  private val FilesPerBucket: Long = 1L << 18
+  /** Largest listing the directory passes bundle as one prefix-sum
+    * bucket: the single phase-3 task sorts at most this many rows. */
+  private val SingleBucketFiles: Long = 1L << 18
 
-  /** Bucket count for bundling `nFiles` listed files: one bucket per
-    * [[FilesPerBucket]] files, clamped to
-    * `[1, spark.sql.shuffle.partitions]`. */
-  private def listingBuckets(nFiles: Long)
-                            (implicit spark: org.apache.spark.sql.SparkSession): Int = {
-    val byCount = (nFiles + FilesPerBucket - 1) / FilesPerBucket
-    math.max(1L, math.min(byCount,
-      spark.sessionState.conf.numShufflePartitions.toLong)).toInt
-  }
+  /** Bucket count for bundling `nFiles` listed files: 1 up to
+    * [[SingleBucketFiles]] files, else 0 (the shuffle-partitions default). */
+  private def listingBuckets(nFiles: Long): Int =
+    if (nFiles <= SingleBucketFiles) 1 else 0
 
   /** Assign `bundle_id = floor(exclusive_prefix_sum(size) / targetBytes)`
     * over the total order `(primaryOrder, tieBreakers...)`.
@@ -390,9 +384,9 @@ object Compactor {
     * Scale: the anti-join is listing-vs-path-column — both narrow; the
     * processed-set read prunes to the `path` column only. The delta is
     * evaluated once and pinned; its one `agg(count, max(path))` gives
-    * emptiness, the bucket count (one per 2^18 new files, so a periodic
-    * delta of hundreds of files is a single-bucket prefix sum with no
-    * quantile or offsets pass) and the watermark's max path.
+    * emptiness, the bucket count (a delta of at most 2^18 new files,
+    * e.g. a periodic pass of hundreds, is a single-bucket prefix sum
+    * with no quantile or offsets pass) and the watermark's max path.
     * The next bundle id comes from the lake's `bundle_id=N` directory
     * names, which the lake's file index has already listed — no scan.
     *

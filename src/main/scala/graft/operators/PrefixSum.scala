@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   *
   * One bucket (`buckets` = 1) is the small-input case: no quantile
   * pass, no narrow persist, no totals pass — every offset is 0 and
-  * phase 3 alone is the running sum. Callers that know their row count
-  * size `buckets` from it ([[Compactor]] sizes from the file listing).
+  * phase 3 alone is the running sum. Callers that know their input is
+  * small pass 1 ([[Compactor]]'s directory passes do, from the file
+  * listing).
   *
   * `offset(group, bucket) + local_prefix == group_prefix` for ANY bucket
   * boundaries, so results never depend on sketch accuracy or boundary

@@ -38,25 +38,30 @@ class ApiSpec extends SparkSpec {
       Files.write(p, (s"""{"i":$i,"pad":"${"y" * 40}"}""").getBytes("UTF-8"))
       p.toFile.setLastModified(1700000000000L + i * 1000L)
     }
-    addFiles(1, 10)
+    // 56-57-byte files under a 128-byte target: two or three files per
+    // bundle, so 30 files give at least 11 bundles (ids past 9)
+    addFiles(1, 30)
     val m1 = Compactor.compactDirectoryIncremental(in.toString, out.toString, 128L)
     val bundles1 = m1.select("bundle_id").collect().map(_.getLong(0)).toSet
-    assert(m1.agg(sum("n_records")).collect()(0).getLong(0) == 10)
+    assert(m1.agg(sum("n_records")).collect()(0).getLong(0) == 30)
+    assert(bundles1.size >= 11)
 
     // second pass, nothing new -> empty manifest, lake unchanged
     val m2 = Compactor.compactDirectoryIncremental(in.toString, out.toString, 128L)
     assert(m2.count() == 0)
-    assert(spark.read.parquet(out.toString).count() == 10)
+    assert(spark.read.parquet(out.toString).count() == 30)
 
-    // add files -> only they are bundled, with ids past the old maximum
-    addFiles(11, 15)
+    // add files -> only they are bundled, with ids continuing at the old
+    // maximum + 1 and contiguous. A lexicographic max over the
+    // bundle_id=N dirs would pick 9 and reuse ids 10.. instead.
+    addFiles(31, 35)
     val m3 = Compactor.compactDirectoryIncremental(in.toString, out.toString, 128L)
     assert(m3.agg(sum("n_records")).collect()(0).getLong(0) == 5)
-    val bundles3 = m3.select("bundle_id").collect().map(_.getLong(0)).toSet
-    assert(bundles3.forall(_ > bundles1.max))
+    val bundles3 = m3.select("bundle_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(bundles3.nonEmpty && bundles3 == (bundles1.max + 1 to bundles3.max))
     val back = spark.read.parquet(out.toString)
-    assert(back.count() == 15)
-    assert(back.select("path").distinct().count() == 15) // no re-bundling
+    assert(back.count() == 35)
+    assert(back.select("path").distinct().count() == 35) // no re-bundling
   }
 
   test("incremental watermark fast path: date-partitioned deltas, monotone contract, fallback") {
@@ -230,24 +235,7 @@ class ApiSpec extends SparkSpec {
     addHour(3, 20)
     pass() // one warm incremental fold: steady state from here on
     addHour(4, 50)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val mf =
-      try {
-        val r = pass()
-        // listener bus is async: wait for the count to stabilize
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 20) {
-          last = jobs.get(); Thread.sleep(100); spins += 1
-        }
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (mf, jobs) = countJobs(pass())
     assert(mf.map(_.getAs[Long]("n_records")).sum == 50)
     assert(spark.read.parquet(out.toString).count() == 130)
     // Observed composition (AQE on, the suite's session) = 12 jobs:
@@ -261,36 +249,7 @@ class ApiSpec extends SparkSpec {
     // (approxQuantile on a persisted projection, offsets checkpoint),
     // the delta evaluated four times, a max(bundle_id) lake scan and a
     // max(path) re-aggregation for the watermark.
-    assert(jobs.get() <= 16, s"too many driver round-trips: ${jobs.get()} jobs")
-  }
-
-  test("incremental bundle ids continue numerically past bundle_id=9") {
-    implicit val s = spark
-    import graft.operators.Compactor
-    val in = tmpDir("ids_in"); val out = tmpDir("ids_out")
-    def addFiles(from: Int, to: Int): Unit = (from to to).foreach { i =>
-      val p = Paths.get(in.toString, s"f$i.json")
-      Files.write(p, (s"""{"i":$i,"pad":"${"v" * 40}"}""").getBytes("UTF-8"))
-      p.toFile.setLastModified(1700000000000L + i * 1000L)
-    }
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select(col("bundle_id").cast("long")).distinct().collect()
-        .map(_.getLong(0)).sorted.toSeq
-    // 56-57-byte files under a 128-byte target: two or three files per
-    // bundle, so ids are contiguous and 30 files give 14 bundles (0..13)
-    addFiles(1, 30)
-    Compactor.compactDirectoryIncremental(in.toString, out.toString, 128L)
-    val before = ids(spark.read.parquet(out.toString))
-    assert(before.size >= 11 && before == (0L to before.max))
-    addFiles(31, 36)
-    val added = ids(Compactor.compactDirectoryIncremental(in.toString, out.toString, 128L))
-    // a lexicographic max over the bundle_id=N dirs would pick 9 and
-    // reuse ids 10..; the numeric max continues at old max + 1
-    assert(added.nonEmpty && added.head == before.max + 1)
-    assert(added == (added.head to added.max))
-    val lake = spark.read.parquet(out.toString)
-    assert(ids(lake) == (0L to added.max))
-    assert(lake.count() == 36 && lake.select("path").distinct().count() == 36)
+    assert(jobs <= 16, s"too many driver round-trips: $jobs jobs")
   }
 
   test("LakeFlusher lifecycle: start/drain/stop, restart ships nothing twice") {

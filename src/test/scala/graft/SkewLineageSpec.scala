@@ -167,32 +167,15 @@ class SkewLineageSpec extends SparkSpec {
     // action = one job and the bound is deterministic; with AQE on,
     // per-exchange-stage jobs inflate the count ~7x and drown the
     // signal being pinned.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     // restore whatever AQE setting the surrounding suite ran with, not a
     // hardcoded value
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val got =
-      try {
-        val r = Dedup.clusters(chain, $"doc_a", $"doc_b")
+    val (got, jobs) =
+      try countJobs {
+        Dedup.clusters(chain, $"doc_a", $"doc_b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // listener bus is async: wait for the count to stabilize
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 20) {
-          last = jobs.get(); Thread.sleep(100); spins += 1
-        }
-        r
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     assert(got.size == 400 && got.values.forall(_ == 0L))
     // Observed composition with two-phase CC: the basin-fold count (1),
     // then ONE convergence-count job per round over the HALVED quotient
@@ -203,7 +186,7 @@ class SkewLineageSpec extends SparkSpec {
     // eager-checkpoint shape before that ~35 — the bound separates all
     // three; modest headroom for a Spark bump adding a broadcast job
     // per round, per ADVICE r7.
-    assert(jobs.get() <= 20, s"too many driver round-trips: ${jobs.get()} jobs")
+    assert(jobs <= 20, s"too many driver round-trips: $jobs jobs")
     // non-convergence must THROW, not return wrong labels silently
     // (driverQuotientEdges = 0 pins the distributed loop — the driver
     // union-find path always converges, so maxRounds is loop-only)

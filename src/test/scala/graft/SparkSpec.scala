@@ -38,6 +38,28 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` and count the Spark jobs it starts, for pinning a
+    * driver round-trip budget. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      // listener bus is async: wait for the count to stabilize
+      var last = -1
+      var spins = 0
+      while (jobs.get() != last && spins < 20) {
+        last = jobs.get(); Thread.sleep(100); spins += 1
+      }
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def tmpDir(prefix: String): java.io.File = {
     val f = java.nio.file.Files.createTempDirectory(prefix).toFile
     f.deleteOnExit(); f
