@@ -68,7 +68,7 @@ object AnnIndex {
     Seq((FormatVersion, nCells, iters, dim, seedMode, seedEvery))
       .toDF("version", "n_cells", "iters", "dim", "seed_mode", "seed_every")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    invalidate(spark, path)
+    loadedIxs.invalidate(path)
   }
 
   /** [[write]] to a managed temp dir, once per (corpus plan + backing
@@ -84,49 +84,13 @@ object AnnIndex {
       write(_, corpus, nCells, iters, dim, seedMode, seedEvery))
   }
 
-  // serve-side twin of the build-once map: an index is loaded once and
-  // searched many times, so the driver-side artifacts (one-row meta,
-  // |cells| centroid rows) are fetched once per (session, path). The
-  // corpus DataFrame is lazy either way — only its plan (and its file
-  // LISTING, frozen at load time) is cached here.
-  private val loadedIxs = new java.util.concurrent.ConcurrentHashMap[String, Index]()
+  private[graft] val loadedIxs = new IndexMemo[Index]("meta", "centroids", "corpus")
 
-  // Content fingerprint of the on-disk index: (name, length, mtime) of
-  // the meta + centroids files and the corpus TOP-LEVEL entries (the
-  // cell=N directories — a dir's mtime moves when files are added under
-  // it). Keying the memo on this makes retrain-by-rewrite and
-  // out-of-process appends at the same path visible to loadOnce without
-  // scanning any data: three driver-side listStatus calls, each a
-  // handful (|cells|) of entries.
-  private def fingerprint(spark: SparkSession, path: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sig(sub: String): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) "absent"
-      else fs.listStatus(p)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString(";")
-    }
-    java.util.Objects.hash(sig("meta"), sig("centroids"), sig("corpus")).toString
-  }
-
-  // same-session writers don't even need the fingerprint to roll: drop
-  // every cached load of this path eagerly (covers appends landing
-  // within one fs-mtime granule)
-  private def invalidate(spark: SparkSession, path: String): Unit =
-    loadedIxs.keySet.removeIf(_.startsWith(s"${spark.hashCode()}:$path:"))
-
-  /** [[load]] memoized per (session, path, on-disk content) — the
-    * serving path: meta and centroids are read once, every subsequent
-    * search reuses them. The content term in the key (file
-    * lengths/mtimes, no data read) means a retrained-by-rewrite or
-    * appended index at the same path is re-loaded, never served stale.
+  /** [[load]] through the serve-path [[IndexMemo]]: meta and centroids
+    * are read once per on-disk version of the index.
     */
   def loadOnce(spark: SparkSession, path: String): Index =
-    loadedIxs.computeIfAbsent(
-      s"${spark.hashCode()}:$path:${fingerprint(spark, path)}",
-      _ => load(spark, path))
+    loadedIxs.getOrLoad(spark, path)(load(spark, path))
 
   def load(spark: SparkSession, path: String): Index = {
     val m = spark.read.parquet(s"$path/meta").collect()
@@ -284,41 +248,17 @@ object AnnIndex {
         "curve_m", "curve_recall", "curve_k", "curve_q")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/sketch_meta")
     // every meta mutation funnels through here (writeSketch, addQ8,
-    // refreshCurve) — roll the serve-path memo eagerly
-    invalidateSketchMeta(spark, path)
+    // refreshCurve)
+    sketchMetas.invalidate(path)
   }
 
-  // ---- memoized serve-path sketch meta (the loadOnce device) -------- //
-  // searchSketch paid the one-row meta collect (a driver job) + footer
-  // read per call for a table that changes only on writeSketch/addQ8/
-  // refreshCurve. Memoized per (session, path, on-disk content of
-  // sketch_meta/): one driver-side listStatus, no data read; a meta
-  // rewritten by another process re-keys, a same-session writer
-  // invalidates eagerly above. Appends/compaction never change the
-  // meta's meaning (recipe + hasQ8 + curve), so the serve paths stay
-  // correct under both.
-  private val sketchMetas =
-    new java.util.concurrent.ConcurrentHashMap[String, SketchMeta]()
+  // appends and compaction never change the meta (recipe + hasQ8 +
+  // curve), so only sketch_meta/ is fingerprinted
+  private[graft] val sketchMetas = new IndexMemo[SketchMeta]("sketch_meta")
 
-  private def sketchMetaFingerprint(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/sketch_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(";")
-  }
-
-  private def invalidateSketchMeta(spark: SparkSession, path: String): Unit =
-    sketchMetas.keySet.removeIf(_.startsWith(s"${spark.hashCode()}:$path:"))
-
-  /** [[loadSketchMeta]] memoized per (session, path, on-disk content)
-    * — the serving path.
-    */
+  /** [[loadSketchMeta]] through the serve-path [[IndexMemo]]. */
   def loadSketchMetaOnce(spark: SparkSession, path: String): SketchMeta =
-    sketchMetas.computeIfAbsent(
-      s"${spark.hashCode()}:$path:${sketchMetaFingerprint(spark, path)}",
-      _ => loadSketchMeta(spark, path))
+    sketchMetas.getOrLoad(spark, path)(loadSketchMeta(spark, path))
 
   /** Build the int8 sibling for an existing sketch index — the explicit
     * form of what v2's writeSketch did unconditionally. Derives from
@@ -491,7 +431,7 @@ object AnnIndex {
     * open/footer costs ([[Compactor.compactTableIf]] — the
     * rewrite-past-threshold form; listing-only no-op below
     * `maxFiles`). Row-preserving; serves re-key automatically
-    * ([[loadOnce]] fingerprints on-disk content, and the search paths
+    * ([[IndexMemo]] fingerprints on-disk content, and the search paths
     * re-read by path per call).
     *
     * @return true when any table was rewritten
@@ -656,7 +596,7 @@ object AnnIndex {
     */
   def appendSketchVectors(path: String, vecs: DataFrame): Unit = {
     val spark = vecs.sparkSession
-    val meta = loadSketchMeta(spark, path)
+    val meta = loadSketchMetaOnce(spark, path)
     val r = Similarity.sketchMatrix(meta.dim, meta.sketchDim, meta.seed)
     // same single-evaluation discipline as [[writeSketch]]: append the
     // vectors (the only execution of the caller plan), then sketch
@@ -705,7 +645,7 @@ object AnnIndex {
     * a crash that landed inside the original append.
     */
   def repairSketchOrphans(spark: SparkSession, path: String): Unit = {
-    val meta = loadSketchMeta(spark, path)
+    val meta = loadSketchMetaOnce(spark, path)
     val r = Similarity.sketchMatrix(meta.dim, meta.sketchDim, meta.seed)
     // q8-specific repair first: a prior append that died between the
     // float-sketch and q8 writes left q8 rows missing — invisible to
@@ -738,6 +678,6 @@ object AnnIndex {
     vecs.toDF("vec_id", "c_vec")
       .withColumn("cell", nearest_centroid(col("c_vec"), ix.centroids))
       .write.mode("append").partitionBy("cell").parquet(s"$path/corpus")
-    invalidate(vecs.sparkSession, path)
+    loadedIxs.invalidate(path)
   }
 }

@@ -328,10 +328,6 @@ object Curation {
   def dsirSelectIndexed(spark: org.apache.spark.sql.SparkSession,
                         path: String, targetIds: DataFrame, budget: Int,
                         viaRank: Option[Boolean] = None): DataFrame = {
-    // loadOnce, not load: every select paid the one-row meta collect (a
-    // driver job) plus the features listing/footer read; the memo keys
-    // on the on-disk content so appends/rewrites are never served stale
-    // (the AnnIndex serving-path device — guide §5, driver round-trips)
     val (feats, meta) = DsirIndex.loadOnce(spark, path)
     dsirSelectFeatures(feats, meta.buckets, targetIds, budget, viaRank)
   }

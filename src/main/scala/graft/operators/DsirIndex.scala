@@ -40,7 +40,7 @@ object DsirIndex {
     import docs.sparkSession.implicits._
     Seq((FormatVersion, buckets)).toDF("version", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    invalidate(docs.sparkSession, path)
+    loadedIxs.invalidate(path)
   }
 
   /** Featurize a day's delta with the INDEX's bucket count and append
@@ -53,7 +53,7 @@ object DsirIndex {
     val meta = readMeta(delta.sparkSession, path)
     features(delta, idCol, textCol, meta.buckets)
       .write.mode("append").parquet(s"$path/features")
-    invalidate(delta.sparkSession, path)
+    loadedIxs.invalidate(path)
   }
 
   // ---- day-versioned layout (the IncrementalPipeline sidecar) ------- //
@@ -80,7 +80,7 @@ object DsirIndex {
     import docs.sparkSession.implicits._
     Seq((FormatVersion, buckets)).toDF("version", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    invalidate(docs.sparkSession, path)
+    loadedIxs.invalidate(path)
   }
 
   /** Day-versioned [[append]]: the delta's features REPLACE
@@ -92,7 +92,7 @@ object DsirIndex {
     val meta = readMeta(delta.sparkSession, path)
     features(delta, idCol, textCol, meta.buckets)
       .write.mode("overwrite").parquet(s"$path/features/v=$ver")
-    invalidate(delta.sparkSession, path)
+    loadedIxs.invalidate(path)
   }
 
   /** [[load]] over the versioned layout, pruned to partitions at or
@@ -125,7 +125,7 @@ object DsirIndex {
                targetBytes: Long = 128L * 1024 * 1024): Boolean = {
     val rewrote = Compactor.compactTableIf(s"$path/features", maxFiles,
       targetBytes)(spark)
-    if (rewrote) invalidate(spark, path)
+    if (rewrote) loadedIxs.invalidate(path)
     rewrote
   }
 
@@ -137,45 +137,13 @@ object DsirIndex {
        .select(col("id"), col("bucket").as("_b"), col("n").as("_n")),
      readMeta(spark, path))
 
-  // ---- memoized serve-path load (the AnnIndex.loadOnce device) ------ //
-  // Every indexed select paid load()'s meta collect (a driver job) plus
-  // the features listing + footer schema read — ~0.1-0.2 s of per-call
-  // driver round-trips for a table whose meta is one immutable row.
-  // Memoize per (session, path, on-disk content): the fingerprint keys
-  // on the (name, length, mtime) listing of meta/ and features/, so a
-  // same-path rewrite or append is re-loaded, never served stale —
-  // three driver-side listStatus calls, no data read. Only the PLAN and
-  // the one-row meta are cached; the features scan still executes per
-  // query.
-  private val loadedIxs =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Meta)]()
+  private[graft] val loadedIxs = new IndexMemo[(DataFrame, Meta)]("meta", "features")
 
-  private def fingerprint(spark: SparkSession, path: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sig(sub: String): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) "absent"
-      else fs.listStatus(p)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString(";")
-    }
-    java.util.Objects.hash(sig("meta"), sig("features")).toString
-  }
-
-  // same-session writers don't even need the fingerprint to roll: drop
-  // every cached load of this path eagerly (covers appends landing
-  // within one fs-mtime granule)
-  private def invalidate(spark: SparkSession, path: String): Unit =
-    loadedIxs.keySet.removeIf(_.startsWith(s"${spark.hashCode()}:$path:"))
-
-  /** [[load]] memoized per (session, path, on-disk content) — the
-    * serving path for repeated selections against one index.
+  /** [[load]] through the serve-path [[IndexMemo]] — the serving path
+    * for repeated selections against one index.
     */
   def loadOnce(spark: SparkSession, path: String): (DataFrame, Meta) =
-    loadedIxs.computeIfAbsent(
-      s"${spark.hashCode()}:$path:${fingerprint(spark, path)}",
-      _ => load(spark, path))
+    loadedIxs.getOrLoad(spark, path)(load(spark, path))
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
     val m = spark.read.parquet(s"$path/meta").collect()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnIndex, Similarity}
+import graft.operators.{AnnIndex, IndexMemo, Similarity}
 
 /** Persisted IVF index: the indexed search must be row-identical to
   * the inline IVF with the same parameters, the probe scan must
@@ -234,6 +234,62 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.addQ8(spark, dir)
     val m2 = AnnIndex.loadSketchMetaOnce(spark, dir)
     assert(m2.hasQ8, "addQ8 must roll the serve-path meta memo")
+  }
+
+  test("loadSketchMetaOnce: out-of-band rewrites of sketch_meta replace the path's memo entry") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft-sk-oob").toString
+    AnnIndex.writeSketch(dir, emb, sketchDim = 8, dim = 64)
+    val meta = new Path(s"$dir/sketch_meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var prev = AnnIndex.loadSketchMetaOnce(spark, dir)
+    for (i <- 1 to 5) {
+      // the same rows rewritten by another process: a plain parquet
+      // write to a temp dir, then a rename — no AnnIndex writer runs,
+      // so only the fingerprint can roll the memo
+      val tmp = new Path(s"$dir/_rewrite$i")
+      spark.read.parquet(meta.toString).write.parquet(tmp.toString)
+      fs.delete(meta, true)
+      assert(fs.rename(tmp, meta))
+      val cur = AnnIndex.loadSketchMetaOnce(spark, dir)
+      assert(!(cur eq prev), s"rewrite $i must reload the meta")
+      assert(cur == prev)
+      prev = cur
+    }
+    assert(AnnIndex.sketchMetas.liveCount(dir) == 1,
+      "5 rewrites must leave one live entry for the path")
+  }
+
+  test("appendSketchVectors: a steady-state append reads the unchanged meta from the memo") {
+    val dir = Files.createTempDirectory("graft-sk-jobs").toString
+    AnnIndex.writeSketch(dir, emb.filter(col("vec_id") % 3 === 0),
+      sketchDim = 16, dim = 64)
+    AnnIndex.appendSketchVectors(dir, emb.filter(col("vec_id") % 3 === 1))
+    // loadRaw: no load-time repartition, whose exchange would add a job
+    val delta = Tables.loadRaw(spark, sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") % 3 === 2)
+    // only the orphan check and the two appends run jobs; the meta,
+    // read twice (2 jobs per uncached read), is a memo hit
+    val (_, jobs) = countJobs(AnnIndex.appendSketchVectors(dir, delta))
+    assert(jobs <= 7, s"steady-state append ran $jobs jobs")
+  }
+
+  test("IndexMemo is an access-ordered LRU bounded at 64 entries") {
+    val dirs = (0 until 65).map { _ =>
+      val d = Files.createTempDirectory("graft-memo-lru")
+      Files.createDirectory(d.resolve("meta"))
+      d.toString
+    }
+    val memo = new IndexMemo[Int]("meta")
+    var loads = 0
+    def get(d: String): Int = memo.getOrLoad(spark, d) { loads += 1; loads }
+    dirs.foreach(get)
+    assert(loads == 65 && memo.liveCount == 64)
+    get(dirs.head)
+    assert(loads == 66, "the least recently used path must have been evicted")
+    assert(memo.liveCount == 64)
+    get(dirs.last)
+    assert(loads == 66, "the most recent path must still hit")
   }
 
   test("sketch index: foreign format version fails loudly") {

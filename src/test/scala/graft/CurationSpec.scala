@@ -155,12 +155,41 @@ class CurationSpec extends SparkSpec {
     val l1 = DsirIndex.loadOnce(spark, dir)
     assert(DsirIndex.loadOnce(spark, dir) eq l1,
       "unchanged index must memo-hit (same load instance)")
+    // a second session gets its own load, bound to that session
+    val s2 = spark.newSession()
+    val o1 = DsirIndex.loadOnce(s2, dir)
+    assert(o1._1.sparkSession eq s2,
+      "a second session must not be served the first session's frame")
     DsirIndex.append(dir,
       Seq((3L, "eta theta iota")).toDF("doc_id", "text"), $"doc_id", $"text")
     val l2 = DsirIndex.loadOnce(spark, dir)
     assert(!(l2 eq l1), "append must roll the memo")
+    assert(!(DsirIndex.loadOnce(s2, dir) eq o1),
+      "append must roll the other session's entry too")
     assert(l2._1.select($"id").distinct().collect().map(_.getLong(0)).toSet
       == Set(1L, 2L, 3L), "re-load must see the appended rows")
+  }
+
+  test("DsirIndex.loadOnce: out-of-band features/ appends replace the path's memo entry") {
+    import spark.implicits._
+    import graft.operators.DsirIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft-dsir-oob").toString
+    DsirIndex.write(dir, Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+      .toDF("doc_id", "text"), $"doc_id", $"text")
+    var prev = DsirIndex.loadOnce(spark, dir)
+    for (i <- 1 to 5) {
+      // a plain parquet append by another writer — no DsirIndex writer
+      // runs, so only the fingerprint can roll the memo
+      DsirIndex.features(Seq((10L + i, s"kappa lambda mu $i")).toDF("doc_id", "text"),
+          $"doc_id", $"text", prev._2.buckets)
+        .write.mode("append").parquet(s"$dir/features")
+      val cur = DsirIndex.loadOnce(spark, dir)
+      assert(!(cur eq prev), s"append $i must reload the index")
+      prev = cur
+    }
+    assert(DsirIndex.loadedIxs.liveCount(dir) == 1,
+      "5 appends must leave one live entry for the path")
+    assert(prev._1.select($"id").distinct().count() == 7)
   }
 
   test("writeOnce keys on the backing files: an in-place overwrite of the " +
