@@ -1,50 +1,50 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
-/** Bounded registry for intermediate DataFrames persisted by operators
-  * whose results are returned lazily (shingle tables, LSH band keys,
-  * bundling projections). A long-lived session issuing many such calls
-  * over DIFFERENT corpora would otherwise accumulate cached partitions
-  * without bound — the registry is an LRU capped at [[capacity]]
-  * entries, and eviction unpersists (always safe: a still-referenced
-  * plan silently recomputes).
+/** Bounded, keyed registry for intermediate DataFrames persisted by
+  * operators whose results are returned lazily (shingle tables, LSH
+  * band keys, bundling projections, pipeline stage pins). A long-lived
+  * session issuing many such calls over DIFFERENT corpora would
+  * otherwise accumulate cached partitions without bound — the registry
+  * is an access-ordered LRU capped at [[capacity]] entries, and
+  * eviction unpersists (always safe: a still-referenced plan silently
+  * recomputes).
   *
-  * Eviction also fires [[onEvict]] hooks so memo maps holding
-  * references to tracked frames (e.g. [[Dedup]]'s shingle-pass memo)
-  * drop the matching entries — otherwise a later memo hit would
-  * silently hand out an unpersisted plan and lose the sharing the memo
-  * exists for.
+  * Two entry points:
+  *  - [[memo]] shares one persisted frame per key: [[Dedup]]'s corpus
+  *    passes key on (pass, session, analyzed-plan semantic hash,
+  *    params), so the queries consuming the same pass over the same
+  *    corpus build and persist it once. The session sits in the key
+  *    tuple and compares by reference (`SparkSession` does not
+  *    override `equals`).
+  *  - [[track]] registers a frame under its own identity, for a pin
+  *    nobody else looks up.
   *
-  * `release()` stays the bulk cleanup hook: callers drain the registry
-  * whenever the results built on these caches have been materialized
-  * (end of a pipeline run, between Verify queries, after a bench wave).
+  * An evicted or released entry leaves the map in the same locked step
+  * that unpersists it, so a memo lookup can never hand out an
+  * unpersisted frame. `release()` is the bulk cleanup: callers drain
+  * the registry whenever the results built on these caches have been
+  * materialized (end of a pipeline run, between Verify queries, after
+  * a bench wave).
   *
   * == Concurrency ==
-  * Every mutation — including a victim's unpersist and its evict
-  * hooks — runs while holding the registry lock, so the registry is
-  * linearizable: a concurrent `track`/`touch` can never interleave
-  * between victim selection and unpersist and resurrect an
-  * already-unpersisted frame into the map (tracked-but-unpersisted).
-  * All operations are driver-side plan bookkeeping (persist/unpersist
-  * registration, never Spark jobs), so holding the lock is cheap; the
-  * lock is reentrant, and hooks must not run Spark jobs.
+  * Registration, eviction and release hold the registry lock;
+  * persist/unpersist are driver-side plan bookkeeping, never Spark
+  * jobs, so holding it is cheap. A memo's plan is built OUTSIDE the
+  * lock, because builders nest (one memoized pass calls another, and
+  * [[track]]s its own pins); a lost race costs only a plan that was
+  * never persisted.
   */
 object Caches {
 
-  /** Insertion+access-ordered map: eldest = least recently used. Values
-    * are unused; the map is an ordered identity set of live frames.
-    */
-  private val lru =
-    new java.util.LinkedHashMap[DataFrame, java.lang.Boolean](16, 0.75f, true)
-  private val releaseHooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-  private val evictHooks =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame => Unit]()
+  /** Access-ordered map: eldest = least recently used. */
+  private val lru = new java.util.LinkedHashMap[Any, DataFrame](16, 0.75f, true)
 
-  @volatile private var cap: Int =
-    sys.env.getOrElse("SPARK_GRAFT_CACHE_CAP", "64").toInt
+  @volatile private var cap: Int = 64
 
-  /** Max live tracked frames before LRU eviction. The default (64)
+  /** Max live registered frames before LRU eviction. The default (64)
     * covers every concurrent Bench/Verify wave — the 101-query suite
     * plus one full incremental-pipeline run (which tracks ~17 frames
     * across bootstrap + day) peaks under it — while bounding a session
@@ -63,94 +63,56 @@ object Caches {
     }
   }
 
-  /** Persist `df` and register it; may evict (and unpersist) the least
-    * recently used frames past [[capacity]].
+  /** The frame registered under `key` (refreshing its recency), or
+    * `build`'s frame persisted and registered under `key`.
     */
-  private[graft] def track(df: DataFrame): DataFrame = lru.synchronized {
-    df.persist()
-    lru.put(df, java.lang.Boolean.TRUE)
+  private[graft] def memo(key: Any)(build: => DataFrame): DataFrame = {
+    val hit = lru.synchronized(lru.get(key))
+    if (hit != null) hit
+    else {
+      val built = build // lazy plan construction, outside the lock
+      lru.synchronized {
+        val prev = lru.get(key)
+        if (prev != null) prev else registerLocked(key, built, StorageLevel.MEMORY_AND_DISK)
+      }
+    }
+  }
+
+  /** Persist `df` at `level` and register it under its own identity;
+    * may evict (and unpersist) the least recently used frames past
+    * [[capacity]].
+    */
+  private[graft] def track(df: DataFrame,
+                           level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    lru.synchronized(registerLocked(df, df, level))
+
+  private def registerLocked(key: Any, df: DataFrame, level: StorageLevel): DataFrame = {
+    df.persist(level)
+    lru.put(key, df)
     evictOverflowLocked()
     df
   }
 
-  /** [[track]] at an explicit storage level (CorpusPipeline's Persist
-    * policy routes its per-stage pins here so repeated pipeline runs
-    * stay bounded by the same LRU instead of accumulating session-
-    * lifetime cache entries).
-    */
-  private[graft] def track(df: DataFrame,
-                           level: org.apache.spark.storage.StorageLevel): DataFrame =
-    lru.synchronized {
-      df.persist(level)
-      lru.put(df, java.lang.Boolean.TRUE)
-      evictOverflowLocked()
-      df
-    }
-
-  /** Refresh `df`'s recency (memo hits call this so hot corpora stay
-    * resident while cold ones age out). Returns whether the frame is
-    * still tracked — false means it was evicted (or released) since the
-    * caller last saw it, and any memo entry handing it out is stale;
-    * callers must rebuild rather than serve an unpersisted plan.
-    */
-  private[graft] def touch(df: DataFrame): Boolean =
-    lru.synchronized { lru.get(df) != null } // access-order map: get reorders
-
-  // caller must hold the lru lock: victim removal, unpersist, and evict
-  // hooks are one atomic step (see the concurrency note above).
-  // Victims are collected FIRST and hooks fire after the iterator is
-  // done: the lock is reentrant, so a hook may legally re-enter the
-  // registry (track/setCapacity/release), and doing that under an open
-  // iterator would mutate the map mid-iteration (CME).
   private def evictOverflowLocked(): Unit = {
-    val victims = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val it = lru.entrySet().iterator()
+    val it = lru.values().iterator()
     while (lru.size() > cap && it.hasNext) {
-      victims += it.next().getKey
-      it.remove() // decrements size immediately
-    }
-    victims.foreach { df =>
-      df.unpersist(false)
-      evictHooks.forEach(h => h(df))
+      it.next().unpersist(false)
+      it.remove()
     }
   }
 
-  /** Register a callback run on every [[release]] — operators holding
-    * memo maps OVER tracked frames must drop their references when the
-    * frames are unpersisted.
-    */
-  private[graft] def onRelease(h: () => Unit): Unit = releaseHooks.add(h)
-
-  /** Register a callback fired with each frame the registry unpersists
-    * (LRU eviction AND [[release]] — release is a bulk eviction, and a
-    * registrant relying on per-frame invalidation must see it as one),
-    * so memo maps can drop exactly the entries referencing the frame.
-    * Hooks run under the registry lock: keep them O(1) bookkeeping and
-    * never run Spark jobs or block on other locks inside one.
-    */
-  private[graft] def onEvict(h: DataFrame => Unit): Unit = evictHooks.add(h)
-
-  /** Unpersist every registered intermediate (non-blocking). Fires
-    * [[onEvict]] per drained frame, then the bulk [[onRelease]] hooks.
-    */
+  /** Unpersist every registered intermediate (non-blocking). */
   def release(): Unit = lru.synchronized {
-    // drain-then-fire, same re-entrancy discipline as eviction
-    import scala.jdk.CollectionConverters._
-    val drained = lru.keySet().asScala.toVector
+    lru.values().forEach(_.unpersist(false))
     lru.clear()
-    drained.foreach { df =>
-      df.unpersist(false)
-      evictHooks.forEach(h => h(df))
-    }
-    releaseHooks.forEach(h => h())
   }
 
   /** Number of currently registered cached intermediates (for tests). */
   def liveCount: Int = lru.synchronized { lru.size() }
 
-  /** Snapshot of currently tracked frames, LRU-oldest first (tests). */
+  /** Snapshot of currently registered frames, LRU-oldest first (tests). */
   private[graft] def trackedFrames: Seq[DataFrame] = lru.synchronized {
     import scala.jdk.CollectionConverters._
-    lru.keySet().asScala.toVector
+    lru.values().asScala.toVector
   }
 }

@@ -556,20 +556,26 @@ object Compactor {
     * contributes only its first 64 KiB, so a large file whose prefix
     * compresses unlike its body (header-heavy formats) still biases the
     * estimate; the clamp bounds the damage to 1-50x.
+    *
+    * Files are listed through the `binaryFile` source, as in
+    * [[compactDirectory]], so both passes spell a path the same way in
+    * their manifests.
     */
   def compactToText(inputDir: String, outputDir: String, targetBytes: Long,
                     codec: Option[String] = Some("gzip"),
                     glob: Option[String] = None,
                     targetCompressed: Boolean = false)
                    (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val files = Readers.wholeTextRecords(spark, inputDir, glob)
+    val reader = spark.read.format("binaryFile")
+    val files = glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
+      .filter(col("length") > 0)
     val effectiveTarget =
       if (!targetCompressed || codec.forall(_ == "none")) targetBytes
       else {
         // deterministic corpus-wide spread: hash order decorrelates the
         // sample from mtime (age) and path lexicography (partition dirs)
         val sample = files.orderBy(hash(col("path")), col("path"))
-          .select(substring(col("content"), 1, 65536).as("c"))
+          .select(substring(col("content").cast("string"), 1, 65536).as("c"))
           .limit(32).collect().map(_.getString(0)).mkString("\n")
           .getBytes("UTF-8")
         val ratio =
@@ -585,13 +591,13 @@ object Compactor {
       }
     // same listing-only assignment as compactDirectory: the window never
     // sees payload bytes
-    val listing = files.select(col("path"), col("mtime"), col("size"))
-    val assign = Caches.track(withBundleId(listing, col("mtime"),
-      Seq(col("path")), col("size"), effectiveTarget,
+    val listing = files.select(col("path"), col("modificationTime"), col("length"))
+    val assign = Caches.track(withBundleId(listing, col("modificationTime"),
+      Seq(col("path")), col("length"), effectiveTarget,
       listingBuckets(files.inputFiles.length)))
     val writer = files.select(col("path"), col("content"))
       .join(assign, "path")
-      .select(col(BundleCol), col("content").as("value"))
+      .select(col(BundleCol), col("content").cast("string").as("value"))
       .repartition(col(BundleCol)) // one text file per bundle
       .write.mode(SaveMode.Overwrite).partitionBy(BundleCol)
     codec.fold(writer)(c => writer.option("compression", c)).text(outputDir)

@@ -19,68 +19,17 @@ import graft.functions.{TextFns, VecFns}
   */
 object Dedup {
 
-  /** Memo for the corpus-wide hash passes (shingle table, LSH
-    * candidates, refined Jaccard pairs). Six of the declared queries
-    * (d02/d04/d06/d07/p01/p02) consume the SAME pass over the same
-    * corpus with the same parameters; without the memo each query
-    * re-tokenized, re-shingled, and re-minhashed the corpus from
-    * parquet — ~6x the dominant cost of a Verify/Bench run. Keys are
-    * (session identity, analyzed-plan semantic hash, column exprs,
-    * params), so a different corpus, session, or parameterization never
-    * collides. Cleared by [[Caches.release]] — entries reference frames
-    * persisted via [[Caches.track]], and handing out an unpersisted
-    * plan would silently lose the sharing.
+  /** Key of `df`'s corpus for the [[Caches.memo]]-shared hash passes
+    * (shingle table, LSH candidates, refined Jaccard pairs). Six of the
+    * declared queries (d02/d04/d06/d07/p01/p02) consume the SAME pass
+    * over the same corpus with the same parameters; without sharing,
+    * each query re-tokenized, re-shingled and re-minhashed the corpus
+    * from parquet — ~6x the dominant cost of a Verify/Bench run. The
+    * full key is (pass, session, analyzed-plan semantic hash, params),
+    * so a different corpus, session or parameterization never collides.
     */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  Caches.onRelease(() => memo.clear())
-  // LRU eviction in the bounded registry must invalidate exactly the
-  // memo entries referencing the evicted frame — a stale entry would
-  // hand out an unpersisted plan and silently lose the sharing.
-  Caches.onEvict(df =>
-    memo.entrySet().removeIf(e => e.getValue eq df))
-
-  // plain get/putIfAbsent (not computeIfAbsent): builders recurse into
-  // other memoized builders, and nested computeIfAbsent on one
-  // ConcurrentHashMap risks a recursive-update error. A lost race costs
-  // one redundant persist, immediately unpersisted.
-  //
-  // Ordering invariant: the memo entry is installed BEFORE the frame
-  // enters the LRU registry (Caches.track). The reverse order had a
-  // window — tracked, evicted under cap pressure (onEvict's removeIf
-  // finds no entry yet), THEN installed — leaving a memo entry whose
-  // frame was already unpersisted; hits then touched an absent key and
-  // silently lost caching until release(). With memo-first, eviction
-  // hooks always see the entry they must invalidate; the only frame
-  // Caches can evict is one the memo already knows about. Hits also
-  // re-validate liveness (touch returns tracked-ness) so a hit that
-  // raced an eviction rebuilds instead of serving an unpersisted plan.
-  private def memoized(key: String)(build: => DataFrame): DataFrame = {
-    val hit = memo.get(key)
-    if (hit != null && Caches.touch(hit)) hit
-    else {
-      if (hit != null) memo.remove(key, hit) // stale: frame was evicted
-      val built = build // lazy plan construction — no job, nothing persisted yet
-      // install loop: exactly one tracked frame per key may survive. A
-      // lost race must STILL validate liveness (mirror of the hit path):
-      // if the incumbent was evicted between its install and now, serving
-      // it would hand out an unpersisted plan — swap in ours. And if a
-      // THIRD thread won that swap with a different frame, loop and serve
-      // the resident winner rather than tracking a second frame for the
-      // key (two live frames per key = double memory until eviction).
-      @annotation.tailrec
-      def install(): DataFrame = {
-        val prev = memo.putIfAbsent(key, built)
-        if (prev == null) { Caches.track(built); built }
-        else if (Caches.touch(prev)) prev
-        else if (memo.replace(key, prev, built)) { Caches.track(built); built }
-        else install()
-      }
-      install()
-    }
-  }
-
-  private def dfKey(df: DataFrame): String =
-    s"${System.identityHashCode(df.sparkSession)}:${df.queryExecution.analyzed.semanticHash()}"
+  private def dfKey(df: DataFrame): (org.apache.spark.sql.SparkSession, Int) =
+    (df.sparkSession, df.queryExecution.analyzed.semanticHash())
 
   /** Keep the first row per key in `order`-order (row_number()=1). */
   def exactFirst(df: DataFrame, keys: Seq[Column], order: Seq[Column]): DataFrame = {
@@ -108,7 +57,7 @@ object Dedup {
 
   def shingleTable(df: DataFrame, idCol: Column, textCol: Column,
                    shingleN: Int): DataFrame =
-    memoized(s"sh:${dfKey(df)}:$idCol:$textCol:$shingleN") {
+    Caches.memo(("sh", dfKey(df), idCol.toString, textCol.toString, shingleN)) {
       shingleBuildCounter.incrementAndGet()
       val par = df.sparkSession.sessionState.conf.numShufflePartitions
       df.select(idCol.as("doc_id"), textCol.as("_text"))
@@ -137,7 +86,7 @@ object Dedup {
     * product.
     */
   def candidatesFromShingles(sh: DataFrame, k: Int, bands: Int): DataFrame =
-    memoized(s"cand:${dfKey(sh)}:$k:$bands") {
+    Caches.memo(("cand", dfKey(sh), k, bands)) {
       // persist the band keys: the self-join consumes them twice, and
       // without the cache each side recomputes the full minhash pass.
       // Registered with Caches so long-lived sessions can release.
@@ -171,7 +120,7 @@ object Dedup {
     // makes the per-pair BigDecimal a survivors-only cost (the d05
     // recipe), and the exact filter on the rounded value keeps the
     // caller-visible threshold semantics bit-identical.
-    val scored = memoized(s"jac:${dfKey(sh)}:$k:$bands") {
+    val scored = Caches.memo(("jac", dfKey(sh), k, bands)) {
       candidatesFromShingles(sh, k, bands)
         .join(sh.toDF("doc_a", "sh_a"), "doc_a")
         .join(sh.toDF("doc_b", "sh_b"), "doc_b")

@@ -142,44 +142,10 @@ object Similarity {
       math.sqrt(s)
     }
     val rows = rows0.filter(v => normOf(v) > 0.0)
-    val n = rows.length
-    require(n > 0, "kcenterSeeds: empty corpus sample (after zero-norm exclusion)")
-    val norms = rows.map(normOf)
-    val k2 = math.min(k, n)
-    val chosen = new Array[Int](k2)
-    chosen(0) = 0 // rows are vec_id-sorted: index 0 IS the lowest id
-    val mc = Array.fill(n)(Double.NegativeInfinity)
-    var s = 0
-    while (s + 1 < k2) {
-      val sv = rows(chosen(s)); val sn = norms(chosen(s))
-      var i = 0
-      while (i < n) {
-        val vi = rows(i)
-        val m = math.min(vi.length, sv.length)
-        var d = 0.0; var j = 0
-        while (j < m) { d += vi(j).toDouble * sv(j).toDouble; j += 1 }
-        val cos = d / (norms(i) * sn)
-        if (cos > mc(i)) mc(i) = cos
-        i += 1
-      }
-      // next seed: the candidate at rank floor(trimFrac * (n-1)) of
-      // the (mc ASC, vec_id ASC) ordering — trimFrac = 0 is the pure
-      // farthest point (argmin over raw mc, strict < keeps the
-      // earliest = lowest id); a small trimFrac skips the most extreme
-      // outliers, the standard robust-farthest-first fix
-      if (trimFrac <= 0.0) {
-        var best = 0; var bestV = Double.PositiveInfinity
-        i = 0
-        while (i < n) { if (mc(i) < bestV) { bestV = mc(i); best = i }; i += 1 }
-        chosen(s + 1) = best
-      } else {
-        val rank = math.floor(trimFrac * (n - 1)).toInt
-        val order = Array.range(0, n).sortBy(i => (mc(i), i))
-        chosen(s + 1) = order(rank)
-      }
-      s += 1
-    }
-    chosen.map(i => rows(i).map(_.toDouble))
+    require(rows.nonEmpty, "kcenterSeeds: empty corpus sample (after zero-norm exclusion)")
+    // rows are vec_id-sorted: index 0 IS the lowest id
+    traverseFarthestFirst(rows, rows.map(normOf), k, trimFrac)
+      .map(i => rows(i).map(_.toDouble))
   }
 
   /** [[kcenterSeeds]] with the farthest-point state kept DISTRIBUTED —
@@ -370,9 +336,8 @@ object Similarity {
     * candidates chosen so far and `ℓ = oversample·k` — so each pass
     * adds ≤ ℓ candidates in expectation, biased toward uncovered
     * space exactly like the farthest-first argmin. After the passes,
-    * the EXACT farthest-first traversal (arithmetic-identical to
-    * [[kcenterSeeds]]'s loop; per-row update parallelized, which is
-    * bit-identical — rows are independent) runs driver-side over the
+    * the EXACT farthest-first traversal (the [[traverseFarthestFirst]]
+    * loop [[kcenterSeeds]] runs) runs driver-side over the
     * O(k·oversample·rounds)-row candidate set only.
     *
     * Deterministic end-to-end, no RNG state: the draw is
@@ -475,12 +440,16 @@ object Similarity {
     } finally releaseOf(pinned)
   }
 
-  /** The driver farthest-first loop of [[kcenterSeeds]], over
-    * in-memory vec_id-sorted rows, with the per-row max-cos update
-    * parallelized (each row's update reads only shared-immutable seed
-    * state and writes only its own slot — bit-identical to the
-    * sequential loop) and the argmin kept sequential (lowest-index
-    * tie-break). Returns chosen indices.
+  /** The driver farthest-first loop, over in-memory vec_id-sorted
+    * rows, with the per-row max-cos update parallelized (each row's
+    * update reads only shared-immutable seed state and writes only its
+    * own slot, so it is bit-identical to a sequential loop) and the
+    * argmin kept sequential (lowest-index tie-break). The next seed is
+    * the candidate at rank floor(trimFrac * (n-1)) of the (mc ASC,
+    * index ASC) ordering: trimFrac = 0 is the pure farthest point
+    * (strict < keeps the earliest = lowest id); a small trimFrac skips
+    * the most extreme outliers, the standard robust-farthest-first fix.
+    * Returns chosen indices.
     */
   private def traverseFarthestFirst(rows: Array[Array[Float]],
                                     norms: Array[Double], k: Int,

@@ -100,4 +100,22 @@ class CompactorSpec extends SparkSpec {
         l => l.contains("range_bucket") && l.contains("*(")))
     }
   }
+
+  test("text and parquet passes spell a file name with a space the same way") {
+    implicit val s = spark
+    import s.implicits._
+    val in = tmpDir("lake_in_sp")
+    writeLake(3, in)
+    val p = Paths.get(in.toString, "sp ace.json")
+    Files.write(p, """{"i":9}""".getBytes("UTF-8"))
+    p.toFile.setLastModified(1700000000000L + 9000L)
+    def keys(mf: org.apache.spark.sql.DataFrame) =
+      mf.select($"first_key", $"last_key").as[(String, String)].collect().sorted.toSeq
+    val parquetKeys = keys(Compactor.compactDirectory(
+      in.toString, tmpDir("lake_out_sp_pq").toString, 10000L))
+    val textKeys = keys(Compactor.compactToText(
+      in.toString, tmpDir("lake_out_sp_txt").toString, 10000L, codec = None))
+    assert(parquetKeys.exists(_._2.endsWith("sp ace.json")), parquetKeys)
+    assert(textKeys == parquetKeys)
+  }
 }

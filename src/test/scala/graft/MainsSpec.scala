@@ -18,14 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MainsSpec extends AnyFunSuite {
 
-  /** The repo root: the nearest ancestor of the working directory that
-    * holds both README.md and src/main/scala. */
-  private lazy val root: Path =
-    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null)
-      .find(p => Files.isRegularFile(p.resolve("README.md")) &&
-        Files.isDirectory(p.resolve("src/main/scala")))
-      .getOrElse(fail("no README.md + src/main/scala above the working dir"))
+  import MainsSpec.root
 
   private val PackageDecl = """(?m)^\s*package\s+([\w.]+)""".r
   private val ObjectDecl =
@@ -72,4 +65,16 @@ class MainsSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"README Reproducers names without a main: ${missing.toSeq.sorted}")
   }
+}
+
+object MainsSpec {
+
+  /** The repo root: the nearest ancestor of the working directory that
+    * holds both README.md and src/main/scala. */
+  lazy val root: Path =
+    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .find(p => Files.isRegularFile(p.resolve("README.md")) &&
+        Files.isDirectory(p.resolve("src/main/scala")))
+      .getOrElse(sys.error("no README.md + src/main/scala above the working dir"))
 }

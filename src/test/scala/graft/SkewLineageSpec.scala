@@ -351,7 +351,7 @@ class SkewLineageSpec extends SparkSpec {
     }
   }
 
-  test("Caches LRU is coherent under concurrent track/touch at a tiny cap") {
+  test("Caches LRU is coherent under concurrent track/memo at a tiny cap") {
     import spark.implicits._
     import graft.operators.Caches
     Caches.release()
@@ -360,17 +360,20 @@ class SkewLineageSpec extends SparkSpec {
     try {
       // a small shared frame population hammered from two threads forces
       // the race the locked eviction protocol closes: victim selection,
-      // unpersist, and a concurrent re-track of the SAME frame must
-      // serialize, or an already-unpersisted victim gets resurrected
-      // into the map (tracked-but-unpersisted)
+      // unpersist, and a concurrent re-registration of the SAME frame
+      // must serialize, or an already-unpersisted victim gets resurrected
+      // into the map (registered-but-unpersisted). Memo calls run on
+      // frames of their own, so each frame sits under one key only.
       val frames = (1 to 6).map(i => Seq((i.toLong, s"v$i")).toDF("id", "v"))
+      val memoFrames = (1 to 6).map(i => Seq((i.toLong, s"m$i")).toDF("id", "v"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       val storms = (0 until 2).map { t =>
         pool.submit(new Runnable {
           def run(): Unit =
             (0 until 200).foreach { i =>
-              val df = frames((i * 2 + t) % frames.length)
-              if ((i + t) % 3 == 0) Caches.touch(df) else Caches.track(df)
+              val j = (i * 2 + t) % frames.length
+              if ((i + t) % 3 == 0) Caches.memo(("storm", j))(memoFrames(j))
+              else Caches.track(frames(j))
             }
         })
       }
