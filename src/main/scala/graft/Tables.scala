@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Readers
+
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md /
   * FIXTURES.md §B). Every `SparkEntry.queries` entry receives the sf
   * directory and resolves tables through here so the scan is a plain
-  * parquet `FileSourceScan` with pushdown/pruning intact.
+  * parquet `FileSourceScan` with pushdown/pruning intact. Reads go
+  * through [[graft.operators.Readers.parquet]], so a table's footer is
+  * inferred once per on-disk listing, not once per query.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,7 +41,7 @@ object Tables {
     */
   def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else Readers.parquet(spark, s"$dir/$name.parquet")
 
   /** `events.ts` has shipped in two physical layouts across testdata
     * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
@@ -56,7 +60,8 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    // set before the read: the schema memo fingerprints parquet confs
+    val raw = Readers.parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) read as epoch-ns long
         raw.withColumn("ts_ns", col("ts"))

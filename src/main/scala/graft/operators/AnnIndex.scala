@@ -84,7 +84,7 @@ object AnnIndex {
       write(_, corpus, nCells, iters, dim, seedMode, seedEvery))
   }
 
-  private[graft] val loadedIxs = new IndexMemo[Index]("meta", "centroids", "corpus")
+  private[graft] val loadedIxs = IndexMemo[Index]("meta", "centroids", "corpus")
 
   /** [[load]] through the serve-path [[IndexMemo]]: meta and centroids
     * are read once per on-disk version of the index.
@@ -254,7 +254,7 @@ object AnnIndex {
 
   // appends and compaction never change the meta (recipe + hasQ8 +
   // curve), so only sketch_meta/ is fingerprinted
-  private[graft] val sketchMetas = new IndexMemo[SketchMeta]("sketch_meta")
+  private[graft] val sketchMetas = IndexMemo[SketchMeta]("sketch_meta")
 
   /** [[loadSketchMeta]] through the serve-path [[IndexMemo]]. */
   def loadSketchMetaOnce(spark: SparkSession, path: String): SketchMeta =
@@ -522,8 +522,11 @@ object AnnIndex {
                    k: Int, m: Int, quantized: Boolean = false): DataFrame = {
     import graft.expressions.NativeFns.sketch_project
     require(m >= k, s"searchSketch: m=$m must be >= k=$k")
-    // loadSketchMetaOnce, not loadSketchMeta: the serve path pays zero
-    // driver jobs for an unchanged index (guide §5)
+    // loadSketchMetaOnce, not loadSketchMeta: the meta load pays zero
+    // driver jobs for an unchanged index, and Readers.parquet skips the
+    // footer inference of each table read below. What is left is the
+    // search itself: 5 jobs per collect on an unchanged index
+    // (AnnIndexSpec pins the budget)
     val meta = loadSketchMetaOnce(spark, path)
     require(!quantized || meta.hasQ8,
       s"sketch index at $path has no int8 sibling — rebuild with " +
@@ -537,8 +540,8 @@ object AnnIndex {
     // two parquet footer reads, no data scan. Fail loudly with the
     // repair path rather than silently under-serving.
     if (quantized) {
-      val nF = spark.read.parquet(s"$path/sketches").count()
-      val nQ8 = spark.read.parquet(s"$path/sketches_q8").count()
+      val nF = Readers.parquet(spark, s"$path/sketches").count()
+      val nQ8 = Readers.parquet(spark, s"$path/sketches_q8").count()
       require(nF == nQ8,
         s"sketch index at $path: int8 sibling is incomplete " +
         s"($nQ8 of $nF rows — a prior append died between the two " +
@@ -554,9 +557,9 @@ object AnnIndex {
     // quantized: pass 1 scans the int8 sibling — 1/4 the sketch bytes;
     // the per-vector scale cancels in cosine so a cast IS the dequant
     val skTable =
-      if (quantized) spark.read.parquet(s"$path/sketches_q8")
+      if (quantized) Readers.parquet(spark, s"$path/sketches_q8")
         .select(col("vec_id"), Similarity.dequantSketch(col("sk")).as("sk"))
-      else spark.read.parquet(s"$path/sketches")
+      else Readers.parquet(spark, s"$path/sketches")
     val cand = skTable
       .join(qs, col("query_id") =!= col("vec_id"))
       .withColumn("s", VecFns.cosine(col("q_sk"), col("sk")))
@@ -565,7 +568,7 @@ object AnnIndex {
       .select(col("query_id"), col("vec_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.join(spark.read.parquet(s"$path/vectors"), "vec_id")
+    cand.join(Readers.parquet(spark, s"$path/vectors"), "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos", round(VecFns.cosine(col("q_vec"), col("c_vec")), 6))
       .withColumn("rk", row_number().over(w))
@@ -647,25 +650,26 @@ object AnnIndex {
   def repairSketchOrphans(spark: SparkSession, path: String): Unit = {
     val meta = loadSketchMetaOnce(spark, path)
     val r = Similarity.sketchMatrix(meta.dim, meta.sketchDim, meta.seed)
+    def table(t: String) = Readers.parquet(spark, s"$path/$t")
     // q8-specific repair first: a prior append that died between the
     // float-sketch and q8 writes left q8 rows missing — invisible to
     // every quantized search. Repair derives from the float table
     // (cheap: sketch-sized, no vector re-read).
     if (meta.hasQ8) {
-      val q8Orphans = spark.read.parquet(s"$path/sketches").select("vec_id")
-        .join(spark.read.parquet(s"$path/sketches_q8").select("vec_id"),
+      val q8Orphans = table("sketches").select("vec_id")
+        .join(table("sketches_q8").select("vec_id"),
           Seq("vec_id"), "left_anti")
       if (!q8Orphans.isEmpty)
-        spark.read.parquet(s"$path/sketches").join(q8Orphans, Seq("vec_id"))
+        table("sketches").join(q8Orphans, Seq("vec_id"))
           .select(col("vec_id"), Similarity.quantizeSketch(col("sk")).as("sk"))
           .write.mode("append").parquet(s"$path/sketches_q8")
     }
-    val orphanIds = spark.read.parquet(s"$path/vectors").select("vec_id")
-      .join(spark.read.parquet(s"$path/sketches").select("vec_id"),
+    val orphanIds = table("vectors").select("vec_id")
+      .join(table("sketches").select("vec_id"),
         Seq("vec_id"), "left_anti")
     if (!orphanIds.isEmpty)
       appendSketches(spark, path, meta, r,
-        spark.read.parquet(s"$path/vectors").join(orphanIds, Seq("vec_id")))
+        table("vectors").join(orphanIds, Seq("vec_id")))
   }
 
   /** Assign `vecs` (id, vec) to their nearest existing centroids and

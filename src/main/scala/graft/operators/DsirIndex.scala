@@ -137,7 +137,7 @@ object DsirIndex {
        .select(col("id"), col("bucket").as("_b"), col("n").as("_n")),
      readMeta(spark, path))
 
-  private[graft] val loadedIxs = new IndexMemo[(DataFrame, Meta)]("meta", "features")
+  private[graft] val loadedIxs = IndexMemo[(DataFrame, Meta)]("meta", "features")
 
   /** [[load]] through the serve-path [[IndexMemo]] — the serving path
     * for repeated selections against one index.

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -35,6 +37,13 @@ object Readers {
     * warn-and-continue on unreadable files, `collectors/local_lake.py:
     * 60-82`) to `ignoreCorruptFiles`/`ignoreMissingFiles` — a bad file
     * skips, the scan survives.
+    *
+    * `path` is spelled as `binaryFile` and every `Compactor` manifest
+    * spell it (`file:/x/sp ace.json`), so it joins against them.
+    * `_metadata.file_path` is the URI-encoded form
+    * (`file:/x/sp%20ace.json`); it is decoded as a URI, not as a form:
+    * a URI keeps `+` literal, so it is escaped before `url_decode`,
+    * which would otherwise turn it into a space.
     */
   def wholeTextRecords(spark: SparkSession, root: String,
                        glob: Option[String] = None,
@@ -44,11 +53,70 @@ object Readers {
       .option("ignoreMissingFiles", tolerant.toString)
     glob.fold(base)(g => base.option("pathGlobFilter", g)).text(root)
       .select(
-        col("_metadata.file_path").as("path"),
+        url_decode(regexp_replace(col("_metadata.file_path"), "\\+", "%2B"))
+          .as("path"),
         col("_metadata.file_modification_time").as("mtime"),
         col("_metadata.file_size").as("size"),
         col("value").as("content"))
       .filter(length(col("content")) > 0)
+  }
+
+  /** A footer-inferred schema and the digest of the leaf-file listing
+    * it was inferred over.
+    */
+  private[graft] final case class Inferred(files: String, schema: StructType)
+
+  /** Footer-inferred parquet schemas per (session, path),
+    * fingerprinted on the session's parquet-affecting SQL confs; the
+    * listing is checked against each read's own ([[parquet]]).
+    */
+  private[graft] val schemas = new IndexMemo[String, Inferred]((spark, _) =>
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    })
+
+  /** Digest of the `(path, length, mtime)` leaf files `df`'s file index
+    * listed when the read was built: Spark's own listing (its
+    * hidden-file rule, its parallel listing above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * directories), so taking it lists nothing again.
+    */
+  private def leafDigest(df: DataFrame): String =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(HadoopFsRelation(ix: PartitioningAwareFileIndex, _, _, _, _, _)) =>
+        IndexMemo.digest(IndexMemo.listingLines(ix.allFiles()))
+      case other => throw new IllegalStateException(
+        s"parquet read resolved to $other, not a file index")
+    }
+
+  private def inferred(df: DataFrame): Inferred = Inferred(leafDigest(df), df.schema)
+
+  /** `spark.read.parquet(path)` for on-disk state that is read often
+    * and rewritten rarely (serve paths). Without a schema every such
+    * read runs one footer-inference job; here the inferred schema is
+    * memoized per parquet-affecting conf (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive`) together
+    * with the listing it was inferred over. A call reads with
+    * `.schema(memoized)`, which runs no job, and keeps that read when
+    * its own listing (path, length and mtime of each file) equals the
+    * stored one; otherwise it falls back to exactly the plain read's
+    * inference and stores the new schema. A hit lists the tree once,
+    * as the plain read does. `path` is plain (no glob).
+    *
+    * Not for write paths whose listing changes on every pass: there
+    * every call would miss and list twice.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val memo = schemas.getOrLoad(spark, path)(inferred(spark.read.parquet(path)))
+    val df = spark.read.schema(memo.schema).parquet(path)
+    if (leafDigest(df) == memo.files) df
+    else {
+      val plain = spark.read.parquet(path)
+      schemas.replace(spark, path, inferred(plain))
+      plain
+    }
   }
 
   /** Schema'd CSV lake read with native per-file header dedup. */

@@ -262,16 +262,41 @@ class AnnIndexSpec extends SparkSpec {
 
   test("appendSketchVectors: a steady-state append reads the unchanged meta from the memo") {
     val dir = Files.createTempDirectory("graft-sk-jobs").toString
-    AnnIndex.writeSketch(dir, emb.filter(col("vec_id") % 3 === 0),
+    AnnIndex.writeSketch(dir, emb.filter(col("vec_id") % 6 === 0),
       sketchDim = 16, dim = 64)
-    AnnIndex.appendSketchVectors(dir, emb.filter(col("vec_id") % 3 === 1))
+    AnnIndex.appendSketchVectors(dir, emb.filter(col("vec_id") % 6 === 1))
     // loadRaw: no load-time repartition, whose exchange would add a job
-    val delta = Tables.loadRaw(spark, sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding")).filter(col("vec_id") % 3 === 2)
-    // only the orphan check and the two appends run jobs; the meta,
-    // read twice (2 jobs per uncached read), is a memo hit
-    val (_, jobs) = countJobs(AnnIndex.appendSketchVectors(dir, delta))
-    assert(jobs <= 7, s"steady-state append ran $jobs jobs")
+    def delta(r: Int) = Tables.loadRaw(spark, sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") % 6 === r)
+    // a served index is searched between appends, and each search
+    // reads the current sketches/vectors schemas into the memo
+    AnnIndex.searchSketch(spark, dir, emb.filter(col("vec_id") < 2), k = 5, m = 20)
+      .collect()
+    // only the orphan check, the delta's footer read and the two
+    // appends run jobs; the meta (read twice, 2 jobs per uncached
+    // read) is a memo hit, and so are the orphan check's two schemas
+    val (_, jobs) = countJobs(AnnIndex.appendSketchVectors(dir, delta(2)))
+    assert(jobs <= 5, s"steady-state append ran $jobs jobs")
+    // back to back, the previous append moved both listings: the orphan
+    // check infers the two footers again
+    val (_, next) = countJobs(AnnIndex.appendSketchVectors(dir, delta(3)))
+    assert(next <= 7, s"back-to-back append ran $next jobs")
+  }
+
+  test("searchSketch job budget: an unchanged index pays no footer reads") {
+    val dir = Files.createTempDirectory("graft-sk-search-jobs").toString
+    AnnIndex.writeSketch(dir, emb, sketchDim = 16, dim = 64)
+    // a local query frame, as a serving caller passes: a query plan
+    // over the table would add its own scan and exchange jobs
+    val q = spark.createDataFrame(
+      java.util.Arrays.asList(emb.filter(col("vec_id") < 3).collect(): _*), emb.schema)
+    def search() = AnnIndex.searchSketch(spark, dir, q, k = 5, m = 20).collect()
+    val warm = search()
+    // the meta and the sketches/vectors schemas come from the memos;
+    // what is left is the search's own collect
+    val (again, jobs) = countJobs(search())
+    assert(again.toSeq == warm.toSeq)
+    assert(jobs <= 5, s"search on an unchanged index ran $jobs jobs")
   }
 
   test("IndexMemo is an access-ordered LRU bounded at 64 entries") {
@@ -280,7 +305,7 @@ class AnnIndexSpec extends SparkSpec {
       Files.createDirectory(d.resolve("meta"))
       d.toString
     }
-    val memo = new IndexMemo[Int]("meta")
+    val memo = IndexMemo[Int]("meta")
     var loads = 0
     def get(d: String): Int = memo.getOrLoad(spark, d) { loads += 1; loads }
     dirs.foreach(get)

@@ -38,6 +38,20 @@ class ReadersSpec extends SparkSpec {
     assert(ordered.head == """{"i":1}""" && ordered.last == """{"i":5}""")
   }
 
+  test("whole-text records spell each path as binaryFile does: space, plus and percent") {
+    val in = tmpDir("escaped_names")
+    val names = Seq("sp ace.json", "a+b.json", "100%.json")
+    names.foreach(n => Files.write(Paths.get(in.toString, n), n.getBytes("UTF-8")))
+    def paths(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.select("path").collect().map(_.getString(0))
+        .map(p => p.split('/').last -> p).toMap
+    val text = paths(Readers.wholeTextRecords(spark, in.toString))
+    val binary = paths(spark.read.format("binaryFile").load(in.toString))
+    assert(binary.keySet == names.toSet, s"binaryFile names: ${binary.keySet}")
+    names.foreach(n => assert(text.get(n) == binary.get(n),
+      s"$n: wholeTextRecords ${text.get(n)} vs binaryFile ${binary.get(n)}"))
+  }
+
   test("tolerant scan skips corrupt files, strict scan fails (O1)") {
     val in = tmpDir("corrupt_lake")
     Files.write(Paths.get(in.toString, "ok.txt"), "good".getBytes("UTF-8"))
