@@ -524,9 +524,10 @@ object AnnIndex {
     require(m >= k, s"searchSketch: m=$m must be >= k=$k")
     // loadSketchMetaOnce, not loadSketchMeta: the meta load pays zero
     // driver jobs for an unchanged index, and Readers.parquet skips the
-    // footer inference of each table read below. What is left is the
-    // search itself: 5 jobs per collect on an unchanged index
-    // (AnnIndexSpec pins the budget)
+    // footer inference of each table read below (appendSketchVectors
+    // keeps those schemas current through Readers.appendParquet). What
+    // is left is the search itself: 5 jobs per collect, on an unchanged
+    // index or the first search after an append (AnnIndexSpec pins both)
     val meta = loadSketchMetaOnce(spark, path)
     require(!quantized || meta.hasQ8,
       s"sketch index at $path has no int8 sibling — rebuild with " +
@@ -613,8 +614,7 @@ object AnnIndex {
     // append must be healed before this append lists the vectors dir.
     repairSketchOrphans(spark, path)
     val before = listing()
-    vecs.toDF("vec_id", "c_vec")
-      .write.mode("append").parquet(s"$path/vectors")
+    Readers.appendParquet(vecs.toDF("vec_id", "c_vec"), s"$path/vectors")
     val delta = (listing() -- before).toSeq.sorted
     if (delta.nonEmpty)
       appendSketches(spark, path, meta, r, spark.read.parquet(delta: _*))
@@ -629,10 +629,11 @@ object AnnIndex {
                              src: DataFrame): Unit = {
     import graft.expressions.NativeFns.sketch_project
     val sk = src.select(col("vec_id"), sketch_project(col("c_vec"), r).as("sk"))
-    sk.write.mode("append").parquet(s"$path/sketches")
+    Readers.appendParquet(sk, s"$path/sketches")
     if (meta.hasQ8)
-      sk.select(col("vec_id"), Similarity.quantizeSketch(col("sk")).as("sk"))
-        .write.mode("append").parquet(s"$path/sketches_q8")
+      Readers.appendParquet(
+        sk.select(col("vec_id"), Similarity.quantizeSketch(col("sk")).as("sk")),
+        s"$path/sketches_q8")
   }
 
   /** Heal a torn prior append: a crash between the two (or three)
@@ -660,9 +661,9 @@ object AnnIndex {
         .join(table("sketches_q8").select("vec_id"),
           Seq("vec_id"), "left_anti")
       if (!q8Orphans.isEmpty)
-        table("sketches").join(q8Orphans, Seq("vec_id"))
-          .select(col("vec_id"), Similarity.quantizeSketch(col("sk")).as("sk"))
-          .write.mode("append").parquet(s"$path/sketches_q8")
+        Readers.appendParquet(table("sketches").join(q8Orphans, Seq("vec_id"))
+          .select(col("vec_id"), Similarity.quantizeSketch(col("sk")).as("sk")),
+          s"$path/sketches_q8")
     }
     val orphanIds = table("vectors").select("vec_id")
       .join(table("sketches").select("vec_id"),

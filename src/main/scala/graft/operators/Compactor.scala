@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Small-file compaction as a Spark batch program.
   *
@@ -17,8 +20,21 @@ import org.apache.spark.sql.functions._
   * stronger than the reference's sidecar files).
   *
   * == Scale design ==
-  * A naive `Window.orderBy(...)` with no partition key collapses to a
-  * single partition — fine at 60k rows, fatal at 100 TB. Instead we do a
+  * A directory pass already holds its file listing on the driver: the
+  * `binaryFile` source's file index. For a listing of at most
+  * `SingleBucketFiles` (2^18) files — every scheduled pass of hundreds
+  * of files — the bundle plan is computed right there
+  * ([[planBundles]]): drop empty files, sort by (mtime, path in
+  * Spark's UTF-8 byte order), exclusive running sum. The write joins
+  * the content scan to the plan as a broadcast local relation, and the
+  * manifest is a local relation, so planning costs no Spark job; at a
+  * scheduled collector's scale driver round-trips are the whole cost.
+  * The constant bounds what the driver holds: at most 262,144 narrow
+  * (path, mtime, size) rows.
+  *
+  * A larger listing is planned distributed ([[withBundleId]]). A naive
+  * `Window.orderBy(...)` with no partition key collapses to a single
+  * partition — fine at 60k rows, fatal at 100 TB. Instead we do a
   * deterministic two-phase distributed prefix sum:
   *
   *  1. bucket rows by *range* of the primary order key, with boundaries
@@ -38,31 +54,23 @@ import org.apache.spark.sql.functions._
   * shared verbatim with [[Curation.packByBudget]] (stratum = constant
   * here).
   *
-  * Bucket count: the directory passes, whose rows are files, pick it
-  * from the file count the listing already holds (`listingBuckets`).
-  * A listing of at most `SingleBucketFiles` (2^18) files runs as ONE
-  * bucket, which needs none of phases 1-2: no quantile pass, narrow
-  * persist, totals aggregation or offsets checkpoint, each a driver
-  * round-trip — and at a scheduled collector's scale (hundreds of
-  * files per pass) round-trips are the whole cost. The constant bounds
-  * what that one task sorts: at most 262,144 narrow (path, mtime, size)
-  * rows. Larger listings keep the `spark.sql.shuffle.partitions`
-  * default, as [[withBundleId]] called directly does. Assignment does
-  * not depend on the bucket count.
+  * Bucket count: the full passes over a larger listing use the
+  * `spark.sql.shuffle.partitions` default, as [[withBundleId]] called
+  * directly does; the incremental pass over one runs a delta of at most
+  * 2^18 new files as ONE bucket, which needs none of phases 1-2.
+  * Assignment depends neither on the bucket count nor on where it is
+  * planned: the driver plan gives [[withBundleId]]'s ids (CompactorSpec
+  * checks both).
   */
 object Compactor {
 
   /** Columns appended by [[withBundleId]]. */
   val BundleCol = "bundle_id"
 
-  /** Largest listing the directory passes bundle as one prefix-sum
-    * bucket: the single phase-3 task sorts at most this many rows. */
+  /** Largest listing the directory passes plan on the driver (and the
+    * largest incremental delta a distributed plan runs as one
+    * prefix-sum bucket). */
   private val SingleBucketFiles: Long = 1L << 18
-
-  /** Bucket count for bundling `nFiles` listed files: 1 up to
-    * [[SingleBucketFiles]] files, else 0 (the shuffle-partitions default). */
-  private def listingBuckets(nFiles: Long): Int =
-    if (nFiles <= SingleBucketFiles) 1 else 0
 
   /** Assign `bundle_id = floor(exclusive_prefix_sum(size) / targetBytes)`
     * over the total order `(primaryOrder, tieBreakers...)`.
@@ -98,6 +106,85 @@ object Compactor {
       .drop("_prefix")
   }
 
+  /** A listed input file: `path` spelled as `binaryFile`'s `path`
+    * column, `mtime` in epoch milliseconds, `length` in bytes.
+    */
+  private[graft] final case class Listed(path: String, mtime: Long, length: Long)
+
+  /** A listed file and the bundle it is planned into. */
+  private[graft] final case class Planned(file: Listed, bundleId: Long)
+
+  /** Spark's string order (`UTF8String.compareTo`: UTF-8 bytes,
+    * unsigned). `String.compareTo` compares UTF-16 units, which ranks a
+    * supplementary-plane character below U+E000..U+FFFF; Spark ranks it
+    * above.
+    */
+  private val SparkStringOrder: Ordering[UTF8String] =
+    Ordering.fromLessThan(_.compareTo(_) < 0)
+
+  private def sparkMax(paths: Iterable[String]): Option[String] =
+    paths.maxByOption(UTF8String.fromString)(SparkStringOrder)
+
+  /** `df`'s file listing, as its file index holds it (no job). */
+  private def listed(files: DataFrame): Seq[Listed] =
+    Readers.leafFiles(files).map(s => Listed(s.getPath.toString, s.getModificationTime, s.getLen))
+
+  /** [[withBundleId]] over a listing, computed on the driver: the
+    * bundle of each non-empty file in the order (mtime, path), with
+    * `record_bytes` its length and ids counted from `firstBundle`. The
+    * same ids as the distributed plan: the same total order (path in
+    * Spark's byte order), the same exclusive running sum and the same
+    * `floor(prefix / target)` in double arithmetic.
+    */
+  private[graft] def planBundles(files: Seq[Listed], targetBytes: Long,
+                                 firstBundle: Long): Array[Planned] = {
+    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
+    val order = Ordering.by[(Listed, UTF8String), Long](_._1.mtime)
+      .orElseBy(_._2)(SparkStringOrder)
+    var prefix = 0L
+    files.iterator.filter(_.length > 0)
+      .map(f => (f, UTF8String.fromString(f.path))).toArray.sorted(order)
+      .map { case (f, _) =>
+        val id = math.floor(prefix.toDouble / targetBytes).toLong + firstBundle
+        prefix += f.length
+        Planned(f, id)
+      }
+  }
+
+  private def local(rows: Seq[Row], schema: StructType)
+                   (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** A driver plan as the `(path, bundle_id, record_bytes)` join side of
+    * the content scan: a broadcast local relation, so the content is
+    * shuffled once (into its bundles) at any plan size.
+    */
+  private def planFrame(plan: Array[Planned])
+                       (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    broadcast(local(plan.toSeq.map(p => Row(p.file.path, p.bundleId, p.file.length)),
+      StructType(Seq(StructField("path", StringType, nullable = false),
+        StructField(BundleCol, LongType), StructField("record_bytes", LongType)))))
+
+  /** [[manifest]]'s schema, nullability included. */
+  private val ManifestSchema = StructType(Seq(
+    StructField(BundleCol, LongType),
+    StructField("n_records", LongType, nullable = false),
+    StructField("total_bytes", LongType),
+    StructField("first_key", StringType),
+    StructField("last_key", StringType)))
+
+  /** [[manifest]] of a driver plan (key = path), as a local relation:
+    * collecting it runs no job, where a `groupBy`/`agg` over it would
+    * run a shuffle, so callers reduce its collected rows.
+    */
+  private[graft] def localManifest(plan: Array[Planned])
+                                  (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    local(plan.groupBy(_.bundleId).toSeq.sortBy(_._1).map { case (id, fs) =>
+      val keys = fs.map(p => UTF8String.fromString(p.file.path))
+      Row(id, fs.length.toLong, fs.map(_.file.length).sum,
+        keys.min(SparkStringOrder).toString, keys.max(SparkStringOrder).toString)
+    }, ManifestSchema)
+
   /** Bundle manifest — the queryable replacement for the reference's
     * `.lakeflush.flushed` sidecars (`utils/file/store.py:10-21`): one row
     * per bundle with record count, byte total and key span.
@@ -123,26 +210,47 @@ object Compactor {
   def compactDirectory(inputDir: String, outputDir: String, targetBytes: Long,
                        glob: Option[String] = None)
                       (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val reader = spark.read.format("binaryFile")
-    val files = glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
+    val files = binaryFiles(inputDir, glob)
     // Bundle assignment runs on the LISTING ONLY (path, mtime, size come
-    // from file status — the pruned binaryFile scan never opens a file),
-    // so the prefix-sum window shuffles a few dozen bytes per file, not
-    // payloads. Content is then read once and shuffled once (the
-    // per-bundle co-location below); payload bytes never pass through a
-    // sort. The tiny assignment table is cached (Caches.release() hook)
-    // because the join and the manifest both consume it. The bucket
-    // count comes from the file index's listing (no job).
-    val listing = files.select(col("path"), col("modificationTime"), col("length"))
-      .filter(col("length") > 0)
-    val assign = Caches.track(withBundleId(listing, col("modificationTime"),
-      Seq(col("path")), col("length"), targetBytes,
-      listingBuckets(files.inputFiles.length)))
-    val content = files.select(col("path"), col("content"))
+    // from file status, so no file is opened for it). Content is then
+    // read once and shuffled once (the per-bundle co-location in
+    // writeBundles); payload bytes never pass through a sort.
+    val listing = listed(files)
+    if (listing.length <= SingleBucketFiles) {
+      val plan = planBundles(listing, targetBytes, 0L)
+      writeBundles(files.select(col("path"), col("modificationTime"), col("content")),
+        planFrame(plan), SaveMode.Overwrite, outputDir)
+      localManifest(plan)
+    } else {
+      // The prefix-sum window shuffles a few dozen bytes per file, not
+      // payloads. The assignment is cached (Caches.release() hook)
+      // because the join and the manifest both consume it.
+      val assign = Caches.track(withBundleId(
+        files.select(col("path"), col("modificationTime"), col("length"))
+          .filter(col("length") > 0),
+        col("modificationTime"), Seq(col("path")), col("length"), targetBytes))
+      writeBundles(files.select(col("path"), col("content")), assign,
+        SaveMode.Overwrite, outputDir)
+      manifest(assign, col("path"))
+    }
+  }
+
+  private def binaryFiles(inputDir: String, glob: Option[String])
+                         (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val reader = spark.read.format("binaryFile")
+    glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
+  }
+
+  /** Write each `content` file (path, content, modificationTime on one
+    * side or the other) into its bundle directory per `assign`
+    * (path -> bundle_id, record_bytes).
+    */
+  private def writeBundles(content: DataFrame, assign: DataFrame, mode: SaveMode,
+                           outputDir: String): Unit =
     content
-      // no broadcast hint: AQE broadcasts the assignment while it fits
-      // (≲10M files) and falls back to a shuffle join beyond — both keep
-      // the single content shuffle.
+      // a distributed assignment has no broadcast hint: AQE broadcasts
+      // it while it fits (≲10M files) and falls back to a shuffle join
+      // beyond — both keep the single content shuffle
       .join(assign, "path")
       .select(col(BundleCol), col("path"), col("modificationTime"),
         col("record_bytes"), col("content"))
@@ -150,11 +258,9 @@ object Compactor {
       // (the reference's one-file-per-bundle contract) instead of
       // |tasks| x |bundles| commit-protocol fragments
       .repartition(col(BundleCol))
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(mode)
       .partitionBy(BundleCol)
       .parquet(outputDir)
-    manifest(assign, col("path"))
-  }
 
   /** Name of the advisory listing high-water-mark sidecar written next
     * to the bundled lake. Underscore-prefixed, so every parquet reader
@@ -381,14 +487,19 @@ object Compactor {
     * bundling per file. Returns the manifest of the NEW bundles only
     * (empty when nothing new).
     *
-    * Scale: the anti-join is listing-vs-path-column — both narrow; the
-    * processed-set read prunes to the `path` column only. The delta is
-    * evaluated once and pinned; its one `agg(count, max(path))` gives
-    * emptiness, the bucket count (a delta of at most 2^18 new files,
-    * e.g. a periodic pass of hundreds, is a single-bucket prefix sum
-    * with no quantile or offsets pass) and the watermark's max path.
-    * The next bundle id comes from the lake's `bundle_id=N` directory
-    * names, which the lake's file index has already listed — no scan.
+    * Scale: the processed-set read prunes to the `path` column only.
+    * For a listing of at most 2^18 files the delta lives on the driver:
+    * one narrow scan of the lake's paths, semi-joined to the broadcast
+    * listing, returns the listed paths already bundled, and the rest is
+    * planned on the driver (see the object doc). The content scan then
+    * filters on `modificationTime >= ` the delta's oldest mtime, which
+    * `binaryFile` applies before opening a file, so bundled files older
+    * than the delta are not read. A larger listing anti-joins it
+    * against the lake distributed, pins the delta once, and takes
+    * emptiness, the bucket count and the watermark's max path from one
+    * `agg(count, max(path))`. The next bundle id comes from the lake's
+    * `bundle_id=N` directory names, which the lake's file index has
+    * already listed — no scan.
     *
     * == High-water-mark fast path ==
     * On date-shaped inputs (every partition level a `k=v` directory
@@ -427,7 +538,7 @@ object Compactor {
     def markDepth: Option[Int] =
       if (watermark == WatermarkOff) None
       else eligibleDepth(inputDir, gate)
-    def installMark(maxPath: Option[String]): Unit =
+    def installMark(maxPath: => Option[String]): Unit =
       markDepth.foreach { d =>
         maxPath.flatMap(relPartitionOf(_, d)).foreach(writeWatermark(outputDir, _))
       }
@@ -439,10 +550,10 @@ object Compactor {
     prev match {
       case None =>
         val mf = compactDirectory(inputDir, outputDir, targetBytes, glob)
-        // manifest last_key is max(path) per bundle — the global max
-        // bundled path falls out of the tiny manifest frame
-        installMark(Option(
-          mf.agg(max(col("last_key"))).collect()(0).getString(0)))
+        // manifest last_key is max(path) per bundle: the global max
+        // bundled path falls out of the manifest's rows, which a driver
+        // plan's local manifest returns without a job
+        installMark(sparkMax(mf.collect().map(_.getAs[String]("last_key"))))
         mf
       case Some(p) =>
         val reader = spark.read.format("binaryFile")
@@ -460,8 +571,7 @@ object Compactor {
             val r = glob.fold(reader)(g => reader.option("pathGlobFilter", g))
               .option("basePath", base)
             r.load(c.map(d => s"$base/$d"): _*)
-          case None =>
-            glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
+          case None => binaryFiles(inputDir, glob)
         }
         // processed-set pruned to the candidate roots on the fast path:
         // paths are URIs, so root membership is a substring test (codegen
@@ -477,58 +587,103 @@ object Compactor {
         val nextBundle = p.inputFiles.iterator
           .flatMap(f => BundleDir.findFirstMatchIn(f).map(_.group(1).toLong))
           .foldLeft(-1L)(math.max) + 1
-        // The new-file delta, evaluated ONCE: eager localCheckpoint of its
-        // narrow (path, mtime, size) rows. Its lineage reads outputDir
-        // through the anti-join, so the append below would invalidate a
-        // mere cache and a recompute would see its own output —
-        // anti-joining away every new file. The stats, the assignment
-        // and the empty manifest all read the pinned PRE-write delta.
-        val delta = files
-          .select(col("path"), col("modificationTime"), col("length"))
-          .filter(col("length") > 0)
-          .join(done, Seq("path"), "left_anti")
-          .localCheckpoint()
-        val stats = delta.agg(count(lit(1)), max(col("path"))).collect()(0)
-        val nNew = stats.getLong(0)
-        if (nNew == 0) {
-          // nothing new. Install the watermark if the layout supports
-          // one and none exists yet (one narrow max(path) scan of the
-          // lake buys every subsequent pass the pruned listing).
-          if (mark.isEmpty && watermark != WatermarkOff)
-            installMark(Option(
-              p.agg(max(col("path"))).collect()(0).getString(0)))
-          // empty manifest with the standard schema
-          manifest(delta
-            .withColumn(BundleCol, lit(0L))
-            .withColumn("record_bytes", lit(0L)), col("path"))
-        } else {
-          // The assignment is pinned too: the write and the returned
-          // manifest both consume it, and the manifest is read after the
-          // append. A localCheckpoint, not a Caches entry, which would
-          // stay referenced until Caches.release() — one per pass.
-          val assign = withBundleId(delta, col("modificationTime"),
-            Seq(col("path")), col("length"), targetBytes, listingBuckets(nNew))
-            .withColumn(BundleCol, col(BundleCol) + nextBundle)
-            .localCheckpoint()
-          files.select(col("path"), col("content"))
-            .join(assign, "path")
-            .select(col(BundleCol), col("path"), col("modificationTime"),
-              col("record_bytes"), col("content"))
-            .repartition(col(BundleCol))
-            .write.mode(SaveMode.Append)
-            .partitionBy(BundleCol)
-            .parquet(outputDir)
-          // advance the watermark to the newest dir this pass bundled
-          // from (the delta's max path; never regresses below the
-          // existing mark — a full-depth new mark always compares past
-          // the shorter prefix it refines)
-          markDepth.foreach { d =>
-            val newMark = (mark.toSeq ++
-              Option(stats.getString(1)).flatMap(relPartitionOf(_, d))).maxOption
-            newMark.foreach(writeWatermark(outputDir, _))
-          }
-          manifest(assign, col("path"))
+        val listing = listed(files)
+        val appended =
+          if (listing.length <= SingleBucketFiles)
+            appendPlanned(files, listing, done, outputDir, targetBytes, nextBundle)
+          else appendDistributed(files, done, outputDir, targetBytes, nextBundle)
+        appended match {
+          case None =>
+            // nothing new. Install the watermark if the layout supports
+            // one and none exists yet (one narrow max(path) scan of the
+            // lake buys every subsequent pass the pruned listing).
+            if (mark.isEmpty && watermark != WatermarkOff)
+              installMark(Option(
+                p.agg(max(col("path"))).collect()(0).getString(0)))
+            localManifest(Array.empty)
+          case Some((mf, maxPath)) =>
+            // advance the watermark to the newest dir this pass bundled
+            // from (the delta's max path; never regresses below the
+            // existing mark — a full-depth new mark always compares past
+            // the shorter prefix it refines)
+            markDepth.foreach { d =>
+              (mark.toSeq ++ relPartitionOf(maxPath, d)).maxOption
+                .foreach(writeWatermark(outputDir, _))
+            }
+            mf
         }
+    }
+  }
+
+  /** The incremental append of a listing of at most
+    * [[SingleBucketFiles]] files, planned on the driver. Returns the new
+    * bundles' manifest and the delta's max path (Spark's string order),
+    * or None when nothing is new.
+    */
+  private def appendPlanned(files: DataFrame, listing: Seq[Listed], done: DataFrame,
+                            outputDir: String, targetBytes: Long, nextBundle: Long)
+                           (implicit spark: org.apache.spark.sql.SparkSession)
+      : Option[(DataFrame, String)] = {
+    val nonEmpty = listing.filter(_.length > 0)
+    // the delta: listed files whose path the lake does not hold. The
+    // lake's path scan is semi-joined to the broadcast listing, so at
+    // most the listing comes back; on the driver, the append below
+    // cannot change the delta (a lazy plan would re-read the lake).
+    val seen = done
+      .join(broadcast(local(nonEmpty.map(f => Row(f.path)),
+        StructType(Seq(StructField("path", StringType, nullable = false))))),
+        Seq("path"), "left_semi")
+      .collect().iterator.map(_.getString(0)).toSet
+    val fresh = nonEmpty.filterNot(f => seen(f.path))
+    if (fresh.isEmpty) None
+    else {
+      val plan = planBundles(fresh, targetBytes, nextBundle)
+      // binaryFile tests the pushed mtime filter on a file's status
+      // before opening it, so bundled files older than the delta are
+      // not read; the join decides which rows are kept
+      val oldest = new java.sql.Timestamp(fresh.iterator.map(_.mtime).min)
+      writeBundles(files.filter(col("modificationTime") >= lit(oldest))
+          .select(col("path"), col("modificationTime"), col("content")),
+        planFrame(plan), SaveMode.Append, outputDir)
+      Some((localManifest(plan), sparkMax(fresh.map(_.path)).get))
+    }
+  }
+
+  /** The incremental append of a listing above [[SingleBucketFiles]]
+    * files, planned distributed; same result as [[appendPlanned]].
+    */
+  private def appendDistributed(files: DataFrame, done: DataFrame, outputDir: String,
+                                targetBytes: Long, nextBundle: Long)
+                               (implicit spark: org.apache.spark.sql.SparkSession)
+      : Option[(DataFrame, String)] = {
+    // The new-file delta, evaluated ONCE: eager localCheckpoint of its
+    // narrow (path, mtime, size) rows. Its lineage reads outputDir
+    // through the anti-join, so the append below would invalidate a
+    // mere cache and a recompute would see its own output —
+    // anti-joining away every new file. The stats, the assignment
+    // and the manifest all read the pinned PRE-write delta.
+    val delta = files
+      .select(col("path"), col("modificationTime"), col("length"))
+      .filter(col("length") > 0)
+      .join(done, Seq("path"), "left_anti")
+      .localCheckpoint()
+    val stats = delta.agg(count(lit(1)), max(col("path"))).collect()(0)
+    val nNew = stats.getLong(0)
+    if (nNew == 0) None
+    else {
+      // The assignment is pinned too: the write and the returned
+      // manifest both consume it, and the manifest is read after the
+      // append. A localCheckpoint, not a Caches entry, which would
+      // stay referenced until Caches.release() — one per pass. A delta
+      // of at most 2^18 files is one prefix-sum bucket.
+      val assign = withBundleId(delta, col("modificationTime"),
+        Seq(col("path")), col("length"), targetBytes,
+        if (nNew <= SingleBucketFiles) 1 else 0)
+        .withColumn(BundleCol, col(BundleCol) + nextBundle)
+        .localCheckpoint()
+      writeBundles(files.select(col("path"), col("content")), assign,
+        SaveMode.Append, outputDir)
+      Some((manifest(assign, col("path")), stats.getString(1)))
     }
   }
 
@@ -566,9 +721,7 @@ object Compactor {
                     glob: Option[String] = None,
                     targetCompressed: Boolean = false)
                    (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val reader = spark.read.format("binaryFile")
-    val files = glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
-      .filter(col("length") > 0)
+    val files = binaryFiles(inputDir, glob).filter(col("length") > 0)
     val effectiveTarget =
       if (!targetCompressed || codec.forall(_ == "none")) targetBytes
       else {
@@ -589,19 +742,27 @@ object Compactor {
           }
         math.max(1L, math.round(targetBytes / ratio))
       }
-    // same listing-only assignment as compactDirectory: the window never
-    // sees payload bytes
-    val listing = files.select(col("path"), col("modificationTime"), col("length"))
-    val assign = Caches.track(withBundleId(listing, col("modificationTime"),
-      Seq(col("path")), col("length"), effectiveTarget,
-      listingBuckets(files.inputFiles.length)))
-    val writer = files.select(col("path"), col("content"))
-      .join(assign, "path")
-      .select(col(BundleCol), col("content").cast("string").as("value"))
-      .repartition(col(BundleCol)) // one text file per bundle
-      .write.mode(SaveMode.Overwrite).partitionBy(BundleCol)
-    codec.fold(writer)(c => writer.option("compression", c)).text(outputDir)
-    manifest(assign, col("path"))
+    // same listing-only assignment as compactDirectory
+    def write(assign: DataFrame): Unit = {
+      val writer = files.select(col("path"), col("content"))
+        .join(assign, "path")
+        .select(col(BundleCol), col("content").cast("string").as("value"))
+        .repartition(col(BundleCol)) // one text file per bundle
+        .write.mode(SaveMode.Overwrite).partitionBy(BundleCol)
+      codec.fold(writer)(c => writer.option("compression", c)).text(outputDir)
+    }
+    val listing = listed(files)
+    if (listing.length <= SingleBucketFiles) {
+      val plan = planBundles(listing, effectiveTarget, 0L)
+      write(planFrame(plan))
+      localManifest(plan)
+    } else {
+      val assign = Caches.track(withBundleId(
+        files.select(col("path"), col("modificationTime"), col("length")),
+        col("modificationTime"), Seq(col("path")), col("length"), effectiveTarget))
+      write(assign)
+      manifest(assign, col("path"))
+    }
   }
 
   /** Parquet-lake OPTIMIZE — the standard lake-maintenance pass every

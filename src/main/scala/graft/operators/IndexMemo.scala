@@ -36,7 +36,9 @@ import org.apache.spark.sql.SparkSession
   *    Index writers also call
   *    [[invalidate]], which covers a rewrite landing within one
   *    fs-mtime granule; the schema and manifest memos rely on the
-  *    listing alone, since every Spark write lands new part-file names.
+  *    listing alone, since every Spark write lands new part-file names
+  *    ([[Readers.appendParquet]] re-stores the writing session's schema
+  *    entry under its new listing, so an append costs no inference).
   *  - One entry per (session, key): a rolled fingerprint REPLACES the
   *    key's entry, so N rewrites of a long-served index leave one live
   *    entry, not N+1. The key is a tuple, so the session compares by
@@ -79,6 +81,15 @@ private[graft] final class IndexMemo[K, V](fingerprint: (SparkSession, K) => Any
         else { entries.put(k, Entry(fp, v)); v }
       }
     }
+  }
+
+  /** The value stored for (`spark`, `key`) under the current
+    * fingerprint, if any; loads nothing.
+    */
+  def get(spark: SparkSession, key: K): Option[V] = {
+    val fp = fingerprint(spark, key)
+    Option(entries.synchronized(entries.get((spark, key))))
+      .filter(_.fingerprint == fp).map(_.value)
   }
 
   /** Store `value` for (`spark`, `key`) under the current fingerprint,

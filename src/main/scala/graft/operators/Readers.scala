@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.hadoop.fs.FileStatus
 
 /** Format-aware lake ingestion (reference S3/S4/W4 semantics,
   * Spark-first).
@@ -77,19 +78,24 @@ object Readers {
         k == "spark.sql.caseSensitive"
     })
 
-  /** Digest of the `(path, length, mtime)` leaf files `df`'s file index
-    * listed when the read was built: Spark's own listing (its
-    * hidden-file rule, its parallel listing above
+  /** The leaf files `df`'s file index listed when the read was built:
+    * Spark's own listing (its hidden-file rule, `pathGlobFilter`, its
+    * parallel listing above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`
-    * directories), so taking it lists nothing again.
+    * directories), so taking it lists nothing again. A status's path
+    * spells the file as `binaryFile`'s `path` column does.
     */
-  private def leafDigest(df: DataFrame): String =
+  private[graft] def leafFiles(df: DataFrame): Seq[FileStatus] =
     df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
       case Some(HadoopFsRelation(ix: PartitioningAwareFileIndex, _, _, _, _, _)) =>
-        IndexMemo.digest(IndexMemo.listingLines(ix.allFiles()))
+        ix.allFiles()
       case other => throw new IllegalStateException(
-        s"parquet read resolved to $other, not a file index")
+        s"file read resolved to $other, not a file index")
     }
+
+  /** Digest of the `(path, length, mtime)` [[leafFiles]] of `df`. */
+  private def leafDigest(df: DataFrame): String =
+    IndexMemo.digest(IndexMemo.listingLines(leafFiles(df)))
 
   private def inferred(df: DataFrame): Inferred = Inferred(leafDigest(df), df.schema)
 
@@ -117,6 +123,39 @@ object Readers {
       schemas.replace(spark, path, inferred(plain))
       plain
     }
+  }
+
+  /** `df.write.mode("append").parquet(path)`, keeping this session's
+    * [[schemas]] entry for `path` current, so the next [[parquet]] read
+    * of `path` runs no footer inference. When the written schema equals
+    * the memoized one up to nullability (Spark writes every parquet
+    * column nullable) and the entry was current before the append (its
+    * listing was the one on disk), the entry keeps its schema under the
+    * new listing; otherwise the entry is dropped and the next read
+    * infers. Single-writer: a file another writer lands during the
+    * append would be covered by the kept schema.
+    */
+  def appendParquet(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    def listing(schema: StructType) = leafDigest(spark.read.schema(schema).parquet(path))
+    val memo = schemas.get(spark, path)
+    val current = memo.filter(m => listing(m.schema) == m.files)
+    df.write.mode("append").parquet(path)
+    current match {
+      case Some(m) if nullable(m.schema) == nullable(df.schema) =>
+        schemas.replace(spark, path, Inferred(listing(m.schema), m.schema))
+      case _ => if (memo.nonEmpty) schemas.invalidate(path)
+    }
+  }
+
+  /** `dt` with every field, element and value nullable. */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Schema'd CSV lake read with native per-file header dedup. */

@@ -212,13 +212,12 @@ class ApiSpec extends SparkSpec {
     assert(spark.read.parquet(out.toString).count() == seq)
   }
 
-  test("incremental pass job budget: one steady-state date=/hour= fold runs <= 16 jobs") {
-    implicit val s = spark
-    import graft.operators.Compactor
-    val in = tmpDir("budget_in"); val out = tmpDir("budget_out")
+  /** `n` small json files per hour under `root/date=2026-01-01/hour=HH`,
+    * numbered on from `seq`, with increasing mtimes. */
+  private class HourLake(root: java.io.File) {
     var seq = 0
     def addHour(hour: Int, n: Int): Unit = {
-      val d = Paths.get(in.toString, "date=2026-01-01", f"hour=$hour%02d")
+      val d = Paths.get(root.toString, "date=2026-01-01", f"hour=$hour%02d")
       Files.createDirectories(d)
       (1 to n).foreach { _ =>
         seq += 1
@@ -227,29 +226,72 @@ class ApiSpec extends SparkSpec {
         p.toFile.setLastModified(1700000000000L + seq * 1000L)
       }
     }
+  }
+
+  test("incremental pass job budget: one steady-state date=/hour= fold runs <= 6 jobs") {
+    implicit val s = spark
+    import graft.operators.Compactor
+    val in = tmpDir("budget_in"); val out = tmpDir("budget_out")
+    val lake = new HourLake(in)
     def pass(): Array[org.apache.spark.sql.Row] =
       Compactor.compactDirectoryIncremental(in.toString, out.toString, 1024L)
         .collect()
-    (0 until 3).foreach(addHour(_, 20))
+    (0 until 3).foreach(lake.addHour(_, 20))
     pass() // the initial full pass installs the watermark
-    addHour(3, 20)
+    lake.addHour(3, 20)
     pass() // one warm incremental fold: steady state from here on
-    addHour(4, 50)
+    lake.addHour(4, 50)
     val (mf, jobs) = countJobs(pass())
     assert(mf.map(_.getAs[Long]("n_records")).sum == 50)
     assert(spark.read.parquet(out.toString).count() == 130)
-    // Observed composition (AQE on, the suite's session) = 12 jobs:
-    // 1 parquet schema read of the lake, 1 lake-path scan for the
-    // anti-join's broadcast, 1 pinned-delta localCheckpoint, 2 for its
-    // count/max(path) stats (shuffle map + result), 2 for the pinned
-    // single-bucket assignment (window shuffle + checkpoint), 3 for the
-    // append (assignment broadcast, content scan into the bundle
-    // repartition, write) and 2 for the manifest collect. The parent
-    // shape ran 23: a three-phase prefix sum over 4 buckets
-    // (approxQuantile on a persisted projection, offsets checkpoint),
-    // the delta evaluated four times, a max(bundle_id) lake scan and a
-    // max(path) re-aggregation for the watermark.
-    assert(jobs <= 16, s"too many driver round-trips: $jobs jobs")
+    // Observed composition (AQE on, the suite's session) = 6 jobs: 1
+    // parquet schema read of the lake, 2 for the delta (the listing's
+    // broadcast and the lake-path scan semi-joined to it, collected),
+    // 3 for the append (plan broadcast, content scan into the bundle
+    // repartition, write). The plan and the manifest are driver rows:
+    // the manifest collect runs no job.
+    assert(jobs <= 6, s"too many driver round-trips: $jobs jobs")
+  }
+
+  test("incremental pass job budget: a fold with nothing new runs <= 3 jobs") {
+    implicit val s = spark
+    import graft.operators.Compactor
+    val in = tmpDir("noop_in"); val out = tmpDir("noop_out")
+    val lake = new HourLake(in)
+    def pass(): Array[org.apache.spark.sql.Row] =
+      Compactor.compactDirectoryIncremental(in.toString, out.toString, 1024L)
+        .collect()
+    (0 until 3).foreach(lake.addHour(_, 20))
+    pass()
+    lake.addHour(3, 20)
+    pass()
+    // the lake's schema read and the delta's two jobs; the empty
+    // manifest is a local relation
+    val (mf, jobs) = countJobs(pass())
+    assert(mf.isEmpty)
+    assert(spark.read.parquet(out.toString).count() == 80)
+    assert(jobs <= 3, s"no-op fold ran $jobs jobs")
+  }
+
+  test("full pass job budget: a warm compactDirectory and a compactToText run <= 3 jobs each") {
+    implicit val s = spark
+    import graft.operators.Compactor
+    val in = tmpDir("full_budget_in")
+    val lake = new HourLake(in)
+    (0 until 3).foreach(lake.addHour(_, 40))
+    def full(): Array[org.apache.spark.sql.Row] =
+      Compactor.compactDirectory(in.toString, tmpDir("full_budget_out").toString, 1024L)
+        .collect()
+    full()
+    // plan broadcast, content scan into the bundle repartition, write;
+    // the manifest is a local relation
+    val (mf, jobs) = countJobs(full())
+    assert(mf.map(_.getAs[Long]("n_records")).sum == 120)
+    assert(jobs <= 3, s"warm compactDirectory ran $jobs jobs")
+    val (text, textJobs) = countJobs(Compactor.compactToText(in.toString,
+      tmpDir("full_budget_txt").toString, 1024L).collect())
+    assert(text.map(_.getAs[Long]("n_records")).sum == 120)
+    assert(textJobs <= 3, s"compactToText ran $textJobs jobs")
   }
 
   test("LakeFlusher lifecycle: start/drain/stop, restart ships nothing twice") {

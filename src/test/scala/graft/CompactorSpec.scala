@@ -118,4 +118,48 @@ class CompactorSpec extends SparkSpec {
     assert(parquetKeys.exists(_._2.endsWith("sp ace.json")), parquetKeys)
     assert(textKeys == parquetKeys)
   }
+
+  test("driver bundle plan equals withBundleId at 1 and 7 buckets, manifest schema included") {
+    implicit val s = spark
+    import s.implicits._
+    import Compactor.Listed
+    // UTF-16 and UTF-8 order disagree between a supplementary-plane
+    // character (a surrogate pair, 0xD834..) and one at or above U+E000
+    val stems = Seq("a", "b", "\u00e9", "e\u0301", "\uD834\uDD1E", "\uE000", "\uFF21", "z")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("modificationTime",
+        org.apache.spark.sql.types.TimestampType),
+      org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType)))
+    (1 to 3).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // tied mtimes (5 distinct values over 60 files) and a quarter of
+      // the files empty
+      val listing = (0 until 60).map { i =>
+        Listed(s"file:/lake/d${rnd.nextInt(3)}/${stems(rnd.nextInt(stems.size))}$i.json",
+          1700000000000L + rnd.nextInt(5) * 1000L,
+          if (rnd.nextInt(4) == 0) 0L else 1L + rnd.nextInt(300))
+      }
+      val df = spark.createDataFrame(java.util.Arrays.asList(listing.map(f =>
+        org.apache.spark.sql.Row(f.path, new java.sql.Timestamp(f.mtime), f.length)): _*), schema)
+        .filter($"length" > 0)
+      val total = listing.map(_.length).sum
+      Seq(1L, total / 5, total + 1).foreach { target =>
+        val plan = Compactor.planBundles(listing, target, 0L)
+        val got = plan.map(p => (p.file.path, p.bundleId, p.file.length)).toSet
+        Seq(1, 7).foreach { buckets =>
+          val dist = Compactor.withBundleId(df, $"modificationTime", Seq($"path"),
+            $"length", target, buckets)
+          val want = dist.select($"path", col(Compactor.BundleCol), $"record_bytes")
+            .as[(String, Long, Long)].collect().toSet
+          assert(got == want, s"seed $seed, target $target, $buckets buckets")
+          val local = Compactor.localManifest(plan)
+          val distManifest = Compactor.manifest(dist, $"path")
+          assert(local.schema == distManifest.schema)
+          assert(local.collect().toSet == distManifest.collect().toSet,
+            s"manifest: seed $seed, target $target, $buckets buckets")
+        }
+      }
+    }
+  }
 }

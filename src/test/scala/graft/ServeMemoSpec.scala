@@ -164,4 +164,33 @@ class ServeMemoSpec extends SparkSpec {
     assert(hit.inputFiles.length < spark.read.parquet(dir).inputFiles.length,
       "the lookup must prune through the rewritten manifest")
   }
+
+  test("appendParquet keeps the schema entry across a same-schema append, drops it on a new schema or an out-of-band file") {
+    implicit val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-serve-append").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
+    Readers.parquet(spark, dir).collect()
+    // the same columns (nullability aside): the entry is kept under the
+    // new listing, so the next read infers nothing
+    Readers.appendParquet(Seq((3L, "c")).toDF("id", "v"), dir)
+    assert(Readers.schemas.liveCount(dir) == 1)
+    val (same, sameJobs) = countJobs(Readers.parquet(spark, dir).schema)
+    assert(same.fieldNames.toSeq == Seq("id", "v"))
+    assert(sameJobs == 0, s"read after a same-schema append ran $sameJobs jobs")
+    // a file landed out of band since the entry was stored: the entry
+    // no longer stands for the files on disk, so the append drops it
+    Seq((5L, "e", 2.5)).toDF("id", "v", "x").write.mode("append").parquet(dir)
+    Readers.appendParquet(Seq((6L, "f")).toDF("id", "v"), dir)
+    assert(Readers.schemas.liveCount(dir) == 0)
+    assert(Readers.parquet(spark, dir).schema == spark.read.parquet(dir).schema)
+    // an added column: the entry is dropped, and the next read infers
+    // again, as the plain read does
+    Readers.appendParquet(Seq((4L, "d", 1.5)).toDF("id", "v", "w"), dir)
+    assert(Readers.schemas.liveCount(dir) == 0)
+    val (grown, grownJobs) = countJobs(Readers.parquet(spark, dir))
+    assert(grownJobs >= 1, "the read after a new-schema append must infer")
+    assert(grown.schema == spark.read.parquet(dir).schema)
+    assert(grown.count() == 6)
+  }
 }
