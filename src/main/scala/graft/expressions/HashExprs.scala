@@ -744,29 +744,13 @@ case class CosineSim(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    // trailing elements of the longer array still count toward its norm
-    // (zip_with pads with null -> declarative dot ignores them, but the
-    // declarative norms run over FULL arrays; replicate exactly)
-    var j = n
-    while (j < a.numElements()) { val x = a.getFloat(j).toDouble; na += x * x; j += 1 }
-    j = n
-    while (j < b.numElements()) { val y = b.getFloat(j).toDouble; nb += y * y; j += 1 }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    CosineSim.fold(a.toFloatArray(), 0, a.numElements(), b.toFloatArray(), 0, b.numElements())
   }
   /** True inlined codegen (not the delegate): the kNN families score
     * |corpus| x nprobe rows through this kernel, so the per-row virtual
     * call + boxed Double of the delegate path are worth eliminating.
-    * The generated loop is operation-for-operation the interpreted fold
-    * above (same fold order, same trailing-norm handling) — parity is
+    * The generated loop is operation-for-operation [[CosineSim.fold]]
+    * (same fold order, same trailing-norm handling) — parity is
     * pinned CODEGEN_ONLY in NativeExprParitySpec.
     */
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -796,6 +780,35 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
   override def prettyName: String = "cosine_sim"
+}
+
+object CosineSim {
+  /** The cosine of `a(aOff until aOff + aLen)` and
+    * `b(bOff until bOff + bLen)`: each element widened to double, dot
+    * and norms folded strictly left to right over the common prefix,
+    * then the trailing elements of the longer side into its norm (the
+    * declarative norms run over FULL arrays, while `zip_with` pads the
+    * dot with nulls that it ignores). The interpreted kernel, and the
+    * driver-resident sketch search's ([[graft.operators.AnnIndex]]), so
+    * both score bit-identically with the generated loop.
+    */
+  def fold(a: Array[Float], aOff: Int, aLen: Int,
+           b: Array[Float], bOff: Int, bLen: Int): Double = {
+    val n = math.min(aLen, bLen)
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(aOff + i).toDouble
+      val y = b(bOff + i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    var j = n
+    while (j < aLen) { val x = a(aOff + j).toDouble; na += x * x; j += 1 }
+    j = n
+    while (j < bLen) { val y = b(bOff + j).toDouble; nb += y * y; j += 1 }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }
 
 /** `dot_product(a, b)`: the dot-accumulation half of [[CosineSim]],
@@ -1219,25 +1232,38 @@ case class SketchProject(child: Expression, matrix: Array[Array[Float]])
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
+    new GenericArrayData(SketchProject.project(arr.toFloatArray(), 0, arr.numElements(), matrix))
+  }
+  override protected def withNewChildInternal(c: Expression): SketchProject =
+    copy(child = c)
+  override def prettyName: String = "sketch_project"
+}
+
+object SketchProject {
+  /** The sketch of `v(off until off + len)`: element j is the dot
+    * product with `matrix(j)` over their common prefix, accumulated in
+    * double in ascending index order, then cast to float. The kernel
+    * of the expression and of the driver-resident sketch search
+    * ([[graft.operators.AnnIndex]]).
+    */
+  def project(v: Array[Float], off: Int, len: Int,
+              matrix: Array[Array[Float]]): Array[Float] = {
     val out = new Array[Float](matrix.length)
     var j = 0
     while (j < matrix.length) {
       val row = matrix(j)
-      val n = math.min(row.length, arr.numElements())
+      val n = math.min(row.length, len)
       var dot = 0.0
       var i = 0
       while (i < n) {
-        dot += arr.getFloat(i).toDouble * row(i).toDouble
+        dot += v(off + i).toDouble * row(i).toDouble
         i += 1
       }
       out(j) = dot.toFloat
       j += 1
     }
-    new GenericArrayData(out)
+    out
   }
-  override protected def withNewChildInternal(c: Expression): SketchProject =
-    copy(child = c)
-  override def prettyName: String = "sketch_project"
 }
 
 object NativeFns {

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.expressions.{CosineSim, SketchProject}
 import graft.functions.VecFns
 
 /** Persisted IVF index for the similarity family — the production form
@@ -515,34 +520,50 @@ object AnnIndex {
   /** Sketch-prefilter + exact re-rank against the persisted index —
     * row-identical to [[Similarity.knnSketchRerank]] with the index's
     * (sketchDim, dim, seed) (same ranking keys, same 6-dp rounding,
-    * same vec_id tie-breaks; AnnIndexSpec pins parity). Pass 1 scans
-    * only `sketches`; pass 2 joins the m survivors against `vectors`.
+    * same vec_id tie-breaks; AnnIndexSpec pins parity). Pass 1 scores
+    * only `sketches`; pass 2 re-ranks the m survivors' `vectors`.
+    *
+    * An index whose `vectors`, `sketches` and `sketches_q8` tables
+    * together take at most `LocalIndexBytes` on disk is searched on the
+    * driver, over a resident copy of those tables ([[residents]]): the
+    * query frame is collected, both passes run with the expressions'
+    * own kernels ([[graft.expressions.CosineSim.fold]],
+    * [[graft.expressions.SketchProject.project]]), Spark's `Round` and
+    * Spark's double ordering, and the result is a local relation with
+    * the distributed plan's schema, so its `collect()` runs no job. A
+    * larger index, or an index or query frame holding a null id,
+    * vector or element, runs the distributed plan. Either way the
+    * result is the index as listed at call time.
     */
   def searchSketch(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int, m: Int, quantized: Boolean = false): DataFrame = {
-    import graft.expressions.NativeFns.sketch_project
     require(m >= k, s"searchSketch: m=$m must be >= k=$k")
-    // loadSketchMetaOnce, not loadSketchMeta: the meta load pays zero
-    // driver jobs for an unchanged index, and Readers.parquet skips the
-    // footer inference of each table read below (appendSketchVectors
-    // keeps those schemas current through Readers.appendParquet). What
-    // is left is the search itself: 5 jobs per collect, on an unchanged
-    // index or the first search after an append (AnnIndexSpec pins both)
+    // the meta comes from its memo; an unchanged small index runs no
+    // job, the first search after an append one collect per reloaded
+    // table, and the distributed plan (Readers.parquet reads, whose
+    // schemas appendSketchVectors keeps current) 5 jobs per collect
+    // (AnnIndexSpec pins all three)
     val meta = loadSketchMetaOnce(spark, path)
     require(!quantized || meta.hasQ8,
       s"sketch index at $path has no int8 sibling — rebuild with " +
       "writeSketch(q8 = true) / addQ8, or search with quantized = false")
+    val resident = residents.getOrLoad(spark, path)(loadResident(spark, path))
+      .filter(ix => !quantized || ix.q8.nonEmpty)
     // Completeness gate (ADVICE r15): a crash between the float-sketch
     // and q8 appends leaves q8 missing rows, and repair only runs on
     // the NEXT appendSketchVectors — in the interim a quantized pass 1
     // would silently never see those vectors. A row-count equality
     // check catches exactly that failure shape (appends only ever add
     // rows; the siblings march in lockstep or q8 is short), and costs
-    // two parquet footer reads, no data scan. Fail loudly with the
-    // repair path rather than silently under-serving.
+    // two parquet footer reads, no data scan (or nothing, on a resident
+    // copy). Fail loudly with the repair path rather than silently
+    // under-serving.
     if (quantized) {
-      val nF = Readers.parquet(spark, s"$path/sketches").count()
-      val nQ8 = Readers.parquet(spark, s"$path/sketches_q8").count()
+      val (nF, nQ8) = resident match {
+        case Some(ix) => (ix.sketches.n.toLong, ix.q8.get.n.toLong)
+        case None => (Readers.parquet(spark, s"$path/sketches").count(),
+          Readers.parquet(spark, s"$path/sketches_q8").count())
+      }
       require(nF == nQ8,
         s"sketch index at $path: int8 sibling is incomplete " +
         s"($nQ8 of $nF rows — a prior append died between the two " +
@@ -551,17 +572,33 @@ object AnnIndex {
     }
     val r = Similarity.sketchMatrix(meta.dim, meta.sketchDim, meta.seed)
     val q = queries.toDF("query_id", "q_vec")
+    resident.flatMap(searchResident(spark, _, q, r, k, m, quantized)).getOrElse(
+      sketchPlan(q, sketchTable(Readers.parquet(spark, s"$path/${sketchDir(quantized)}"), quantized),
+        Readers.parquet(spark, s"$path/vectors"), r, k, m))
+  }
+
+  private def sketchDir(quantized: Boolean): String =
+    if (quantized) "sketches_q8" else "sketches"
+
+  /** Pass 1's input: (vec_id, float sketch). The int8 sibling is 1/4
+    * the sketch bytes; the per-vector scale cancels in cosine, so a
+    * cast IS the dequantization.
+    */
+  private def sketchTable(table: DataFrame, quantized: Boolean): DataFrame =
+    if (quantized) table.select(col("vec_id"), Similarity.dequantSketch(col("sk")).as("sk"))
+    else table
+
+  /** The distributed search over query frame `q` (query_id, q_vec),
+    * sketch table `sk` (vec_id, sk) and `vectors` (vec_id, c_vec).
+    */
+  private def sketchPlan(q: DataFrame, sk: DataFrame, vectors: DataFrame,
+                         r: Array[Array[Float]], k: Int, m: Int): DataFrame = {
+    import graft.expressions.NativeFns.sketch_project
     val qs = broadcast(q.withColumn("q_sk", sketch_project(col("q_vec"), r))
       .select(col("query_id"), col("q_sk")))
     val wS = Window.partitionBy(col("query_id"))
       .orderBy(col("s").desc, col("vec_id").asc)
-    // quantized: pass 1 scans the int8 sibling — 1/4 the sketch bytes;
-    // the per-vector scale cancels in cosine so a cast IS the dequant
-    val skTable =
-      if (quantized) Readers.parquet(spark, s"$path/sketches_q8")
-        .select(col("vec_id"), Similarity.dequantSketch(col("sk")).as("sk"))
-      else Readers.parquet(spark, s"$path/sketches")
-    val cand = skTable
+    val cand = sk
       .join(qs, col("query_id") =!= col("vec_id"))
       .withColumn("s", VecFns.cosine(col("q_sk"), col("sk")))
       .withColumn("srk", row_number().over(wS))
@@ -569,13 +606,182 @@ object AnnIndex {
       .select(col("query_id"), col("vec_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.join(Readers.parquet(spark, s"$path/vectors"), "vec_id")
+    cand.join(vectors, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos", round(VecFns.cosine(col("q_vec"), col("c_vec")), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk").cast("long").as("rk"),
         col("vec_id"), col("cos"))
+  }
+
+  // ------------------------------------------------------------------
+  // Driver-resident sketch indexes: [[searchSketch]]'s path for an
+  // index small enough to hold on the driver. At serve sizes the
+  // distributed plan is all driver round-trips (5 jobs for a few
+  // hundred KB of input), and repeated searches over one slowly growing
+  // corpus can reuse one loaded copy instead.
+  // ------------------------------------------------------------------
+
+  /** Largest index, in on-disk bytes of its `vectors`, `sketches` and
+    * `sketches_q8` tables together, that [[searchSketch]] serves from
+    * a driver-resident copy. Random floats barely compress, so the
+    * copy takes about as many bytes on the heap.
+    */
+  private val LocalIndexBytes: Long = 1L << 20
+
+  /** One resident table: row i is `ids(i)` with elements
+    * `data(start(i) until start(i + 1))`.
+    */
+  private[graft] final class Rows(val ids: Array[Long], val start: Array[Int],
+                                  val data: Array[Float]) {
+    def n: Int = ids.length
+    def len(i: Int): Int = start(i + 1) - start(i)
+  }
+
+  /** A sketch index's tables on the driver, with the schemas the
+    * distributed plan would read them with. `q8` is the int8 sibling
+    * as floats (the cast is the dequantization), when it exists.
+    */
+  private[graft] final class Resident(val vectors: Rows, val sketches: Rows,
+                                      val q8: Option[Rows],
+                                      schemas: Map[String, StructType]) {
+    private val outSchemas =
+      new java.util.concurrent.ConcurrentHashMap[(StructType, Boolean), StructType]()
+
+    /** The distributed plan's result schema for queries of schema `q`,
+      * from analysing that plan over empty local relations (no job).
+      */
+    def outSchema(spark: SparkSession, q: StructType, quantized: Boolean): StructType =
+      outSchemas.computeIfAbsent((q, quantized), { _ =>
+        def empty(s: StructType) =
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+        sketchPlan(empty(q), sketchTable(empty(schemas(sketchDir(quantized))), quantized),
+          empty(schemas("vectors")), Array(Array(0f)), 1, 1).schema
+      })
+  }
+
+  /** Resident copies per (session, index path), fingerprinted on the
+    * listing of the three searched tables; `None` marks an index the
+    * distributed plan serves (above `LocalIndexBytes`, a table
+    * missing, a null or an unexpected column type).
+    */
+  private[graft] val residents =
+    IndexMemo[Option[Resident]]("vectors", "sketches", "sketches_q8")
+
+  private def loadResident(spark: SparkSession, path: String): Option[Resident] = {
+    val dirs = Seq("vectors", "sketches", "sketches_q8")
+      .map(t => t -> new org.apache.hadoop.fs.Path(s"$path/$t"))
+    val fs = dirs.head._2.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = dirs.filter { case (_, p) => fs.exists(p) }
+    val bytes = present.map { case (_, p) => fs.getContentSummary(p).getLength }.sum
+    val names = present.map(_._1)
+    if (!names.contains("vectors") || !names.contains("sketches") || bytes > LocalIndexBytes)
+      None
+    else {
+      val tables = present.map { case (t, _) =>
+        val df = Readers.parquet(spark, s"$path/$t")
+        t -> (df.schema, residentRows(df, if (t == "vectors") "c_vec" else "sk"))
+      }.toMap
+      if (tables.values.exists(_._2.isEmpty)) None
+      else Some(new Resident(tables("vectors")._2.get, tables("sketches")._2.get,
+        tables.get("sketches_q8").flatMap(_._2), tables.map { case (t, v) => t -> v._1 }))
+    }
+  }
+
+  private def isId(t: DataType): Boolean = t == LongType || t == IntegerType
+
+  /** `df`'s (vec_id, `vec`) rows, in one collect, as primitive arrays;
+    * `None` for a null anywhere or a column type the resident search
+    * does not take (ids int or long, elements float or byte).
+    */
+  private def residentRows(df: DataFrame, vec: String): Option[Rows] = {
+    val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val typed = fields.get("vec_id").exists(isId) && (fields.get(vec) match {
+      case Some(ArrayType(FloatType | ByteType, _)) => true
+      case _ => false
+    })
+    val rows = if (typed) df.select(col("vec_id"), col(vec)).collect() else Array.empty[Row]
+    if (!typed || !nullFree(rows)) None
+    else {
+      val start = rows.scanLeft(0)(_ + _.getSeq[Any](1).length)
+      val data = new Array[Float](start.last)
+      rows.indices.foreach(i => rows(i).getSeq[Any](1).iterator.zipWithIndex.foreach {
+        case (v, j) => data(start(i) + j) = v.asInstanceOf[Number].floatValue
+      })
+      Some(new Rows(rows.map(rowId), start, data))
+    }
+  }
+
+  /** No null id, vector or element in (id, vector) rows. */
+  private def nullFree(rows: Array[Row]): Boolean =
+    rows.forall(x => !x.isNullAt(0) && !x.isNullAt(1) && !x.getSeq[Any](1).contains(null))
+
+  private def rowId(row: Row): Long = row.get(0).asInstanceOf[Number].longValue
+
+  /** A score and the id it ranks, ordered as the search windows order
+    * (score desc, vec_id asc) with Spark's double comparison: NaN
+    * greatest, -0.0 equal to 0.0.
+    */
+  private[graft] final case class Scored(score: Double, id: Long)
+
+  private[graft] val rankOrder: Ordering[Scored] = (a: Scored, b: Scored) => {
+    val c = SQLOrderingUtil.compareDoubles(b.score, a.score)
+    if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+  }
+
+  /** Spark's `round(x, 6)`, the same expression the plan evaluates. */
+  private val round6: Double => Double = {
+    val e = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+    x => e.eval(InternalRow(x)).asInstanceOf[Double]
+  }
+
+  /** [[sketchPlan]]'s result, computed on the driver over `ix`; `None`
+    * when the queries are not (int or long id, float vector) rows free
+    * of nulls.
+    */
+  private def searchResident(spark: SparkSession, ix: Resident, q: DataFrame,
+                             r: Array[Array[Float]], k: Int, m: Int,
+                             quantized: Boolean): Option[DataFrame] = {
+    val typed = isId(q.schema(0).dataType) && (q.schema(1).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
+    val rows = if (typed) q.collect() else Array.empty[Row]
+    if (!typed || !nullFree(rows)) None
+    else {
+      val schema = ix.outSchema(spark, q.schema, quantized)
+      def value(v: Long, t: DataType): Any = if (t == IntegerType) v.toInt else v
+      val sk = if (quantized) ix.q8.get else ix.sketches
+      val vectors = ix.vectors
+      // the window partitions by query_id: query rows sharing an id
+      // rank their candidates together
+      val out = rows.groupBy(rowId).toArray.flatMap { case (qid, group) =>
+        val qvecs = group.map(_.getSeq[Float](1).toArray)
+        // pass 1: every sketch row but the query's own id, top m
+        val cands = qvecs.flatMap { qv =>
+          val qsk = SketchProject.project(qv, 0, qv.length, r)
+          (0 until sk.n).iterator.filter(sk.ids(_) != qid).map(i => Scored(
+            CosineSim.fold(qsk, 0, qsk.length, sk.data, sk.start(i), sk.len(i)), sk.ids(i)))
+        }.sorted(rankOrder).take(m)
+        // pass 2: each surviving row x each vectors row with its id x
+        // each query row, exact 6-dp cosine, top k
+        val hits = cands.groupMapReduce(_.id)(_ => 1)(_ + _)
+        val scored = (0 until vectors.n).filter(j => hits.contains(vectors.ids(j))).flatMap { j =>
+          val id = vectors.ids(j)
+          qvecs.toSeq.flatMap { qv =>
+            val s = Scored(round6(CosineSim.fold(qv, 0, qv.length,
+              vectors.data, vectors.start(j), vectors.len(j))), id)
+            Seq.fill(hits(id))(s)
+          }
+        }.sorted(rankOrder).take(k)
+        scored.zipWithIndex.map { case (s, i) =>
+          Row(value(qid, schema(0).dataType), (i + 1).toLong,
+            value(s.id, schema(2).dataType), s.score)
+        }
+      }
+      Some(spark.createDataFrame(java.util.Arrays.asList(out: _*), schema))
+    }
   }
 
   /** Sketch `vecs` (id, vec) with the index's stored recipe and append
@@ -614,10 +820,15 @@ object AnnIndex {
     // append must be healed before this append lists the vectors dir.
     repairSketchOrphans(spark, path)
     val before = listing()
-    Readers.appendParquet(vecs.toDF("vec_id", "c_vec"), s"$path/vectors")
+    val written = vecs.toDF("vec_id", "c_vec")
+    Readers.appendParquet(written, s"$path/vectors")
     val delta = (listing() -- before).toSeq.sorted
+    // the schema the append just wrote, as a footer read would infer
+    // it (every parquet column nullable), so the delta read runs no
+    // inference job
     if (delta.nonEmpty)
-      appendSketches(spark, path, meta, r, spark.read.parquet(delta: _*))
+      appendSketches(spark, path, meta, r,
+        spark.read.schema(Readers.nullable(written.schema)).parquet(delta: _*))
   }
 
   // the q8 sibling (v2 indexes) appends in lockstep: both the orphan

@@ -1327,7 +1327,7 @@ object Compactor {
     * listing, and its rows when the manifest is small enough to prune
     * over locally ([[LocalManifestBytes]]).
     */
-  private final case class Manifest(files: String,
+  private[graft] final case class Manifest(files: String,
                                     local: Option[(org.apache.spark.sql.types.StructType, Array[Row])])
 
   /** On-disk size up to which a manifest's rows are kept on the driver
@@ -1346,7 +1346,7 @@ object Compactor {
     * manifest write ([[writeStatsManifest]], [[appendStatsManifest]],
     * [[maintainLake]]'s swap) lands part files under new names.
     */
-  private val manifests = IndexMemo[Manifest](StatsDir)
+  private[graft] val manifests = IndexMemo[Manifest](StatsDir)
 
   /** A file set as an order- and spelling-independent digest:
     * input_file_name() and DataFrame.inputFiles render the same file

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Serve-path memo for driver-side artifacts derived from on-disk
@@ -13,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    [[DsirIndex.loadOnce]]: persisted-index loads (lazy DataFrames
   *    in a value cache only their plan and the file listing frozen at
   *    load time; scans still execute per query);
+  *  - `AnnIndex.residents`: a small sketch index's tables as primitive
+  *    arrays, which [[AnnIndex.searchSketch]] searches on the driver;
   *  - [[Readers.parquet]]: the footer-inferred schema of a parquet
   *    read, fingerprinted on the session's parquet confs and stored
   *    with the listing it was inferred over, which each read's own
@@ -45,11 +49,15 @@ import org.apache.spark.sql.SparkSession
   *    reference (`SparkSession` does not override `equals`); two
   *    sessions never share a value bound to the other's plans.
   *  - Bounded: an access-ordered LRU of 64 entries, so a session
-  *    serving unboundedly many paths — or a stopped session's entries,
-  *    which nothing else would remove — cannot grow driver memory
-  *    without bound. Sessions are held strongly: every builder in the
-  *    project uses `getOrCreate`, and the bound already caps what a
-  *    stopped session can pin.
+  *    serving unboundedly many paths cannot grow driver memory without
+  *    bound.
+  *  - Released at the application's end: sessions are held strongly
+  *    (every session in the project comes from `getOrCreate`), so a context's
+  *    first entry in any memo registers one `SparkListener` on it,
+  *    shared by every memo, whose `onApplicationEnd` drops every entry
+  *    of that context's sessions. A stopped session's schemas,
+  *    manifests and resident indexes, which nothing could reuse, are
+  *    then not kept until the LRU pushes them out.
   *
   * Loads run outside the lock (they run Spark jobs); a lost race costs
   * one duplicate read of deterministic on-disk data. A load that
@@ -75,6 +83,7 @@ private[graft] final class IndexMemo[K, V](fingerprint: (SparkSession, K) => Any
     if (hit != null && hit.fingerprint == fp) hit.value
     else {
       val v = load
+      IndexMemo.watch(spark.sparkContext)
       entries.synchronized {
         val prev = entries.get(k)
         if (prev != null && prev.fingerprint == fp) prev.value
@@ -100,6 +109,7 @@ private[graft] final class IndexMemo[K, V](fingerprint: (SparkSession, K) => Any
     */
   def replace(spark: SparkSession, key: K, value: V): V = {
     val fp = fingerprint(spark, key)
+    IndexMemo.watch(spark.sparkContext)
     entries.synchronized(entries.put((spark, key), Entry(fp, value)))
     value
   }
@@ -107,6 +117,12 @@ private[graft] final class IndexMemo[K, V](fingerprint: (SparkSession, K) => Any
   /** Drop `key`'s entry in every session (writers call this). */
   def invalidate(key: K): Unit =
     entries.synchronized { entries.keySet.removeIf(_._2 == key) }
+
+  /** Drop every entry of a session on `sc`. */
+  private def release(sc: SparkContext): Unit =
+    entries.synchronized { entries.keySet.removeIf(_._1.sparkContext eq sc) }
+
+  IndexMemo.register(this)
 
   /** Live entries, all keys (for tests). */
   private[graft] def liveCount: Int = entries.synchronized(entries.size())
@@ -127,8 +143,50 @@ private[graft] object IndexMemo {
   // manifest entry keeps rows only for a manifest of at most
   // `Compactor.LocalManifestBytes` (256 KiB) on disk, about 1 MB on
   // the driver, so that memo's worst case is under 100 MB; `serve`'s
-  // one 24-row manifest is a few KB.
+  // one 24-row manifest is a few KB. A resident sketch index is held
+  // only up to `AnnIndex.LocalIndexBytes` (1 MiB) on disk, about as
+  // many bytes of float arrays, so that memo's worst case is
+  // 64 x LocalIndexBytes = 64 MB; `serve`'s one index is about 0.33 MB.
   private val Capacity = 64
+
+  /** Every memo, so that a context's end releases its entries in all
+    * of them; weak, so a memo nothing else holds can be collected. */
+  private val memos = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[IndexMemo[_, _], java.lang.Boolean]())
+
+  /** The end-of-application hook of each context that has entries. */
+  private val hooks = new java.util.IdentityHashMap[SparkContext, SparkListener]()
+
+  private def register(memo: IndexMemo[_, _]): Unit = memos.synchronized(memos.add(memo))
+
+  private def live: List[IndexMemo[_, _]] = {
+    import scala.jdk.CollectionConverters._
+    memos.synchronized(memos.asScala.toList)
+  }
+
+  /** Add `sc`'s hook at the context's first entry: when the
+    * application ends, every memo drops the entries of its sessions,
+    * which nothing could reuse, and the hook forgets the context.
+    */
+  private def watch(sc: SparkContext): Unit = hooks.synchronized {
+    if (!hooks.containsKey(sc)) {
+      val hook = new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          hooks.synchronized(hooks.remove(sc, this))
+          live.foreach(_.release(sc))
+        }
+      }
+      sc.addSparkListener(hook)
+      hooks.put(sc, hook)
+    }
+  }
+
+  /** `sc`'s registered hook, if it has one (for tests). */
+  private[graft] def stopHook(sc: SparkContext): Option[SparkListener] =
+    hooks.synchronized(Option(hooks.get(sc)))
+
+  /** Live entries across every memo (for tests). */
+  private[graft] def liveTotal: Int = live.map(_.liveCount).sum
 
   /** A memo keyed by index path, fingerprinted on the listing of the
     * index's `subdirs` (one level each, no data read).

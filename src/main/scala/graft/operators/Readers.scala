@@ -148,6 +148,11 @@ object Readers {
     }
   }
 
+  /** `s` with every field, element and value nullable: the schema a
+    * parquet footer read infers for files written with `s`. */
+  private[graft] def nullable(s: StructType): StructType =
+    nullable(s: DataType).asInstanceOf[StructType]
+
   /** `dt` with every field, element and value nullable. */
   private def nullable(dt: DataType): DataType = dt match {
     case s: StructType =>

@@ -272,22 +272,24 @@ class AnnIndexSpec extends SparkSpec {
     // reads the current sketches/vectors schemas into the memo
     AnnIndex.searchSketch(spark, dir, emb.filter(col("vec_id") < 2), k = 5, m = 20)
       .collect()
-    // only the orphan check, the delta's footer read and the two
-    // appends run jobs; the meta (read twice, 2 jobs per uncached
-    // read) is a memo hit, and so are the orphan check's two schemas
+    // only the orphan check and the two appends run jobs; the meta
+    // (read twice, 2 jobs per uncached read) is a memo hit, so are the
+    // orphan check's two schemas, and the delta is read with the
+    // schema the append wrote
     val (_, jobs) = countJobs(AnnIndex.appendSketchVectors(dir, delta(2)))
-    assert(jobs <= 5, s"steady-state append ran $jobs jobs")
+    assert(jobs <= 4, s"steady-state append ran $jobs jobs")
     // back to back: the previous append moved both listings, and its
     // writes stored the new listings with the unchanged schemas, so
     // the orphan check infers no footer
     val (_, next) = countJobs(AnnIndex.appendSketchVectors(dir, delta(3)))
-    assert(next <= 5, s"back-to-back append ran $next jobs")
-    // and neither does the first search after an append
+    assert(next <= 4, s"back-to-back append ran $next jobs")
+    // the first search after an append reloads the resident copy: one
+    // collect per table, no footer inference
     val q = spark.createDataFrame(
       java.util.Arrays.asList(emb.filter(col("vec_id") < 3).collect(): _*), emb.schema)
     val (_, search) = countJobs(
       AnnIndex.searchSketch(spark, dir, q, k = 5, m = 20).collect())
-    assert(search <= 5, s"first search after an append ran $search jobs")
+    assert(search <= 2, s"first search after an append ran $search jobs")
   }
 
   test("searchSketch job budget: an unchanged index pays no footer reads") {
@@ -299,11 +301,33 @@ class AnnIndexSpec extends SparkSpec {
       java.util.Arrays.asList(emb.filter(col("vec_id") < 3).collect(): _*), emb.schema)
     def search() = AnnIndex.searchSketch(spark, dir, q, k = 5, m = 20).collect()
     val warm = search()
-    // the meta and the sketches/vectors schemas come from the memos;
-    // what is left is the search's own collect
+    // the meta and the resident copy come from the memos, the query
+    // frame is local, and so is the result
     val (again, jobs) = countJobs(search())
     assert(again.toSeq == warm.toSeq)
-    assert(jobs <= 5, s"search on an unchanged index ran $jobs jobs")
+    assert(jobs == 0, s"search on an unchanged index ran $jobs jobs")
+  }
+
+  test("searchSketch above LocalIndexBytes runs the distributed plan in <= 5 jobs, with parity") {
+    val dir = Files.createTempDirectory("graft-sk-search-large").toString
+    // 5,000 random 64-dim vectors: about 1.6 MB of vectors and sketches
+    val rnd = new scala.util.Random(11)
+    val corpus = spark.createDataFrame(java.util.Arrays.asList((0 until 5000).map(i =>
+        org.apache.spark.sql.Row(i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat))): _*),
+      emb.schema)
+    AnnIndex.writeSketch(dir, corpus, sketchDim = 16, dim = 64)
+    val q = spark.createDataFrame(
+      java.util.Arrays.asList(corpus.filter(col("vec_id") < 3).collect(): _*), emb.schema)
+    def search() = AnnIndex.searchSketch(spark, dir, q, k = 5, m = 40)
+    search().collect()
+    val (got, jobs) = countJobs(search().collect())
+    assert(AnnIndex.residents.get(spark, dir) == Some(None),
+      "an index above the cap must not be held on the driver")
+    assert(jobs > 0 && jobs <= 5, s"distributed search ran $jobs jobs")
+    val inline = Similarity.knnSketchRerank(q, spark.read.parquet(s"$dir/vectors"),
+      k = 5, m = 40, sketchDim = 16, dim = 64)
+    assert(got.map(_.toString).sorted.toSeq == inline.collect().map(_.toString).sorted.toSeq)
+    assert(search().schema == inline.schema)
   }
 
   test("IndexMemo is an access-ordered LRU bounded at 64 entries") {

@@ -267,8 +267,7 @@ class AnnSpec extends SparkSpec {
       self ++ nested.flatMap(exchanges)
     }
     val banned = Set("c_vec", "q_vec", "embedding", "vec")
-    Seq("s06_knn_sketch_rerank", "s07_knn_sketch_indexed").foreach { qn =>
-      val df = SparkEntry.queries(qn)(spark, sf0001)
+    def check(qn: String, df: org.apache.spark.sql.DataFrame): Unit = {
       df.collect() // execute so AQE materializes the final stages
       val exs = exchanges(df.queryExecution.executedPlan)
       assert(exs.nonEmpty, s"$qn: expected the pass-1 spread + window exchanges")
@@ -278,6 +277,22 @@ class AnnSpec extends SparkSpec {
           s"$qn: shuffle exchange carries a full vector column ($names):\n$e")
       }
     }
+    check("s06_knn_sketch_rerank", SparkEntry.queries("s06_knn_sketch_rerank")(spark, sf0001))
+    // s07's index is below AnnIndex.LocalIndexBytes: it is searched on
+    // the driver and shuffles nothing at all; the persisted index's
+    // distributed search is checked on an index above the cap
+    val s07 = SparkEntry.queries("s07_knn_sketch_indexed")(spark, sf0001)
+    s07.collect()
+    assert(exchanges(s07.queryExecution.executedPlan).isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft-sk-large").toString
+    val rnd = new scala.util.Random(5)
+    val emb = Tables.load(spark, sf0001, "embeddings").select(col("vec_id"), col("embedding"))
+    val corpus = spark.createDataFrame(java.util.Arrays.asList((0 until 5000).map(i =>
+        org.apache.spark.sql.Row(i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat))): _*),
+      emb.schema)
+    graft.operators.AnnIndex.writeSketch(dir, corpus)
+    check("searchSketch above LocalIndexBytes", graft.operators.AnnIndex.searchSketch(
+      spark, dir, corpus.filter(col("vec_id") < 20), k = 10, m = 100))
   }
 
   test("multi-probe LSH reaches useful recall vs brute force") {

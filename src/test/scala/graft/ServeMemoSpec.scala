@@ -3,10 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.operators.{Compactor, Readers}
+import graft.operators.{AnnIndex, Compactor, IndexMemo, Readers}
 
 /** The serve-path schema and stats-manifest memos
   * ([[graft.operators.Readers.parquet]], `Compactor.manifests`): a
@@ -192,5 +193,31 @@ class ServeMemoSpec extends SparkSpec {
     assert(grownJobs >= 1, "the read after a new-schema append must infer")
     assert(grown.schema == spark.read.parquet(dir).schema)
     assert(grown.count() == 6)
+  }
+
+  test("the end of a context's application releases its entries in every memo") {
+    implicit val s = spark
+    val dir = lake(400)
+    def lookup() = Compactor.readPrunedEq(dir, Seq("l_orderkey" -> lit(123L))).collect()
+    val ix = Files.createTempDirectory("graft-serve-release").toString
+    AnnIndex.writeSketch(ix, Tables.loadRaw(spark, sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding")), sketchDim = 8, dim = 64)
+    val q = Tables.loadRaw(spark, sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 3)
+    def search() = AnnIndex.searchSketch(spark, ix, q, k = 5, m = 20).collect().toSeq
+    val (rows, hits) = (lookup().toSeq, search())
+    val memos = Seq(Readers.schemas, Compactor.manifests, AnnIndex.residents,
+      AnnIndex.sketchMetas)
+    assert(memos.forall(_.liveCount > 0))
+    // the shared session cannot be stopped: run its context's hook as
+    // the listener bus would at spark.stop()
+    val hook = IndexMemo.stopHook(spark.sparkContext)
+    assert(hook.nonEmpty, "a context with entries must have its hook registered")
+    hook.get.onApplicationEnd(SparkListenerApplicationEnd(0L))
+    assert(memos.forall(_.liveCount == 0) && IndexMemo.liveTotal == 0)
+    assert(IndexMemo.stopHook(spark.sparkContext).isEmpty)
+    // the next reads load again and return the same rows
+    assert(lookup().toSeq == rows && search() == hits)
+    assert(memos.forall(_.liveCount > 0) && IndexMemo.stopHook(spark.sparkContext).nonEmpty)
   }
 }
