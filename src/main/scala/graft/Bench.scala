@@ -1,19 +1,30 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): one JSON line on stdout.
+/** Benchmark main (driver contract): two JSON lines on stdout.
+  *
+  * Times every `SparkEntry.queries` entry as one concurrent wave, in two
+  * regimes: warm (`SPARK_GRAFT_ITERS` iterations, default 2, memos kept
+  * across iterations) and reset (`SPARK_GRAFT_RESET_ITERS`, default the
+  * warm count, `PipelineOps.resetSharedRun()` before each iteration).
+  * Each regime reports its best iteration wall, every iteration's wall
+  * and each query's walls per iteration; the headline per-query numbers
+  * are the per-query minima over the warm iterations. The 1-min load
+  * average before and after the run rides along. Nothing is normalized:
+  * host noise is the caller's to control — `tools/run_ab.py` interleaves
+  * the runs of two revisions in one window and settle-gates each launch.
   *
   * Robustness against driver-side artifact capture (r2 AND r3 both
-  * shipped tail-truncated JSON, and r3 was additionally taken under
-  * end-of-round machine contention):
+  * shipped tail-truncated JSON):
   *   - headline fields (`metric`,`value`,`unit`,`sf`,`iters`) come
   *     FIRST in the object, per-query map LAST — a tail truncation
   *     loses per-query detail, never the total;
   *   - the full JSON is also written to BENCH_LOCAL.json in the cwd;
-  *   - the reported total is the BEST of `SPARK_GRAFT_ITERS` (default
-  *     2) warm same-JVM iterations, so transient ambient load on the
-  *     snapshot machine can't fabricate a phantom regression. Per-query
-  *     numbers are the per-query minimum across iterations.
+  *   - the LAST stdout line is a summary capped below 1500 chars.
+  *
+  * Knobs: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SHUFFLE`,
+  * `SPARK_GRAFT_ONLY`, `SPARK_GRAFT_POOL`, `SPARK_GRAFT_ITERS` and
+  * `SPARK_GRAFT_RESET_ITERS`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -125,150 +136,15 @@ object Bench {
     // machine load during BOTH iterations): record every iteration's
     // wall and the 1-min system load average before/after, so a
     // contaminated artifact advertises itself — near-equal iter walls
-    // with high load = ambient contention, not a code regression —
-    // and the judge can discount it without a re-run.
+    // with high load = ambient contention, not a code regression.
     def sysLoad(): Double = {
       val l = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       if (l < 0) -1.0 else math.round(l * 100.0) / 100.0
     }
-    // Settle gate (same contract as tools/run_scale_probe.py::settle):
-    // wait for the 1-min loadavg to decay below SPARK_GRAFT_SETTLE_LOAD
-    // (default 4.0; 0 disables) before EACH timed iteration, capped at
-    // SPARK_GRAFT_SETTLE_WAIT seconds (default 150). r10's artifact
-    // carried a 51.96 s ambient-contaminated iteration and 10-30 s
-    // phantom per-query entries; gating makes a contaminated run either
-    // wait it out or advertise itself via settled:false.
-    val settleTarget = sys.env.getOrElse("SPARK_GRAFT_SETTLE_LOAD", "4.0").toDouble
-    val settleWaitS = sys.env.getOrElse("SPARK_GRAFT_SETTLE_WAIT", "300").toDouble
-    def settle(): Boolean = {
-      if (settleTarget <= 0) return true
-      val t0 = System.nanoTime()
-      var l = sysLoad()
-      while (l > settleTarget && (System.nanoTime() - t0) / 1e9 < settleWaitS) {
-        Thread.sleep(5000); l = sysLoad()
-      }
-      l <= settleTarget
-    }
-    // ---- fixed-work sentinel (r16): self-normalizing headline ----------
-    // Three same-code r15 captures spanned 10.97-20.64 s purely on
-    // ambient snapshot-machine load, forcing a manual load-discount
-    // paragraph every round. The sentinel is a CONSTANT-WORK, CPU-bound
-    // aggregate (xxhash64 over 256M longs, one partition per core, no
-    // I/O, no shuffle) timed SOLO before the warm regime, between the
-    // regimes, and after the reset regime. Ambient contention steals
-    // cores from the sentinel exactly as it steals them from the suite,
-    // so value_norm = value * (ref / observed_sentinel) is a
-    // load-discounted total comparable across rounds:
-    //   load doubles everything -> sentinel 2x ref, total 2x true,
-    //   value_norm = 2*true * ref/(2*ref) = true.
-    // ref is the quiet-machine wall (load < 0.5) measured at commit
-    // time; SPARK_GRAFT_SENTINEL_REF overrides. The warm norm uses the
-    // mean of the sentinels bracketing the warm iterations, the reset
-    // norm the pair bracketing the reset iterations — mid-run load
-    // swings land on the regime they actually contaminated.
-    // quiet-machine reference: 5 solo walls measured at loadavg < 2.5 on
-    // the 32-cpu driver box spanned 0.767-0.846 s; 0.80 is the midpoint
-    val sentinelRef = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_REF", "0.80").toDouble
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 1L << 32, 1L, cpus.toInt)
-        .selectExpr("bit_xor(xxhash64(id)) as h").collect() // xor: no ANSI overflow
-      (System.nanoTime() - t0) / 1e9
-    }
-    // ---- IO/scheduler sentinel (r17) --------------------------------
-    // The CPU sentinel normalizes core contention only: the r16 grading
-    // window inflated every per-query median ~2.1x while the CPU
-    // sentinel stayed 0.84-1.0 — the variance was IO/scheduler-side
-    // (page-cache pressure, disk contention, stage-launch latency),
-    // which fixed CPU work cannot see. This sentinel is the OTHER axis:
-    // sequential full-schema scans of a pinned parquet file (driver-box
-    // sf0.1 lineitem, ~10 MB — constant bytes, one scan job per pass,
-    // so each pass prices the scan+task-launch path the suite's own
-    // reads ride). A single pass is scheduler-noisy even on a quiet
-    // host (measured 1.0-1.8 s for 4 passes), so the statistic is the
-    // SUM OF THE MIDDLE 4 of 8 passes: one straggler pass cannot swing
-    // it, while sustained contention inflates every pass and passes
-    // through. Timed SOLO at the same pre/mid/post
-    // brackets as the CPU sentinel; each regime's norm factor then
-    // takes the WORSE-inflated axis — min(cpuNorm, ioNorm) — so a
-    // window that doubles IO walls but leaves cores free discounts the
-    // total exactly as a core-stealing window always did. The two
-    // ratios ride the artifact separately, so a capture also documents
-    // WHICH axis was loaded.
-    val ioSentPath = sys.env.getOrElse("SPARK_GRAFT_IOSENT_PATH",
-      "/root/testdata/sf0.1/lineitem.parquet")
-    // quiet-machine reference for the trimmed statistic: 6 solo
-    // readings at 1-min loadavg < 1 spanned 1.12-1.27 s (one 1.73 s
-    // outlier as load crept back — exactly the straggler the trim
-    // exists for); 1.20 is the midpoint
-    val ioSentRef = sys.env.getOrElse("SPARK_GRAFT_IOSENT_REF", "1.20").toDouble
-    // the path and the ref are a MATCHED PAIR: pointing the path at a
-    // different-size file without re-measuring the ref would make the
-    // IO factor meaningless (a larger file silently yields a deep
-    // spurious discount on every bracket) — an overridden path without
-    // an overridden ref drops the IO axis entirely (CPU-only
-    // normalization), and the file's byte size rides the artifact so a
-    // mismatched pair self-documents
-    val ioSentFile = new java.io.File(ioSentPath)
-    val ioSentBytes = if (ioSentFile.exists()) ioSentFile.length() else -1L
-    val ioSentOk = ioSentFile.exists() &&
-      (!sys.env.contains("SPARK_GRAFT_IOSENT_PATH") ||
-        sys.env.contains("SPARK_GRAFT_IOSENT_REF"))
-    def ioSentinel(): Double = {
-      if (!ioSentOk) return -1.0 // foreign host: CPU-only normalization
-      val walls = (1 to 8).map { _ =>
-        val t0 = System.nanoTime()
-        spark.read.parquet(ioSentPath).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      walls.sorted.slice(2, 6).sum
-    }
-    sentinel() // untimed JIT/codegen warm-up of the sentinel itself
-    ioSentinel() // untimed: footer cache + first-touch page cache
     val loadBefore = sysLoad()
     val itersReq = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    val settledFlags = scala.collection.mutable.ArrayBuffer[Boolean]()
-    // ---- per-iteration sentinel brackets (r17) -----------------------
-    // r16 bracketed each REGIME (pre/mid/post): when a load window
-    // decays or ramps MID-regime, the regime-average brackets
-    // under-discount the contaminated iteration and under-credit the
-    // clean one (observed: a capture with iter walls 114/92 s and
-    // sentinels 0.79 → 1.92 → 1.00 normalized to 1.7x its quiet value).
-    // Sentinels now run after EVERY iteration; each iteration wall is
-    // normalized by ITS OWN bracket average, and the headline is the
-    // min over normalized iterations — a window that clears for any one
-    // iteration yields a comparable number, and a window that never
-    // clears discounts by the contention the suite actually saw.
-    val sentsWarm = scala.collection.mutable.ArrayBuffer[(Double, Double)](
-      (sentinel(), ioSentinel()))
-    var runs = (1 to itersReq).map { _ =>
-      settledFlags += settle()
-      val r = oneIteration()
-      sentsWarm += ((sentinel(), ioSentinel()))
-      r
-    }
-    // In-band headline discipline: r13's official artifact was captured
-    // at load 12.87 against the 4.0 band, making its 26 s total
-    // incomparable with r12's 10 s at load 4.4. If any timed iteration
-    // started OUT of band, buy up to SPARK_GRAFT_EXTRA (default 2)
-    // additional settle+run attempts, stopping at the first in-band
-    // one — best-of then contains a quiet capture whenever the ambient
-    // spike decays within the extra budget. If it never does, the
-    // artifact still advertises itself: settled:false + the band value.
-    val extraBudget = sys.env.getOrElse("SPARK_GRAFT_EXTRA", "2").toInt
-    var extraUsed = 0
-    if (!settledFlags.forall(identity)) {
-      var gotInBand = false
-      while (!gotInBand && extraUsed < extraBudget) {
-        val s = settle()
-        runs = runs :+ oneIteration()
-        sentsWarm += ((sentinel(), ioSentinel()))
-        settledFlags += s
-        gotInBand = s
-        extraUsed += 1
-      }
-    }
+    val runs = (1 to itersReq).map(_ => oneIteration())
     // ---- reset regime: price a FRESH flagship pipeline per iteration --
     // The warm regime serves p03/p04/p05 from the cross-iteration memo
     // pin (PipelineOps.sharedSplitRun/incrementalMemo), so 3 of the 101
@@ -282,33 +158,15 @@ object Bench {
     // totals stay attributable: reset − warm ≈ the flagship pipeline
     // cost. Scale probes (SPARK_GRAFT_ONLY set) default to 0 reset
     // iterations; SPARK_GRAFT_RESET_ITERS overrides either way.
-    val (sentMid, ioMid) = sentsWarm.last
     val resetItersReq = sys.env.getOrElse("SPARK_GRAFT_RESET_ITERS",
       if (only.isDefined) "0" else itersReq.toString).toInt.max(0)
-    val resetSettled = scala.collection.mutable.ArrayBuffer[Boolean]()
-    // the warm regime's last bracket doubles as the reset regime's pre
-    val sentsReset = scala.collection.mutable.ArrayBuffer[(Double, Double)](
-      (sentMid, ioMid))
     val resetRuns = (1 to resetItersReq).map { _ =>
       graft.queries.PipelineOps.resetSharedRun()
-      resetSettled += settle()
-      val r = oneIteration()
-      sentsReset += ((sentinel(), ioSentinel()))
-      r
+      oneIteration()
     }
-    val (sentPost, ioPost) = sentsReset.last
+    val loadAfter = sysLoad()
 
     val iters = runs.size
-    // `settled` stamps the HEADLINE, so it must describe the iteration
-    // the headline came from: best-of picks the min wall, and if THAT
-    // iteration started in-band the total is comparable — an earlier
-    // out-of-band attempt that the extra budget already out-ran must
-    // not contaminate the stamp (forall did exactly that: the bought
-    // in-band iteration still shipped settled:false). The full
-    // per-iteration flag list rides alongside so nothing is hidden.
-    val bestIdx = runs.indexWhere(_._1 == runs.map(_._1).min)
-    val settledBest = settledFlags(bestIdx)
-    val loadAfter = sysLoad()
     val iterWallList = runs.map(r => f"${r._1}%.2f")
     val iterWalls = iterWallList.mkString("[", ",", "]")
     // the SUMMARY line carries at most the first 8 iteration walls so a
@@ -317,14 +175,10 @@ object Bench {
     // the per-query budget below also subtracts the actual headline
     // overhead rather than assuming a fixed size
     val iterWallsSummary = iterWallList.take(8).mkString("[", ",", "]")
-    val settledList = settledFlags.mkString("[", ",", "]")
-    val loadJson =
-      s"""{"before":$loadBefore,"after":$loadAfter,"cpus":$cpus,""" +
-      s""""settled":$settledBest,"settled_iters":$settledList,""" +
-      s""""band":$settleTarget,"extra_iters":$extraUsed}"""
+    val loadJson = s"""{"before":$loadBefore,"after":$loadAfter,"cpus":$cpus}"""
     val total = runs.map(_._1).min
     // per-query minimum over iterations; a query erring in EVERY
-    // iteration stays an error (negative sentinel elapsed), one clean
+    // iteration stays an error (negative elapsed), one clean
     // iteration clears it
     val names = runs.head._2.keys.toSeq.sorted
     val merged: Seq[(String, (Double, Option[String]))] = names.map { n =>
@@ -333,8 +187,8 @@ object Bench {
       n -> (if (ok.nonEmpty) (ok.map(_._1).min, Option.empty[String])
             else attempts.minBy(_._1))
     }
-    // failed queries report negative elapsed (sentinel) + an errors map,
-    // so a broken query can never masquerade as a fast one
+    // failed queries report negative elapsed + an errors map, so a
+    // broken query can never masquerade as a fast one
     val qs = merged.map { case (k, (v, err)) =>
       s"\"" + k + "\":" + (if (err.isEmpty) v else -v)
     }.mkString("{", ",", "}")
@@ -343,126 +197,25 @@ object Bench {
     // Per-query iteration spread (full JSON only): the total-level
     // iter_walls self-evidence can't localize WHICH query regressed
     // under load — per-query [iter1, iter2, ...] walls can. Errors keep
-    // their negative sentinel per attempt.
-    val qIters = names.map { n =>
-      val vals = runs.map(_._2(n)).map { case (v, err) =>
-        f"${if (err.isEmpty) v else -v}%.3f"
-      }.mkString("[", ",", "]")
-      s"\"" + n + "\":" + vals
-    }.mkString("{", ",", "}")
-    // reset-regime artifacts: headline total (best-of), per-iteration
-    // walls + settle flags, and the full per-query iteration spread —
-    // p03/p04/p05 must show non-trivial walls here, or the pin crept
-    // back. value_reset = -1 when the regime was skipped.
-    val totalReset = if (resetRuns.isEmpty) -1.0 else resetRuns.map(_._1).min
-    val resetWalls = resetRuns.map(r => f"${r._1}%.2f").mkString("[", ",", "]")
-    val qItersReset =
-      if (resetRuns.isEmpty) "{}"
+    // their negative elapsed per attempt.
+    def spread(rs: Seq[(Double, Map[String, (Double, Option[String])])]): String =
+      if (rs.isEmpty) "{}"
       else names.map { n =>
-        val vals = resetRuns.map(_._2(n)).map { case (v, err) =>
+        val vals = rs.map(_._2(n)).map { case (v, err) =>
           f"${if (err.isEmpty) v else -v}%.3f"
         }.mkString("[", ",", "]")
         s"\"" + n + "\":" + vals
       }.mkString("{", ",", "}")
-    // sentinel-normalized totals: value_norm (warm) and value_reset_norm
-    // (reset, the PRIMARY cross-round comparator — it prices every plan,
-    // including the flagship pipelines the warm memo pins out). Each
-    // regime takes the WORSE-inflated sentinel axis (CPU vs IO — see
-    // the r17 note above), then the factor is clamped to <= 1.25 so a
-    // suspiciously fast sentinel (e.g. a turbo burst) can't flatter the
-    // total by more than 25%. The factor itself has no lower clamp —
-    // heavy ambient load discounts fully — but the resulting HEADLINE
-    // floors at the best settled iteration's raw wall (r18, see
-    // bestNormed): discounting below a wall actually achieved in-band
-    // is the flattering direction and was previously unbounded. When
-    // the pinned IO file is absent (foreign host), or its path was
-    // overridden without a matching ref, the IO axis drops out and
-    // normalization is CPU-only.
-    def axisNorm(cpuObs: Double, ioObs: Double): Double = {
-      val cpu = sentinelRef / cpuObs
-      val io = if (ioObs <= 0) Double.MaxValue else ioSentRef / ioObs
-      math.min(1.25, math.min(cpu, io))
-    }
-    // per-iteration normalization (see the bracket note above): each
-    // wall is discounted by its own bracket average, headline = min
-    // over normalized iterations; the reported norm_* factor is the
-    // one belonging to the CHOSEN iteration (transparency, not input)
-    def iterNorm(sents: Seq[(Double, Double)], i: Int): Double =
-      axisNorm((sents(i)._1 + sents(i + 1)._1) / 2,
-        (sents(i)._2 + sents(i + 1)._2) / 2)
-    // axis cross-check: min(cpu, io) trusts the more-inflated axis to
-    // describe the suite, which is right for a genuinely one-sided
-    // window (the r16 IO-only window is why the IO axis exists) but
-    // also exactly what a variance-prone sentinel could fake — when
-    // the two axes disagree by more than 2x, the chosen iteration's
-    // bracket is flagged in the artifact so the discount is
-    // adjudicable rather than silently trusted
-    def axisDisagree(sents: Seq[(Double, Double)], i: Int): Boolean = {
-      val cpu = ((sents(i)._1 + sents(i + 1)._1) / 2) / sentinelRef
-      val ioObs = (sents(i)._2 + sents(i + 1)._2) / 2
-      ioObs > 0 && {
-        val io = ioObs / ioSentRef
-        math.max(cpu, io) / math.min(cpu, io) > 2.0
-      }
-    }
-    // Downward sanity bound (the discount side was unbounded while the
-    // flattering-fast side was clamped at 1.25): a SETTLED iteration's
-    // raw wall was actually achieved near-quiet, so a sentinel-derived
-    // claim that the true cost is even lower is unverifiable — the
-    // normalized headline floors at the best settled raw wall, and the
-    // artifact says when the floor engaged. One over-discounted
-    // bracket (an IO sentinel straggler, a manufactured window) can
-    // therefore no longer set the headline below observed truth.
-    // When the floor engages, the REPORTED tuple describes the floor-
-    // source iteration, not the discarded minBy one: factor 1.0 (the
-    // value IS that iteration's raw wall, undiscounted) and that
-    // iteration's axis_disagree — so value == wall(norm_iter) * norm
-    // holds in every artifact (ADVICE r18), with norm_iter naming the
-    // iteration the headline came from.
-    def bestNormed(walls: Seq[Double], sents: Seq[(Double, Double)],
-                   settledF: Seq[Boolean]): (Double, Double, Boolean, Boolean, Int) = {
-      val (v, f, i) = walls.zipWithIndex
-        .map { case (w, j) => (w * iterNorm(sents, j), iterNorm(sents, j), j) }
-        .minBy(_._1)
-      val floor = walls.zipWithIndex.zip(settledF)
-        .collect { case ((w, j), true) => (w, j) }
-      if (floor.nonEmpty && v < floor.map(_._1).min) {
-        val (fw, fj) = floor.minBy(_._1)
-        (fw, 1.0, true, axisDisagree(sents, fj), fj)
-      } else (v, f, false, axisDisagree(sents, i), i)
-    }
-    val (valueNorm, normWarm, flooredWarm, disagreeWarm, normIterWarm) =
-      bestNormed(runs.map(_._1), sentsWarm.toSeq, settledFlags.toSeq)
-    val (valueResetNorm, normReset, flooredReset, disagreeReset, normIterReset) =
-      if (totalReset < 0) (-1.0, -1.0, false, false, -1)
-      else bestNormed(resetRuns.map(_._1), sentsReset.toSeq, resetSettled.toSeq)
-    def trace(sents: Seq[(Double, Double)]): String =
-      sents.map(p => f"[${p._1}%.3f,${p._2}%.3f]").mkString("[", ",", "]")
-    // compact form rides BOTH output lines; the full per-iteration
-    // trace rides only the full JSON (the summary line must stay under
-    // the 1500-char stdout window)
-    val sentinelCompact =
-      s"""{"ref":$sentinelRef,"pre":${f"${sentsWarm.head._1}%.3f"},""" +
-      s""""mid":${f"$sentMid%.3f"},""" +
-      s""""post":${f"$sentPost%.3f"},"io_ref":$ioSentRef,""" +
-      s""""io_pre":${f"${sentsWarm.head._2}%.3f"},"io_mid":${f"$ioMid%.3f"},""" +
-      s""""io_post":${f"$ioPost%.3f"},"norm_warm":${f"$normWarm%.3f"},""" +
-      s""""norm_reset":${f"$normReset%.3f"},"io_bytes":$ioSentBytes,""" +
-      s""""floored":[$flooredWarm,$flooredReset],""" +
-      s""""norm_iter":[$normIterWarm,$normIterReset],""" +
-      s""""axis_disagree":[$disagreeWarm,$disagreeReset]"""
-    val sentinelFull = sentinelCompact +
-      s""","trace_warm":${trace(sentsWarm.toSeq)},""" +
-      s""""trace_reset":${trace(sentsReset.toSeq)}}"""
-    def resetJsonWith(sentJson: String): String =
+    // reset-regime artifacts: headline total (best-of), per-iteration
+    // walls and the full per-query iteration spread — p03/p04/p05 must
+    // show non-trivial walls here, or the pin crept back.
+    // value_reset = -1 when the regime was skipped.
+    val totalReset = if (resetRuns.isEmpty) -1.0 else resetRuns.map(_._1).min
+    val resetJson =
       s""""value_reset":${f"$totalReset%.3f"},"reset_iters":${resetRuns.size},""" +
-      s""""value_norm":${f"$valueNorm%.3f"},"value_reset_norm":${f"$valueResetNorm%.3f"},""" +
-      s""""primary":"value_reset_norm","sentinel":$sentJson,""" +
-      s""""reset_walls":$resetWalls,"reset_settled":${resetSettled.mkString("[", ",", "]")}"""
-    val resetJsonFull = resetJsonWith(sentinelFull)
-    val resetJson = resetJsonWith(sentinelCompact + "}")
+      s""""reset_walls":${resetRuns.map(r => f"${r._1}%.2f").mkString("[", ",", "]")}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","iters":$iters,"materialize":"full_rows",$resetJsonFull,"iter_walls":$iterWalls,"load":$loadJson,"errors":$errs,"queries":$qs,"query_iters":$qIters,"query_iters_reset":$qItersReset}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","iters":$iters,"materialize":"full_rows",$resetJson,"iter_walls":$iterWalls,"load":$loadJson,"errors":$errs,"queries":$qs,"query_iters":${spread(runs)},"query_iters_reset":${spread(resetRuns)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (json + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => } // read-only cwd must not kill the stdout line

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 import graft.operators.Readers
 
@@ -44,24 +44,34 @@ object Tables {
     else Readers.parquet(spark, s"$dir/$name.parquet")
 
   /** `events.ts` has shipped in two physical layouts across testdata
-    * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
-    * reader only accepts as a long via legacy nanosAsLong) and plain
-    * TIMESTAMP(MICROS) (read natively as a timestamp). Adapt on the
-    * observed type and expose BOTH `ts_ns: LONG` (exact epoch ns — use
-    * for ordering/arithmetic, equal to DuckDB's `epoch_ns(ts)`) and
-    * `ts` (timestamp — use for date math and comparisons against the
-    * other timestamp columns). The ns→µs truncation in the NANOS
-    * branch matches DuckDB's ns->µs cast exactly; in the MICROS branch
-    * ts_ns is µs*1000, again equal to DuckDB's epoch_ns. The epoch
-    * arithmetic is wall-clock (timestampdiff against the NTZ epoch),
-    * so no session-timezone dependence either way.
+    * generations: parquet TIMESTAMP(NANOS) (which Spark only reads as a
+    * long via legacy nanosAsLong; without it the read fails with
+    * `PARQUET_TYPE_ILLEGAL`) and plain TIMESTAMP(MICROS) (read natively
+    * as a timestamp). The flag is set only when the plain read fails:
+    * every [[graft.operators.Readers.parquet]] schema entry is
+    * fingerprinted on the session's parquet confs, so setting it on
+    * every session would make each memoized path infer its footer
+    * again. Adapt on the observed type and expose BOTH `ts_ns: LONG`
+    * (exact epoch ns — use for ordering/arithmetic, equal to DuckDB's
+    * `epoch_ns(ts)`) and `ts` (timestamp — use for date math and
+    * comparisons against the other timestamp columns). The ns→µs
+    * truncation in the NANOS branch matches DuckDB's ns->µs cast
+    * exactly; in the MICROS branch ts_ns is µs*1000, again equal to
+    * DuckDB's epoch_ns. The epoch arithmetic is wall-clock
+    * (timestampdiff against the NTZ epoch), so no session-timezone
+    * dependence either way.
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // set before the read: the schema memo fingerprints parquet confs
-    val raw = Readers.parquet(spark, s"$dir/events.parquet")
+    val path = s"$dir/events.parquet"
+    val raw =
+      try Readers.parquet(spark, path)
+      catch {
+        case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          Readers.parquet(spark, path)
+      }
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) read as epoch-ns long
         raw.withColumn("ts_ns", col("ts"))

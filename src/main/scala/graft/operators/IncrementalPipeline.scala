@@ -148,8 +148,7 @@ object IncrementalPipeline {
           .select(col("doc_id"), col("cluster_rep").as("rep"))
       })
     }
-    val reps = sect("bs_cc_drop")(
-      Dedup.clusters(pairs, col("doc_a"), col("doc_b")))
+    val reps = Dedup.clusters(pairs, col("doc_a"), col("doc_b"))
       .select(col("doc_id"), col("cluster_rep").as("rep"))
     // counts at minHits=1: the state keeps EVERY non-bench doc's hit
     // count so day-N retro contamination can ADD new-key hits to it
@@ -168,11 +167,11 @@ object IncrementalPipeline {
         Seq(col("doc_id").asc), col("n_tok"), p.budgetPerStratum,
         qualityBounds = Some((0.0, 1.0)))
       .select(col("doc_id"), col("stratum"), col("n_tok"))
-    val repsSplit = repsSplitF.map(f => sect("bs_cc_split")(f.get()))
+    val repsSplit = repsSplitF.map(_.get())
     val keyed = Dedup.shingleKeys(
       Dedup.shingleTable(s2, col("doc_id"), col("text"), p.shingleN))
     val blocklist = keyed.filter(benchPred).select("_k").distinct()
-    val maxId = sect("bs_maxid")(maxIdF.get())
+    val maxId = maxIdF.get()
     // every write below reads only the docs input (through the cached
     // post-exact s2), so the index tables, the inverted keys, and the
     // six version tables fan out as ONE concurrent batch; the metas
@@ -189,7 +188,7 @@ object IncrementalPipeline {
     // (Measured both ways in r20: counting PACKED instead — offsets +
     // window on top — SERIALIZES pack work the concurrent batch used
     // to overlap; spine 1.0 -> 2.2 s. surv stays the spine.)
-    sect("bs_spine")(surv.count())
+    surv.count()
     // Index tables, inverted keys, DSIR sidecar, and the six version
     // tables are ALL independent writes reading only cached frames —
     // one concurrent batch instead of two sequential ones (wall = the
@@ -197,7 +196,7 @@ object IncrementalPipeline {
     // metas land strictly after: DedupIndex meta after its tables,
     // version meta (the commit point) last of all, so a crash anywhere
     // in the batch leaves a torn, invisible state exactly as before.
-    sect("bs_writes")(runAll(Seq(
+    runAll(Seq(
       () => ixB.hashes.write.mode("overwrite").parquet(s"$dir/index/hashes"),
       () => ixB.bands.write.mode("overwrite").parquet(s"$dir/index/bands"),
       () => ixB.shingles.write.mode("overwrite").parquet(s"$dir/index/shingles"),
@@ -205,9 +204,9 @@ object IncrementalPipeline {
       () => writeTables(dir, 1, reps, repsSplit, counts, blocklist,
         surv, packed)) ++
       dsirBuckets.map(b => () => DsirIndex.writeVersioned(s"$dir/dsir",
-        s2, col("doc_id"), col("text"), b, ver = 1)).toSeq))
+        s2, col("doc_id"), col("text"), b, ver = 1)).toSeq)
     DedupIndex.writeMeta(spark, s"$dir/index", ixB.meta)
-    sect("bs_commit")(commitMeta(spark, dir, 1, maxId, p))
+    commitMeta(spark, dir, 1, maxId, p)
     // the returned output re-roots on the committed v1 state (the same
     // device as runIncremental's return): the caller's action re-reads
     // the narrow packed table instead of recomputing the pack chain
@@ -256,18 +255,6 @@ object IncrementalPipeline {
     * and commits the advanced state. Delta ids must exceed the
     * committed horizon (append-only id discipline — asserted).
     */
-  // env-gated section walls (SPARK_GRAFT_INCPIPE_DEBUG=1): most of the
-  // body is lazy plan construction — these timers bracket the driver
-  // ACTIONS, which is where the wall actually accrues
-  private val debugTiming = sys.env.get("SPARK_GRAFT_INCPIPE_DEBUG").contains("1")
-  private def sect[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    if (debugTiming)
-      System.err.println(f"[incpipe] $name%-14s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
   def runIncremental(dir: String, delta: DataFrame,
                      benchPred: Column): DataFrame = {
     val spark = delta.sparkSession
@@ -278,9 +265,9 @@ object IncrementalPipeline {
       () => DedupIndex.load(spark, s"$dir/index"))
     val idrF = java.util.concurrent.CompletableFuture.supplyAsync(
       () => delta.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0))
-    val st = sect("load_state")(loadState(spark, dir))
+    val st = loadState(spark, dir)
     val p = st.params
-    val ix = sect("load_index")(ixF.get())
+    val ix = ixF.get()
     require(ix.meta.shingleN == p.shingleN && ix.meta.k == p.k &&
       ix.meta.bands == p.bands, s"state at $dir: index recipe ${ix.meta} " +
       s"does not match pinned params $p")
@@ -291,7 +278,7 @@ object IncrementalPipeline {
     val bandsB = ix.bands.filter(col("base_id") <= hz)
     val shB = ix.shingles.filter(col("base_id") <= hz)
 
-    val idr = sect("id_range")(idrF.get())
+    val idr = idrF.get()
     if (idr.isNullAt(0)) {
       // no-op day: nothing to curate — re-emit the committed output
       // from the stored packed set, advance nothing
@@ -311,7 +298,6 @@ object IncrementalPipeline {
     // no distinct on the index hash side: left_anti is set-semantics
     // regardless of build-side duplicates, and the distinct was a
     // base-sized shuffle bought for nothing
-    val tPlan0 = System.nanoTime()
     val s1 = delta.filter(CorpusPipeline.gopherGate(col("text")))
     // LOCAL CHECKPOINT, not cache (r16): d2 is the root of every day
     // frame, and its lineage reads index/hashes (the exact-dedup
@@ -372,9 +358,6 @@ object IncrementalPipeline {
     val newKeyPartsF = java.util.concurrent.CompletableFuture.supplyAsync(
       () => newKeys.groupBy(keyPart(col("_k")).as("_kp"))
         .agg(count(lit(1)).as("n")).collect())
-
-    if (debugTiming) System.err.println(
-      f"[incpipe] plan_build1    ${(System.nanoTime() - tPlan0) / 1e9}%.2fs")
 
     // -- per-row pack stats of the WHOLE post-exact delta, materialized
     //    CONCURRENTLY with the rep extensions below. Stats are per-row
@@ -462,10 +445,10 @@ object IncrementalPipeline {
         Caches.track(extendReps(st.repsSplit.get,
           crossAt(cfg.minSim), deltaPairsAt(cfg.minSim))))
     }
-    val repsNew = sect("extend_reps")(Caches.track(
-      extendReps(st.reps, crossAt(p.minSim), deltaPairsAt(p.minSim))))
+    val repsNew = Caches.track(
+      extendReps(st.reps, crossAt(p.minSim), deltaPairsAt(p.minSim)))
 
-    val baseCounts = sect("retro_join")(baseCountsF.get()._1)
+    val baseCounts = baseCountsF.get()._1
     // warm the two caches at the BOTTOM of the spine's dependency chain
     // while the driver is still building plans and launching the append
     // fan-out — their stages are first on the spine's critical path,
@@ -476,7 +459,6 @@ object IncrementalPipeline {
       catch { case _: Throwable => })
 
     // -- delta survivors: drop rows from the precomputed stats --
-    val tPlan1 = System.nanoTime()
     // no distinct: dDrops only ever feeds anti-joins, which are
     // set-semantics regardless of right-side duplicates — the distinct
     // was one more AQE stage round-trip on the day's critical path
@@ -513,15 +495,15 @@ object IncrementalPipeline {
       st.packed.join(broadcast(affStrata), Seq("stratum"), "left_anti")
         .select(col("doc_id"), col("stratum"), col("n_tok"))
         .unionByName(
-          sect("  pack_offsets")(Curation.packByBudget(
+          Curation.packByBudget(
               survNew.join(broadcast(affStrata), Seq("stratum"), "left_semi"),
               col("stratum"), col("quality"), Seq(col("doc_id").asc),
               col("n_tok"), p.budgetPerStratum,
-              qualityBounds = Some((0.0, 1.0))))
+              qualityBounds = Some((0.0, 1.0)))
             .select(col("doc_id"), col("stratum"), col("n_tok"))))
 
     // -- split-stage rep extension: join the future launched above --
-    val repsSplitNew = repsSplitNewF.map(f => sect("extend_split")(f.get()))
+    val repsSplitNew = repsSplitNewF.map(_.get())
 
     // -- commit. r15 ordered state writes before index appends because
     //    Spark recaches by path on insert and every cached day frame
@@ -548,8 +530,6 @@ object IncrementalPipeline {
     //       invisible, so a crash anywhere in between is torn, not
     //       wrong.
     val vNew = st.ver + 1
-    if (debugTiming) System.err.println(
-      f"[incpipe] plan_build2    ${(System.nanoTime() - tPlan1) / 1e9}%.2fs")
     val ixNew = DedupIndex.frames(d2, col("doc_id"), col("text"), ix.meta)
     // keys append only when the table exists: a legacy (pre-keys) state
     // must stay on the fallback path — a keys table covering only the
@@ -569,15 +549,15 @@ object IncrementalPipeline {
     }
     val early = java.util.concurrent.CompletableFuture.runAsync(() =>
       runAll(Seq(
-        () => sect("  app_bands")(ixNew.bands.write.mode("append").parquet(s"$dir/index/bands")),
-        () => sect("  app_shingles")(ixNew.shingles.write.mode("append").parquet(s"$dir/index/shingles")),
-        () => sect("  app_hashes")(ixNew.hashes.write.mode("append").parquet(s"$dir/index/hashes"))) ++
+        () => ixNew.bands.write.mode("append").parquet(s"$dir/index/bands"),
+        () => ixNew.shingles.write.mode("append").parquet(s"$dir/index/shingles"),
+        () => ixNew.hashes.write.mode("append").parquet(s"$dir/index/hashes")) ++
         (if (haveKeys) Seq(
-          () => sect("  app_keys")(writeKeys(dir, keyedD, "append")))
+          () => writeKeys(dir, keyedD, "append"))
          else Nil) ++
         (if (haveDsir) Seq(
-          () => sect("  app_dsir")(DsirIndex.appendVersioned(s"$dir/dsir",
-            d2, col("doc_id"), col("text"), vNew)))
+          () => DsirIndex.appendVersioned(s"$dir/dsir",
+            d2, col("doc_id"), col("text"), vNew))
          else Nil)))
     // If materialize/state_write throws, the `early` append jobs must
     // NOT be left running while the caller unwinds: a retry of
@@ -593,19 +573,17 @@ object IncrementalPipeline {
       // rows: fusing the spine into the six concurrent writes convoys
       // them on block locks over the deep cold chains — day-1 walls
       // 15-17s vs ~10s with the spine. The spine stays.)
-      sect("materialize") {
-        packedNew.count()
-        repsSplitNew.foreach(_.count())
-      }
-      sect("state_write")(writeTables(dir, vNew, repsNew, repsSplitNew,
-        baseCounts.unionByName(deltaCounts), fullBl, survNew, packedNew))
+      packedNew.count()
+      repsSplitNew.foreach(_.count())
+      writeTables(dir, vNew, repsNew, repsSplitNew,
+        baseCounts.unionByName(deltaCounts), fullBl, survNew, packedNew)
     } catch {
       case e: Throwable =>
         try early.get() catch { case _: Throwable => }
         throw e
     }
-    sect("index_append")(early.get())
-    sect("meta_commit")(commitMeta(spark, dir, vNew, idr.getLong(1), p))
+    early.get()
+    commitMeta(spark, dir, vNew, idr.getLong(1), p)
 
     // -- the returned output re-roots on the JUST-COMMITTED state: its
     //    lineage reads only v<N> paths (never appended), so the index
@@ -750,8 +728,8 @@ object IncrementalPipeline {
                           contam: DataFrame, blocklist: DataFrame,
                           survivors: DataFrame, packed: DataFrame): Unit = {
     val v = s"$dir/v$ver"
-    def w(df: DataFrame, name: String): Unit = sect(s"  w_$name")(
-      df.coalesce(StateWriteTasks).write.mode("overwrite").parquet(s"$v/$name"))
+    def w(df: DataFrame, name: String): Unit =
+      df.coalesce(StateWriteTasks).write.mode("overwrite").parquet(s"$v/$name")
     runAll(Seq(
       () => w(reps, "reps"),
       () => repsSplit.foreach(w(_, "reps_split")),

@@ -9,17 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * long-lived session cannot change under a caller because of its
   * process environment. The scan covers every `.scala` file under the
   * library packages below and fails on any line reading `sys.env` or
-  * `System.getenv`. The one exception is `IncrementalPipeline`'s
-  * `SPARK_GRAFT_INCPIPE_DEBUG` timing switch, which is due to move
-  * onto the shared trace layer (ROADMAP item 1). The reproducer mains
-  * and the query registry sit outside the scan: their knobs
-  * (`SPARK_GRAFT_ONLY`, `SPARK_GRAFT_POOL`, ...) are how they are run.
+  * `System.getenv`, with no exceptions. The reproducer mains and the
+  * query registry sit outside the scan: their knobs
+  * (`SPARK_GRAFT_ONLY`, `SPARK_GRAFT_POOL`, ...) are how they are run,
+  * and `graft.Bench`'s set is pinned below.
   */
 class EnvKnobSpec extends AnyFunSuite {
 
   private val Packages = Seq("api", "operators", "functions", "expressions", "plans", "streaming")
   private val EnvRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
-  private val Allowed = Set(("IncrementalPipeline.scala", "SPARK_GRAFT_INCPIPE_DEBUG"))
 
   test("library packages read no environment variables") {
     val dirs = Packages.map(p => MainsSpec.root.resolve(s"src/main/scala/graft/$p"))
@@ -29,9 +27,17 @@ class EnvKnobSpec extends AnyFunSuite {
       f <- Files.walk(d).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if EnvRead.findFirstIn(line).isDefined
-      if !Allowed.exists { case (file, name) =>
-        f.getFileName.toString == file && line.contains(name) }
     } yield s"${MainsSpec.root.relativize(f)}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, s"environment reads in library packages:\n${hits.mkString("\n")}")
+  }
+
+  test("graft.Bench reads exactly its seven knobs") {
+    val src = Files.readString(MainsSpec.root.resolve("src/main/scala/graft/Bench.scala"))
+    val named = """(?:\bsys\.env\b|\bSystem\.getenv\b)[.\w]*\(\s*"(\w+)"""".r
+      .findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(named.size == EnvRead.findAllMatchIn(src).size,
+      "every environment read in Bench.scala names its variable literally")
+    assert(named.toSet == Set("SF_DIR", "CPUS", "SHUFFLE", "ONLY", "POOL", "ITERS",
+      "RESET_ITERS").map("SPARK_GRAFT_" + _))
   }
 }

@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
-"""Interleaved same-window A/B bench of two git revisions (VERDICT r17
-task 1: attribute the r16->r17 reset-regime comparator movement).
+"""Interleaved same-window A/B bench of two git revisions.
 
 Builds each revision in its own git worktree, then alternates full
 Bench runs (warm + reset regimes) A,B,A,B,... in the same host window,
-settle-gated exactly like the probes. Per-query RESET walls are read
-from each run's BENCH_LOCAL.json (written into a per-run temp cwd so
-the repo's committed capture is never clobbered), and the artifact
-reports the per-query reset median ratio over the queries both
-revisions share — ~1.0 means the cross-round movement was the host
-window, not code.
+each launch settle-gated on the 1-min load average like the probes.
+Per-query RESET walls are read from each run's BENCH_LOCAL.json
+(written into a per-run temp cwd so the repo's committed capture is
+never clobbered), and the artifact reports the per-query reset median
+ratio over the queries both revisions share — ~1.0 means a movement
+between two captures was the host window, not code. Each run's raw
+totals, iteration walls and load stamps ride along; Bench reports no
+load-normalized figures.
 
 Usage: python3 tools/run_ab.py <revA> <revB> <labelA> <labelB> <out.json> [reps]
 
@@ -109,11 +110,9 @@ def main():
                 full = run_bench(f"{wt}/target/scala-2.13/classes", cwd)
             runs[f"{lab}_{rep}"] = {
                 "value": full["value"], "value_reset": full["value_reset"],
-                "value_norm": full.get("value_norm"),
-                "value_reset_norm": full.get("value_reset_norm"),
                 "iter_walls": full.get("iter_walls"),
                 "reset_walls": full.get("reset_walls"),
-                "sentinel": full.get("sentinel"), "load": full.get("load"),
+                "load": full.get("load"),
             }
             per_q[lab].append(reset_mins(full))
             print(f"   warm {full['value']:.2f}s reset {full['value_reset']:.2f}s",
