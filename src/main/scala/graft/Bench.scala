@@ -75,8 +75,8 @@ object Bench {
     try selected.get("s04_knn_ivf").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => }
 
-    // Throughput-style run: queries submitted concurrently (Spark's
-    // scheduler interleaves jobs across the thread pool), total = wall
+    // Throughput-style run: up to SPARK_GRAFT_POOL queries run at once
+    // (Spark's scheduler interleaves their jobs), total = wall
     // clock. Per-query numbers are wall times under concurrency.
     // FAIR scheduling (set on the context above) + a modest pool keep
     // multi-job queries (window chains, IVF training) from starving
@@ -98,36 +98,29 @@ object Bench {
     // one fresh pipeline into EVERY iteration and walls the suite at
     // 20.2 s vs 14.3 s, while changing no query's result.)
     def oneIteration(): (Double, Map[String, (Double, Option[String])]) = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
       val wall0 = System.nanoTime()
       // Submission order: plain Map order. Measured alternatives —
       // longest-first (all heavy multi-job queries contending from t=0)
       // and heavy/light interleave — were both slower AND unstable
       // (14-46 s walls vs 8.5-9.5 s here); the hash order's accidental
       // mix beats any grouping of the heavy queries.
-      val futures = selected.toSeq.map { case (name, fn) =>
-        name -> pool.submit(new java.util.concurrent.Callable[(Double, Option[String])] {
-          def call(): (Double, Option[String]) = {
-            val t0 = System.nanoTime()
-            // Materialize EVERY output row of the plan as planned:
-            // `df.count()` stacks an Aggregate on top and Catalyst then
-            // prunes every column the count doesn't need — a
-            // projection-final query (t17 redaction, t22 reconstruction)
-            // degenerates to little more than a parquet row-count and
-            // its per-row cost vanishes from the bench (measured: t22
-            // hides 5x at sf0.1, t21 2.2x). toRdd.count() runs the plan
-            // with its full output schema — rows are produced and
-            // discarded executor-side, nothing ships to the driver —
-            // and costs agg/join-final queries nothing (their output is
-            // tiny; measured 0.9-1.1x).
-            val err = try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
-                      catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-            ((System.nanoTime() - t0) / 1e9, err)
-          }
-        })
-      }
-      val results = futures.map { case (n, f) => n -> f.get() }
-      pool.shutdown()
+      val results = graft.operators.Par.all(selected.toSeq.map { case (name, fn) => () => {
+        val t0 = System.nanoTime()
+        // Materialize EVERY output row of the plan as planned:
+        // `df.count()` stacks an Aggregate on top and Catalyst then
+        // prunes every column the count doesn't need — a
+        // projection-final query (t17 redaction, t22 reconstruction)
+        // degenerates to little more than a parquet row-count and
+        // its per-row cost vanishes from the bench (measured: t22
+        // hides 5x at sf0.1, t21 2.2x). toRdd.count() runs the plan
+        // with its full output schema — rows are produced and
+        // discarded executor-side, nothing ships to the driver —
+        // and costs agg/join-final queries nothing (their output is
+        // tiny; measured 0.9-1.1x).
+        val err = try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
+                  catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+        name -> ((System.nanoTime() - t0) / 1e9, err)
+      }}, poolSize)
       ((System.nanoTime() - wall0) / 1e9, results.toMap)
     }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Readers
 
@@ -47,8 +47,10 @@ object Tables {
     * generations: parquet TIMESTAMP(NANOS) (which Spark only reads as a
     * long via legacy nanosAsLong; without it the read fails with
     * `PARQUET_TYPE_ILLEGAL`) and plain TIMESTAMP(MICROS) (read natively
-    * as a timestamp). The flag is set only when the plain read fails:
-    * every [[graft.operators.Readers.parquet]] schema entry is
+    * as a timestamp). The flag is set before the first read, and only
+    * when a data file's footer annotates `ts` as NANOS (read on the
+    * driver, so a NANOS table costs no failing job): every
+    * [[graft.operators.Readers.parquet]] schema entry is
     * fingerprinted on the session's parquet confs, so setting it on
     * every session would make each memoized path infer its footer
     * again. Adapt on the observed type and expose BOTH `ts_ns: LONG`
@@ -65,13 +67,10 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
     val path = s"$dir/events.parquet"
-    val raw =
-      try Readers.parquet(spark, path)
-      catch {
-        case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          Readers.parquet(spark, path)
-      }
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    if (!spark.conf.getOption(nanosAsLong).contains("true") && tsIsNanos(spark, path))
+      spark.conf.set(nanosAsLong, "true")
+    val raw = Readers.parquet(spark, path)
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) read as epoch-ns long
         raw.withColumn("ts_ns", col("ts"))
@@ -83,6 +82,33 @@ object Tables {
         raw.withColumn("ts_ns", unix_micros(col("ts")) * lit(1000L))
       case other =>
         throw new IllegalStateException(s"events.ts: unsupported type $other")
+    }
+  }
+
+  /** Whether `ts` is annotated TIMESTAMP(NANOS) in the footer of one of
+    * the table's data files (the table itself when it is a single
+    * file). Read on the driver, so it starts no Spark job. */
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // listStatus of a file is that file
+    val files = if (fs.exists(root)) fs.listStatus(root) else Array.empty[FileStatus]
+    files.find { st =>
+      val n = st.getPath.getName
+      st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+    }.exists { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      schema.containsField("ts") &&
+        (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
     }
   }
 

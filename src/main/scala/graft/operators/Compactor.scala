@@ -1515,37 +1515,15 @@ object Compactor {
       (man.getLong(1), man.getLong(0))
     }
 
-    // dirty partitions rewrite CONCURRENTLY on a bounded driver pool:
-    // each rewrite is ~5 small driver-blocking jobs (count, quantiles,
+    // dirty partitions rewrite CONCURRENTLY, at most 4 at once: each
+    // rewrite is ~5 small driver-blocking jobs (count, quantiles,
     // listing, write, verify), so a daily-partition lake with many
-    // small dirty dirs would otherwise idle the cluster between jobs —
-    // overlapping partitions keeps it saturated while staging dirs and
-    // swaps stay strictly per-partition (no shared mutable state; a
-    // failure aborts the batch only after EVERY submitted partition has
-    // fully drained — success or failure — and the committed ones are
-    // absorbed by the next idempotent run)
+    // small dirty dirs would otherwise idle the cluster between jobs.
+    // Staging dirs and swaps stay strictly per-partition (no shared
+    // mutable state); partitions committed before a failure are
+    // absorbed by the next idempotent run.
     val dirtyResults: Map[String, (Long, Long)] =
-      if (dirty.isEmpty) Map.empty
-      else if (dirty.size == 1) Map(dirty.head._1 -> rewriteOne(dirty.head._1))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(4, dirty.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val futs = dirty.map { case (rel, _) =>
-            scala.concurrent.Future(rel -> rewriteOne(rel)) }
-          // Await EVERY future individually — Future.sequence is
-          // fail-fast, and rethrowing while sibling rewrites are still
-          // mid-swap (or queued ones still start on the live pool)
-          // would hand a retrying caller a lake with partitions
-          // transiently retired and staging dirs it would collide with
-          val done = futs.map(f => scala.util.Try(scala.concurrent.Await
-            .result(f, scala.concurrent.duration.Duration.Inf)))
-          done.foreach(t => if (t.isFailure) throw t.failed.get)
-          done.map(_.get).toMap
-        } finally pool.shutdown()
-      }
+      Par.all(dirty.map { case (rel, _) => () => rel -> rewriteOne(rel) }, width = 4).toMap
 
     val report = byPart.map { case (rel, files) =>
       dirtyResults.get(rel) match {

@@ -125,87 +125,89 @@ object IncrementalPipeline {
     val s2 = Caches.track(
       Dedup.exactFirst(s1, Seq(md5(col("text"))), Seq(col("doc_id").asc))
         .select(col("doc_id"), col("text")))
-    // the id horizon is needed only by the meta commit at the very end
-    // — one corpus-scan job, zero dependencies on anything below: run
-    // it async so it back-fills the cluster stages instead of holding
-    // the serial chain (measured 0.17-0.22 s of bs_maxid)
-    val maxIdF = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => docs.agg(max(col("doc_id"))).collect()(0).getLong(0))
-    val pairs = Dedup.jaccardPairs(s2, col("doc_id"), col("text"),
-      p.shingleN, p.k, p.bands, p.minSim)
-    // split-threshold clustering CONCURRENTLY with the drop-threshold
-    // one (the runIncremental repsSplitNewF lesson applied to
-    // bootstrap): clusters() is eager, the two share the cached
-    // shingle/candidate/scored-pair memos (block locks serialize
-    // first-touch), and the split map is not needed until the state
-    // write — serially it paid a full extra clusters() on the
-    // bootstrap critical path (measured bs_cc_split 0.44-0.70 s)
-    val repsSplitF = p.split.map { cfg =>
-      java.util.concurrent.CompletableFuture.supplyAsync(() => {
-        val pairs3 = Dedup.jaccardPairs(s2, col("doc_id"), col("text"),
-          p.shingleN, p.k, p.bands, cfg.minSim)
-        Dedup.clusters(pairs3, col("doc_a"), col("doc_b"))
-          .select(col("doc_id"), col("cluster_rep").as("rep"))
-      })
+    val (maxId, ixMeta) = Par.scope { par =>
+      // the id horizon is needed only by the meta commit at the very end
+      // — one corpus-scan job, zero dependencies on anything below: run
+      // it on a fork so it back-fills the cluster stages instead of
+      // holding the serial chain (measured 0.17-0.22 s of bs_maxid)
+      val maxIdF = par.fork(docs.agg(max(col("doc_id"))).collect()(0).getLong(0))
+      val pairs = Dedup.jaccardPairs(s2, col("doc_id"), col("text"),
+        p.shingleN, p.k, p.bands, p.minSim)
+      // split-threshold clustering CONCURRENTLY with the drop-threshold
+      // one (the runIncremental repsSplitNewF lesson applied to
+      // bootstrap): clusters() is eager, the two share the cached
+      // shingle/candidate/scored-pair memos (block locks serialize
+      // first-touch), and the split map is not needed until the state
+      // write — serially it paid a full extra clusters() on the
+      // bootstrap critical path (measured bs_cc_split 0.44-0.70 s)
+      val repsSplitF = p.split.map { cfg =>
+        par.fork {
+          val pairs3 = Dedup.jaccardPairs(s2, col("doc_id"), col("text"),
+            p.shingleN, p.k, p.bands, cfg.minSim)
+          Dedup.clusters(pairs3, col("doc_a"), col("doc_b"))
+            .select(col("doc_id"), col("cluster_rep").as("rep"))
+        }
+      }
+      val reps = Dedup.clusters(pairs, col("doc_a"), col("doc_b"))
+        .select(col("doc_id"), col("cluster_rep").as("rep"))
+      // counts at minHits=1: the state keeps EVERY non-bench doc's hit
+      // count so day-N retro contamination can ADD new-key hits to it
+      val counts = Dedup.decontaminate(s2, col("doc_id"), col("text"),
+        benchPred, p.shingleN, minHits = 1L)
+      val drops = reps.filter(col("doc_id") =!= col("rep")).select("doc_id")
+        .unionByName(counts.filter(col("n_hits") >= p.contamMinHits).select("doc_id"))
+        .distinct()
+      val s5 = s2.join(drops, Seq("doc_id"), "left_anti")
+        .withColumn("text", Redact.redact(col("text")))
+      // cached: three consumers scan the redact+tokenize chain — the
+      // pack's eager offsets pass (populates the cache), the survivors
+      // state write, and the packed write racing it in the fan-out below
+      val surv = Caches.track(CorpusPipeline.packStats(s5))
+      val packed = Curation.packByBudget(surv, col("stratum"), col("quality"),
+          Seq(col("doc_id").asc), col("n_tok"), p.budgetPerStratum,
+          qualityBounds = Some((0.0, 1.0)))
+        .select(col("doc_id"), col("stratum"), col("n_tok"))
+      val repsSplit = repsSplitF.map(_.get())
+      val keyed = Dedup.shingleKeys(
+        Dedup.shingleTable(s2, col("doc_id"), col("text"), p.shingleN))
+      val blocklist = keyed.filter(benchPred).select("_k").distinct()
+      val maxId = maxIdF.get()
+      // every write below reads only the docs input (through the cached
+      // post-exact s2), so the index tables, the inverted keys, and the
+      // six version tables fan out as ONE concurrent batch; the metas
+      // land strictly after (version meta = the commit point)
+      val ixB = DedupIndex.frames(s2, col("doc_id"), col("text"),
+        DedupIndex.Meta(p.shingleN, p.k, p.bands))
+      // ONE spine action before the fan-out (the runIncremental lesson
+      // applied to bootstrap): the survivors and packed writes both read
+      // the surv cache, and without a spine the two concurrent write
+      // jobs race to BUILD it — convoying on block locks over the cold
+      // redact+tokenize chain (measured: bs_state_writes 2.6 s -> ~1 s
+      // with the spine at sf0.1). One count() materializes it in
+      // dependency order; every fan-out job below then reads caches.
+      // (Measured both ways in r20: counting PACKED instead — offsets +
+      // window on top — SERIALIZES pack work the concurrent batch used
+      // to overlap; spine 1.0 -> 2.2 s. surv stays the spine.)
+      surv.count()
+      // Index tables, inverted keys, DSIR sidecar, and the six version
+      // tables are ALL independent writes reading only cached frames —
+      // one concurrent batch instead of two sequential ones (wall = the
+      // slowest write, not the sum of the two batches' slowest). The
+      // metas land strictly after: DedupIndex meta after its tables,
+      // version meta (the commit point) last of all, so a crash anywhere
+      // in the batch leaves a torn, invisible state exactly as before.
+      Par.all(Seq(
+        () => ixB.hashes.write.mode("overwrite").parquet(s"$dir/index/hashes"),
+        () => ixB.bands.write.mode("overwrite").parquet(s"$dir/index/bands"),
+        () => ixB.shingles.write.mode("overwrite").parquet(s"$dir/index/shingles"),
+        () => writeKeys(dir, keyed, "overwrite"),
+        () => writeTables(dir, 1, reps, repsSplit, counts, blocklist,
+          surv, packed)) ++
+        dsirBuckets.map(b => () => DsirIndex.writeVersioned(s"$dir/dsir",
+          s2, col("doc_id"), col("text"), b, ver = 1)).toSeq)
+      (maxId, ixB.meta)
     }
-    val reps = Dedup.clusters(pairs, col("doc_a"), col("doc_b"))
-      .select(col("doc_id"), col("cluster_rep").as("rep"))
-    // counts at minHits=1: the state keeps EVERY non-bench doc's hit
-    // count so day-N retro contamination can ADD new-key hits to it
-    val counts = Dedup.decontaminate(s2, col("doc_id"), col("text"),
-      benchPred, p.shingleN, minHits = 1L)
-    val drops = reps.filter(col("doc_id") =!= col("rep")).select("doc_id")
-      .unionByName(counts.filter(col("n_hits") >= p.contamMinHits).select("doc_id"))
-      .distinct()
-    val s5 = s2.join(drops, Seq("doc_id"), "left_anti")
-      .withColumn("text", Redact.redact(col("text")))
-    // cached: three consumers scan the redact+tokenize chain — the
-    // pack's eager offsets pass (populates the cache), the survivors
-    // state write, and the packed write racing it in the fan-out below
-    val surv = Caches.track(CorpusPipeline.packStats(s5))
-    val packed = Curation.packByBudget(surv, col("stratum"), col("quality"),
-        Seq(col("doc_id").asc), col("n_tok"), p.budgetPerStratum,
-        qualityBounds = Some((0.0, 1.0)))
-      .select(col("doc_id"), col("stratum"), col("n_tok"))
-    val repsSplit = repsSplitF.map(_.get())
-    val keyed = Dedup.shingleKeys(
-      Dedup.shingleTable(s2, col("doc_id"), col("text"), p.shingleN))
-    val blocklist = keyed.filter(benchPred).select("_k").distinct()
-    val maxId = maxIdF.get()
-    // every write below reads only the docs input (through the cached
-    // post-exact s2), so the index tables, the inverted keys, and the
-    // six version tables fan out as ONE concurrent batch; the metas
-    // land strictly after (version meta = the commit point)
-    val ixB = DedupIndex.frames(s2, col("doc_id"), col("text"),
-      DedupIndex.Meta(p.shingleN, p.k, p.bands))
-    // ONE spine action before the fan-out (the runIncremental lesson
-    // applied to bootstrap): the survivors and packed writes both read
-    // the surv cache, and without a spine the two concurrent write
-    // jobs race to BUILD it — convoying on block locks over the cold
-    // redact+tokenize chain (measured: bs_state_writes 2.6 s -> ~1 s
-    // with the spine at sf0.1). One count() materializes it in
-    // dependency order; every fan-out job below then reads caches.
-    // (Measured both ways in r20: counting PACKED instead — offsets +
-    // window on top — SERIALIZES pack work the concurrent batch used
-    // to overlap; spine 1.0 -> 2.2 s. surv stays the spine.)
-    surv.count()
-    // Index tables, inverted keys, DSIR sidecar, and the six version
-    // tables are ALL independent writes reading only cached frames —
-    // one concurrent batch instead of two sequential ones (wall = the
-    // slowest write, not the sum of the two batches' slowest). The
-    // metas land strictly after: DedupIndex meta after its tables,
-    // version meta (the commit point) last of all, so a crash anywhere
-    // in the batch leaves a torn, invisible state exactly as before.
-    runAll(Seq(
-      () => ixB.hashes.write.mode("overwrite").parquet(s"$dir/index/hashes"),
-      () => ixB.bands.write.mode("overwrite").parquet(s"$dir/index/bands"),
-      () => ixB.shingles.write.mode("overwrite").parquet(s"$dir/index/shingles"),
-      () => writeKeys(dir, keyed, "overwrite"),
-      () => writeTables(dir, 1, reps, repsSplit, counts, blocklist,
-        surv, packed)) ++
-      dsirBuckets.map(b => () => DsirIndex.writeVersioned(s"$dir/dsir",
-        s2, col("doc_id"), col("text"), b, ver = 1)).toSeq)
-    DedupIndex.writeMeta(spark, s"$dir/index", ixB.meta)
+    DedupIndex.writeMeta(spark, s"$dir/index", ixMeta)
     commitMeta(spark, dir, 1, maxId, p)
     // the returned output re-roots on the committed v1 state (the same
     // device as runIncremental's return): the caller's action re-reads
@@ -261,13 +263,12 @@ object IncrementalPipeline {
     // the three opening steps — state load (meta collect + 6 table
     // opens), index load (meta collect + 3 opens), and the delta id
     // range — have no mutual dependencies: overlap them
-    val ixF = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => DedupIndex.load(spark, s"$dir/index"))
-    val idrF = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => delta.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0))
-    val st = loadState(spark, dir)
+    val (st, ix, idr) = Par.scope { par =>
+      val ixF = par.fork(DedupIndex.load(spark, s"$dir/index"))
+      val idrF = par.fork(delta.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0))
+      (loadState(spark, dir), ixF.get(), idrF.get())
+    }
     val p = st.params
-    val ix = ixF.get()
     require(ix.meta.shingleN == p.shingleN && ix.meta.k == p.k &&
       ix.meta.bands == p.bands, s"state at $dir: index recipe ${ix.meta} " +
       s"does not match pinned params $p")
@@ -278,7 +279,6 @@ object IncrementalPipeline {
     val bandsB = ix.bands.filter(col("base_id") <= hz)
     val shB = ix.shingles.filter(col("base_id") <= hz)
 
-    val idr = idrF.get()
     if (idr.isNullAt(0)) {
       // no-op day: nothing to curate — re-emit the committed output
       // from the stored packed set, advance nothing
@@ -294,261 +294,259 @@ object IncrementalPipeline {
       "the keep-lowest-id dedup and min-id cluster reps are only " +
       "incremental under append-only ids")
 
-    // -- gate + exact dedup (vs index, then delta-internal min-id) --
-    // no distinct on the index hash side: left_anti is set-semantics
-    // regardless of build-side duplicates, and the distinct was a
-    // base-sized shuffle bought for nothing
-    val s1 = delta.filter(CorpusPipeline.gopherGate(col("text")))
-    // LOCAL CHECKPOINT, not cache (r16): d2 is the root of every day
-    // frame, and its lineage reads index/hashes (the exact-dedup
-    // anti-join). A cached d2 forces the hashes append to wait for
-    // every state write (Spark recaches by path on insert — the r15
-    // triple-pay); a checkpointed d2's plan roots at a LogicalRDD,
-    // path-FREE, so no append can ever invalidate the day's caches and
-    // the whole index fan-out overlaps the commit. Two further wins:
-    // the scan listing is frozen at load (appends are invisible to the
-    // captured physical plan even pre-materialization), and every
-    // downstream analyzed tree shallows by the full delta-pipeline
-    // subtree — measured ~1s off the day's driver-side plan
-    // construction alone. Lazy (eager=false): the first spine/append
-    // job to touch it materializes all partitions once.
-    val d2 = Dedup.exactFirst(
-        s1.withColumn("_h", md5(col("text")))
-          .join(hashes.select(col("_h")), Seq("_h"), "left_anti"),
-        Seq(col("_h")), Seq(col("doc_id").asc))
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint(false)
+    val vNew = st.ver + 1
+    Par.scope { par =>
+      // -- gate + exact dedup (vs index, then delta-internal min-id) --
+      // no distinct on the index hash side: left_anti is set-semantics
+      // regardless of build-side duplicates, and the distinct was a
+      // base-sized shuffle bought for nothing
+      val s1 = delta.filter(CorpusPipeline.gopherGate(col("text")))
+      // LOCAL CHECKPOINT, not cache (r16): d2 is the root of every day
+      // frame, and its lineage reads index/hashes (the exact-dedup
+      // anti-join). A cached d2 forces the hashes append to wait for
+      // every state write (Spark recaches by path on insert — the r15
+      // triple-pay); a checkpointed d2's plan roots at a LogicalRDD,
+      // path-FREE, so no append can ever invalidate the day's caches and
+      // the whole index fan-out overlaps the commit. Two further wins:
+      // the scan listing is frozen at load (appends are invisible to the
+      // captured physical plan even pre-materialization), and every
+      // downstream analyzed tree shallows by the full delta-pipeline
+      // subtree — measured ~1s off the day's driver-side plan
+      // construction alone. Lazy (eager=false): the first spine/append
+      // job to touch it materializes all partitions once.
+      val d2 = Dedup.exactFirst(
+          s1.withColumn("_h", md5(col("text")))
+            .join(hashes.select(col("_h")), Seq("_h"), "left_anti"),
+          Seq(col("_h")), Seq(col("doc_id").asc))
+        .select(col("doc_id"), col("text"))
+        .localCheckpoint(false)
 
-    // -- ONE shingle pass over the delta feeds everything below --
-    val shD = Dedup.shingleTable(d2, col("doc_id"), col("text"), p.shingleN)
-    val candX = Dedup.lshKeysFromShingles(shD, p.k, p.bands)
-      .join(bandsB, Seq("band_idx", "band_hash"))
-      .select(col("doc_id"), col("base_id")).distinct()
-    // raw-scored cross pairs, shared by the drop and split thresholds
-    // (the jaccardPairs memo plays the same role for delta-internal
-    // pairs); the d04/d05 rounding recipe keeps threshold semantics
-    // bit-identical to the monolithic pass
-    val crossScored = Caches.track(candX
-      .join(shD, "doc_id")
-      .join(shB.toDF("base_id", "sh_b"), "base_id")
-      .withColumn("_jac_raw", graft.expressions.NativeFns
-        .jaccard_sim_sorted(col("sh"), col("sh_b")))
-      .select(col("base_id"), col("doc_id").as("delta_id"), col("_jac_raw")))
-    def crossAt(t: Double): DataFrame = crossScored
-      .filter(col("_jac_raw") >= t - 1e-6)
-      .filter(round(col("_jac_raw"), 6) >= t)
-      .select(col("base_id"), col("delta_id"))
-    def deltaPairsAt(t: Double): DataFrame =
-      Dedup.jaccardPairs(d2, col("doc_id"), col("text"),
-        p.shingleN, p.k, p.bands, t).select(col("doc_a"), col("doc_b"))
+      // -- ONE shingle pass over the delta feeds everything below --
+      val shD = Dedup.shingleTable(d2, col("doc_id"), col("text"), p.shingleN)
+      val candX = Dedup.lshKeysFromShingles(shD, p.k, p.bands)
+        .join(bandsB, Seq("band_idx", "band_hash"))
+        .select(col("doc_id"), col("base_id")).distinct()
+      // raw-scored cross pairs, shared by the drop and split thresholds
+      // (the jaccardPairs memo plays the same role for delta-internal
+      // pairs); the d04/d05 rounding recipe keeps threshold semantics
+      // bit-identical to the monolithic pass
+      val crossScored = Caches.track(candX
+        .join(shD, "doc_id")
+        .join(shB.toDF("base_id", "sh_b"), "base_id")
+        .withColumn("_jac_raw", graft.expressions.NativeFns
+          .jaccard_sim_sorted(col("sh"), col("sh_b")))
+        .select(col("base_id"), col("doc_id").as("delta_id"), col("_jac_raw")))
+      def crossAt(t: Double): DataFrame = crossScored
+        .filter(col("_jac_raw") >= t - 1e-6)
+        .filter(round(col("_jac_raw"), 6) >= t)
+        .select(col("base_id"), col("delta_id"))
+      def deltaPairsAt(t: Double): DataFrame =
+        Dedup.jaccardPairs(d2, col("doc_id"), col("text"),
+          p.shingleN, p.k, p.bands, t).select(col("doc_a"), col("doc_b"))
 
-    // -- decontamination probe keys (declared FIRST: the tiny count
-    //    job overlaps extend_reps' driver collect below). Cached: the
-    //    frame feeds newKeys, deltaCounts, AND the day's keys append —
-    //    uncached, each consumer re-paid the explode+distinct shuffle --
-    val keyedD = Caches.track(Dedup.shingleKeys(shD))
-    val newKeys = Caches.track(keyedD.filter(benchPred).select("_k").distinct()
-      .join(st.blocklist, Seq("_k"), "left_anti"))
-    // ONE tiny job returns both the new-key count and the key-partition
-    // histogram the retro probe prunes by (<= KeyParts rows), and it is
-    // delta-sized but job-scheduling-bound at the day floor — run it
-    // concurrently with extend_reps' driver collect below (independent
-    // lineages; shared upstreams are cached and Spark's block locks
-    // serialize their materialization)
-    val newKeyPartsF = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => newKeys.groupBy(keyPart(col("_k")).as("_kp"))
+      // -- decontamination probe keys (declared FIRST: the tiny count
+      //    job overlaps extend_reps' driver collect below). Cached: the
+      //    frame feeds newKeys, deltaCounts, AND the day's keys append —
+      //    uncached, each consumer re-paid the explode+distinct shuffle --
+      val keyedD = Caches.track(Dedup.shingleKeys(shD))
+      val newKeys = Caches.track(keyedD.filter(benchPred).select("_k").distinct()
+        .join(st.blocklist, Seq("_k"), "left_anti"))
+      // ONE tiny job returns both the new-key count and the key-partition
+      // histogram the retro probe prunes by (<= KeyParts rows), and it is
+      // delta-sized but job-scheduling-bound at the day floor — run it
+      // concurrently with extend_reps' driver collect below (independent
+      // lineages; shared upstreams are cached and Spark's block locks
+      // serialize their materialization)
+      val newKeyPartsF = par.fork(newKeys.groupBy(keyPart(col("_k")).as("_kp"))
         .agg(count(lit(1)).as("n")).collect())
 
-    // -- per-row pack stats of the WHOLE post-exact delta, materialized
-    //    CONCURRENTLY with the rep extensions below. Stats are per-row
-    //    and drop-independent, so computing them before the drop set is
-    //    known wastes only the dropped fraction — post-exact-dedup days
-    //    are typically a few % near-dup/contam drops (the heavy
-    //    duplicate kill already happened in d2) — and it takes the
-    //    day's heaviest per-row pass (redact + tokenize + quality) off
-    //    the serial chain: it used to run inside packByBudget's eager
-    //    offsets job, strictly AFTER extend_reps (measured ~2.8s of a
-    //    ~10s day at 5k rows). dStats then anti-joins the NARROW stats
-    //    instead of re-deriving them from text.
-    val statsAll = Caches.track(CorpusPipeline.packStats(
-      d2.withColumn("text", Redact.redact(col("text")))))
-    val statsAllF = java.util.concurrent.CompletableFuture.runAsync(
-      () => statsAll.count())
+      // -- per-row pack stats of the WHOLE post-exact delta, materialized
+      //    CONCURRENTLY with the rep extensions below. Stats are per-row
+      //    and drop-independent, so computing them before the drop set is
+      //    known wastes only the dropped fraction — post-exact-dedup days
+      //    are typically a few % near-dup/contam drops (the heavy
+      //    duplicate kill already happened in d2) — and it takes the
+      //    day's heaviest per-row pass (redact + tokenize + quality) off
+      //    the serial chain: it used to run inside packByBudget's eager
+      //    offsets job, strictly AFTER extend_reps (measured ~2.8s of a
+      //    ~10s day at 5k rows). dStats then anti-joins the NARROW stats
+      //    instead of re-deriving them from text.
+      val statsAll = Caches.track(CorpusPipeline.packStats(
+        d2.withColumn("text", Redact.redact(col("text")))))
+      par.fork(statsAll.count())
 
-    // -- decontamination retro chain, fully ASYNC: key histogram ->
-    //    base-doc re-score against NEW keys — it depends only on keyedD
-    //    and the persisted state, never on the rep extensions, so the
-    //    whole chain (including the checkpoint's stage execution)
-    //    overlaps extend_reps' collect below. Skipped (st.contam
-    //    passthrough) when the delta adds no bench content.
-    //    Primary path: the persisted inverted `index/keys` table —
-    //    partition-pruned to the directories the new keys hash into,
-    //    broadcast-joined, distinct-ed (torn-append duplicates below
-    //    the horizon must count once). Legacy fallback (a pre-keys
-    //    state dir): re-derive keys by exploding the index's shingle
-    //    arrays — base-CPU-sized, kept only so old state loads; the
-    //    spec pins both paths to the same monolithic output.
-    val baseCountsF = java.util.concurrent.CompletableFuture.supplyAsync(() => {
-      val keyHist = newKeyPartsF.get()
-      val nNewKeys = keyHist.map(_.getLong(1)).sum
-      if (nNewKeys == 0) (st.contam, nNewKeys)
-      else {
-        val keysPath = new org.apache.hadoop.fs.Path(s"$dir/index/keys")
-        val fsK = keysPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val probeHits =
-          if (fsK.exists(keysPath)) {
-            val parts = keyHist.map(_.getLong(0)) // bounded: <= KeyParts entries
-            spark.read.parquet(keysPath.toString)
-              .filter(col("_kp").isin(parts.toIndexedSeq: _*))
-              .filter(col("doc_id") <= hz && !benchPred)
-              .join(broadcast(newKeys), "_k")
-              .select(col("doc_id"), col("_k")).distinct()
-              .groupBy(col("doc_id")).agg(count(lit(1)).as("_add"))
-          } else
-            shB.toDF("doc_id", "sh")
-              .filter(!benchPred)
-              .select(col("doc_id"), explode(col("sh")).as("_sh"))
-              .select(col("doc_id"), unhex(md5(col("_sh"))).as("_k"))
-              .join(broadcast(newKeys), "_k")
-              .distinct()
-              .groupBy(col("doc_id")).agg(count(lit(1)).as("_add"))
-        // checkpoint, not cache, for the same reason as d2: this is the
-        // only other day frame whose lineage reads an appended index
-        // path (index/keys — or index/shingles on the legacy fallback);
-        // truncating it makes the keys append safe to overlap the
-        // commit even on retro days. (AQE runs the non-result stages
-        // inside this call — which is exactly why it lives on this
-        // future instead of the serial chain.)
-        (st.contam
-          .join(probeHits, Seq("doc_id"), "full_outer")
-          .select(col("doc_id"),
-            (coalesce(col("n_hits"), lit(0L)) + coalesce(col("_add"), lit(0L)))
-              .as("n_hits"))
-          .localCheckpoint(false), nNewKeys)
+      // -- decontamination retro chain, fully ASYNC: key histogram ->
+      //    base-doc re-score against NEW keys — it depends only on keyedD
+      //    and the persisted state, never on the rep extensions, so the
+      //    whole chain (including the checkpoint's stage execution)
+      //    overlaps extend_reps' collect below. Skipped (st.contam
+      //    passthrough) when the delta adds no bench content.
+      //    Primary path: the persisted inverted `index/keys` table —
+      //    partition-pruned to the directories the new keys hash into,
+      //    broadcast-joined, distinct-ed (torn-append duplicates below
+      //    the horizon must count once). Legacy fallback (a pre-keys
+      //    state dir): re-derive keys by exploding the index's shingle
+      //    arrays — base-CPU-sized, kept only so old state loads; the
+      //    spec pins both paths to the same monolithic output.
+      val baseCountsF = par.fork {
+        val keyHist = newKeyPartsF.get()
+        val nNewKeys = keyHist.map(_.getLong(1)).sum
+        if (nNewKeys == 0) (st.contam, nNewKeys)
+        else {
+          val keysPath = new org.apache.hadoop.fs.Path(s"$dir/index/keys")
+          val fsK = keysPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val probeHits =
+            if (fsK.exists(keysPath)) {
+              val parts = keyHist.map(_.getLong(0)) // bounded: <= KeyParts entries
+              spark.read.parquet(keysPath.toString)
+                .filter(col("_kp").isin(parts.toIndexedSeq: _*))
+                .filter(col("doc_id") <= hz && !benchPred)
+                .join(broadcast(newKeys), "_k")
+                .select(col("doc_id"), col("_k")).distinct()
+                .groupBy(col("doc_id")).agg(count(lit(1)).as("_add"))
+            } else
+              shB.toDF("doc_id", "sh")
+                .filter(!benchPred)
+                .select(col("doc_id"), explode(col("sh")).as("_sh"))
+                .select(col("doc_id"), unhex(md5(col("_sh"))).as("_k"))
+                .join(broadcast(newKeys), "_k")
+                .distinct()
+                .groupBy(col("doc_id")).agg(count(lit(1)).as("_add"))
+          // checkpoint, not cache, for the same reason as d2: this is the
+          // only other day frame whose lineage reads an appended index
+          // path (index/keys — or index/shingles on the legacy fallback);
+          // truncating it makes the keys append safe to overlap the
+          // commit even on retro days. (AQE runs the non-result stages
+          // inside this call — which is exactly why it lives on this
+          // fork instead of the serial chain.)
+          (st.contam
+            .join(probeHits, Seq("doc_id"), "full_outer")
+            .select(col("doc_id"),
+              (coalesce(col("n_hits"), lit(0L)) + coalesce(col("_add"), lit(0L)))
+                .as("n_hits"))
+            .localCheckpoint(false), nNewKeys)
+        }
       }
-    })
-    val fullBl = st.blocklist.unionByName(newKeys)
-    val deltaCounts = Caches.track(keyedD.filter(!benchPred)
-      .join(broadcast(fullBl), "_k")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits")))
+      val fullBl = st.blocklist.unionByName(newKeys)
+      val deltaCounts = Caches.track(keyedD.filter(!benchPred)
+        .join(broadcast(fullBl), "_k")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits")))
 
-    // -- near-dup clusters extended at the drop threshold — and, when
-    //    the split stage is configured, at ITS threshold CONCURRENTLY:
-    //    extendReps is eager (componentsOf collects the contracted
-    //    edges), the two extensions share the cached crossScored /
-    //    shingle memos (block locks coordinate first-touch), and the
-    //    split map is not needed until the commit — running them
-    //    serially paid a second full extension on the split day's
-    //    critical path (p06 day measured +2.2 s over the plain day) --
-    val repsSplitNewF = p.split.map { cfg =>
-      java.util.concurrent.CompletableFuture.supplyAsync(() =>
-        Caches.track(extendReps(st.repsSplit.get,
+      // -- near-dup clusters extended at the drop threshold — and, when
+      //    the split stage is configured, at ITS threshold CONCURRENTLY:
+      //    extendReps is eager (componentsOf collects the contracted
+      //    edges), the two extensions share the cached crossScored /
+      //    shingle memos (block locks coordinate first-touch), and the
+      //    split map is not needed until the commit — running them
+      //    serially paid a second full extension on the split day's
+      //    critical path (p06 day measured +2.2 s over the plain day) --
+      val repsSplitNewF = p.split.map { cfg =>
+        par.fork(Caches.track(extendReps(st.repsSplit.get,
           crossAt(cfg.minSim), deltaPairsAt(cfg.minSim))))
-    }
-    val repsNew = Caches.track(
-      extendReps(st.reps, crossAt(p.minSim), deltaPairsAt(p.minSim)))
+      }
+      val repsNew = Caches.track(
+        extendReps(st.reps, crossAt(p.minSim), deltaPairsAt(p.minSim)))
 
-    val baseCounts = baseCountsF.get()._1
-    // warm the two caches at the BOTTOM of the spine's dependency chain
-    // while the driver is still building plans and launching the append
-    // fan-out — their stages are first on the spine's critical path,
-    // and they depend on nothing the spine hasn't already produced.
-    // Errors are swallowed: the spine recomputes and surfaces them.
-    val warmF = java.util.concurrent.CompletableFuture.runAsync(() =>
-      try { deltaCounts.count(); repsNew.count() }
-      catch { case _: Throwable => })
+      val baseCounts = baseCountsF.get()._1
+      // warm the two caches at the BOTTOM of the spine's dependency chain
+      // while the driver is still building plans and launching the append
+      // fan-out — their stages are first on the spine's critical path,
+      // and they depend on nothing the spine hasn't already produced.
+      // Errors are swallowed: the spine recomputes and surfaces them.
+      par.fork {
+        try { deltaCounts.count(); repsNew.count() }
+        catch { case _: Throwable => }
+      }
 
-    // -- delta survivors: drop rows from the precomputed stats --
-    // no distinct: dDrops only ever feeds anti-joins, which are
-    // set-semantics regardless of right-side duplicates — the distinct
-    // was one more AQE stage round-trip on the day's critical path
-    val dDrops = repsNew
-      .filter(col("doc_id") > hz && col("doc_id") =!= col("rep"))
-      .select("doc_id")
-      .unionByName(deltaCounts.filter(col("n_hits") >= p.contamMinHits)
-        .select("doc_id"))
-    // row-equal to packStats(d2 anti-join drops): packStats is per-row,
-    // so filtering before or after it is the same set of rows
-    val dStats = statsAll.join(dDrops, Seq("doc_id"), "left_anti")
+      // -- delta survivors: drop rows from the precomputed stats --
+      // no distinct: dDrops only ever feeds anti-joins, which are
+      // set-semantics regardless of right-side duplicates — the distinct
+      // was one more AQE stage round-trip on the day's critical path
+      val dDrops = repsNew
+        .filter(col("doc_id") > hz && col("doc_id") =!= col("rep"))
+        .select("doc_id")
+        .unionByName(deltaCounts.filter(col("n_hits") >= p.contamMinHits)
+          .select("doc_id"))
+      // row-equal to packStats(d2 anti-join drops): packStats is per-row,
+      // so filtering before or after it is the same set of rows
+      val dStats = statsAll.join(dDrops, Seq("doc_id"), "left_anti")
 
-    // -- base survivor retro-drops (cluster merges through a delta
-    //    bridge; threshold crossings from new blocklist keys) --
-    // same no-distinct argument: retro feeds one anti-join and one
-    // semi-join, both duplicate-tolerant
-    val retro = repsNew
-      .filter(col("doc_id") <= hz && col("doc_id") =!= col("rep"))
-      .select("doc_id")
-      .unionByName(baseCounts.filter(col("n_hits") >= p.contamMinHits)
-        .select("doc_id"))
-    val baseSurv = st.survivors.join(retro, Seq("doc_id"), "left_anti")
-    val survNew = Caches.track(baseSurv.unionByName(dStats))
+      // -- base survivor retro-drops (cluster merges through a delta
+      //    bridge; threshold crossings from new blocklist keys) --
+      // same no-distinct argument: retro feeds one anti-join and one
+      // semi-join, both duplicate-tolerant
+      val retro = repsNew
+        .filter(col("doc_id") <= hz && col("doc_id") =!= col("rep"))
+        .select("doc_id")
+        .unionByName(baseCounts.filter(col("n_hits") >= p.contamMinHits)
+          .select("doc_id"))
+      val baseSurv = st.survivors.join(retro, Seq("doc_id"), "left_anti")
+      val survNew = Caches.track(baseSurv.unionByName(dStats))
 
-    // -- re-pack AFFECTED strata only; untouched strata reuse the
-    //    stored packed rows verbatim --
-    // affected strata stay a LAZY broadcast set — a driver collect here
-    // cost a full extra materialization of the delta stats at the gate
-    val affStrata = dStats.select("stratum")
-      .unionByName(st.survivors.join(retro, Seq("doc_id"), "left_semi")
-        .select("stratum"))
-      .distinct()
-    val packedNew = Caches.track(
-      st.packed.join(broadcast(affStrata), Seq("stratum"), "left_anti")
-        .select(col("doc_id"), col("stratum"), col("n_tok"))
-        .unionByName(
-          Curation.packByBudget(
-              survNew.join(broadcast(affStrata), Seq("stratum"), "left_semi"),
-              col("stratum"), col("quality"), Seq(col("doc_id").asc),
-              col("n_tok"), p.budgetPerStratum,
-              qualityBounds = Some((0.0, 1.0)))
-            .select(col("doc_id"), col("stratum"), col("n_tok"))))
+      // -- re-pack AFFECTED strata only; untouched strata reuse the
+      //    stored packed rows verbatim --
+      // affected strata stay a LAZY broadcast set — a driver collect here
+      // cost a full extra materialization of the delta stats at the gate
+      val affStrata = dStats.select("stratum")
+        .unionByName(st.survivors.join(retro, Seq("doc_id"), "left_semi")
+          .select("stratum"))
+        .distinct()
+      val packedNew = Caches.track(
+        st.packed.join(broadcast(affStrata), Seq("stratum"), "left_anti")
+          .select(col("doc_id"), col("stratum"), col("n_tok"))
+          .unionByName(
+            Curation.packByBudget(
+                survNew.join(broadcast(affStrata), Seq("stratum"), "left_semi"),
+                col("stratum"), col("quality"), Seq(col("doc_id").asc),
+                col("n_tok"), p.budgetPerStratum,
+                qualityBounds = Some((0.0, 1.0)))
+              .select(col("doc_id"), col("stratum"), col("n_tok"))))
 
-    // -- split-stage rep extension: join the future launched above --
-    val repsSplitNew = repsSplitNewF.map(_.get())
+      // -- split-stage rep extension: join the fork launched above --
+      val repsSplitNew = repsSplitNewF.map(_.get())
 
-    // -- commit. r15 ordered state writes before index appends because
-    //    Spark recaches by path on insert and every cached day frame
-    //    then read the index files through d2's lineage. r16 removes
-    //    the hazard at the root instead: d2 and baseCounts — the ONLY
-    //    day frames whose lineage touches an appended path — are
-    //    locally checkpointed (plans root at LogicalRDD, path-free),
-    //    and crossScored/candX (the remaining index readers) are dead
-    //    after the EAGER rep extensions above. No live cached lineage
-    //    reads index/*, so ALL index appends fan out as one concurrent
-    //    batch overlapping the spine materialization and the state
-    //    writes. Correctness never depended on the order anyway: every
-    //    index consumer filters to the committed horizon, and scan
-    //    listings are frozen at load — the ordering was purely a
-    //    recompute-cost story. Still load-bearing:
-    //    1. ONE spine action before the state writes: packedNew's
-    //       lineage covers survNew -> retro -> repsNew/baseCounts and
-    //       dStats -> deltaCounts, so a single count() materializes
-    //       every cached state frame in dependency order instead of
-    //       letting concurrent write jobs race to build overlapping
-    //       uncached lineages.
-    //    2. Meta strictly LAST (the commit point): a version dir
-    //       without meta — like index rows beyond the horizon — is
-    //       invisible, so a crash anywhere in between is torn, not
-    //       wrong.
-    val vNew = st.ver + 1
-    val ixNew = DedupIndex.frames(d2, col("doc_id"), col("text"), ix.meta)
-    // keys append only when the table exists: a legacy (pre-keys) state
-    // must stay on the fallback path — a keys table covering only the
-    // deltas would hand the probe a partial corpus
-    val haveKeys = locally {
-      val kp = new org.apache.hadoop.fs.Path(s"$dir/index/keys")
-      kp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(kp)
-    }
-    // DSIR sidecar fold (bootstrap-time opt-in — see the bootstrap
-    // overload): the delta's features ride the same append fan-out,
-    // day-versioned so a crash-retry overwrites v<N> instead of
-    // double-appending, and invisible to [[dsirSelect]] until the
-    // meta commit below advances the version horizon
-    val haveDsir = locally {
-      val dp = new org.apache.hadoop.fs.Path(s"$dir/dsir/meta")
-      dp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dp)
-    }
-    val early = java.util.concurrent.CompletableFuture.runAsync(() =>
-      runAll(Seq(
+      // -- commit. r15 ordered state writes before index appends because
+      //    Spark recaches by path on insert and every cached day frame
+      //    then read the index files through d2's lineage. r16 removes
+      //    the hazard at the root instead: d2 and baseCounts — the ONLY
+      //    day frames whose lineage touches an appended path — are
+      //    locally checkpointed (plans root at LogicalRDD, path-free),
+      //    and crossScored/candX (the remaining index readers) are dead
+      //    after the EAGER rep extensions above. No live cached lineage
+      //    reads index/*, so ALL index appends fan out as one concurrent
+      //    batch overlapping the spine materialization and the state
+      //    writes. Correctness never depended on the order anyway: every
+      //    index consumer filters to the committed horizon, and scan
+      //    listings are frozen at load — the ordering was purely a
+      //    recompute-cost story. Still load-bearing:
+      //    1. ONE spine action before the state writes: packedNew's
+      //       lineage covers survNew -> retro -> repsNew/baseCounts and
+      //       dStats -> deltaCounts, so a single count() materializes
+      //       every cached state frame in dependency order instead of
+      //       letting concurrent write jobs race to build overlapping
+      //       uncached lineages.
+      //    2. Meta strictly LAST (the commit point): a version dir
+      //       without meta — like index rows beyond the horizon — is
+      //       invisible, so a crash anywhere in between is torn, not
+      //       wrong.
+      val ixNew = DedupIndex.frames(d2, col("doc_id"), col("text"), ix.meta)
+      // keys append only when the table exists: a legacy (pre-keys) state
+      // must stay on the fallback path — a keys table covering only the
+      // deltas would hand the probe a partial corpus
+      val haveKeys = locally {
+        val kp = new org.apache.hadoop.fs.Path(s"$dir/index/keys")
+        kp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(kp)
+      }
+      // DSIR sidecar fold (bootstrap-time opt-in — see the bootstrap
+      // overload): the delta's features ride the same append fan-out,
+      // day-versioned so a crash-retry overwrites v<N> instead of
+      // double-appending, and invisible to [[dsirSelect]] until the
+      // meta commit below advances the version horizon
+      val haveDsir = locally {
+        val dp = new org.apache.hadoop.fs.Path(s"$dir/dsir/meta")
+        dp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dp)
+      }
+      par.fork(Par.all(Seq(
         () => ixNew.bands.write.mode("append").parquet(s"$dir/index/bands"),
         () => ixNew.shingles.write.mode("append").parquet(s"$dir/index/shingles"),
         () => ixNew.hashes.write.mode("append").parquet(s"$dir/index/hashes")) ++
@@ -559,30 +557,19 @@ object IncrementalPipeline {
           () => DsirIndex.appendVersioned(s"$dir/dsir",
             d2, col("doc_id"), col("text"), vNew))
          else Nil)))
-    // If materialize/state_write throws, the `early` append jobs must
-    // NOT be left running while the caller unwinds: a retry of
-    // runIncremental would race the orphan's appends to the same index
-    // dirs (FileOutputCommitter _temporary collisions) — the
-    // single-writer contract broken from inside the pipeline (ADVICE
-    // r15). Await it before propagating; its own error is secondary.
-    try {
       // ONE spine action before the state writes: packedNew's lineage
       // covers survNew -> retro -> repsNew/baseCounts and dStats ->
       // deltaCounts, so a single count() materializes every cached
       // state frame in dependency order. (Measured both ways at 5k
       // rows: fusing the spine into the six concurrent writes convoys
       // them on block locks over the deep cold chains — day-1 walls
-      // 15-17s vs ~10s with the spine. The spine stays.)
+      // 15-17s vs ~10s with the spine. The spine stays.) The scope
+      // holds the commit until the appends above have finished too.
       packedNew.count()
       repsSplitNew.foreach(_.count())
       writeTables(dir, vNew, repsNew, repsSplitNew,
         baseCounts.unionByName(deltaCounts), fullBl, survNew, packedNew)
-    } catch {
-      case e: Throwable =>
-        try early.get() catch { case _: Throwable => }
-        throw e
     }
-    early.get()
     commitMeta(spark, dir, vNew, idr.getLong(1), p)
 
     // -- the returned output re-roots on the JUST-COMMITTED state: its
@@ -690,31 +677,6 @@ object IncrementalPipeline {
   // picks the highest committed N; the two newest versions are kept
   // (current + rollback), older ones deleted.
 
-  /** Run independent Spark write jobs concurrently on a bounded pool,
-    * awaiting EVERY future (a fail-fast await would leave stragglers
-    * racing the caller's next step — the maintainLake lesson).
-    */
-  private def runAll(jobs: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, jobs.size)))
-    try {
-      val fs = jobs.map(j => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = j()
-      }))
-      var firstErr: Option[Throwable] = None
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          if (firstErr.isEmpty) firstErr = Some(e.getCause) }
-      }
-      firstErr.foreach(throw _)
-    } finally pool.shutdown()
-  }
-
-  /** The six state tables are independent writes — run them as
-    * concurrent jobs on a bounded pool (the maintainLake recipe,
-    * awaiting EVERY future) instead of sequential job round-trips.
-    */
   /** Writer task count per state table. The tables are narrow survivor
     * metadata; at day scale a 32-task write is pure per-task overhead
     * (the KeyWriteTasks lesson). At cluster scale raise it once
@@ -730,7 +692,8 @@ object IncrementalPipeline {
     val v = s"$dir/v$ver"
     def w(df: DataFrame, name: String): Unit =
       df.coalesce(StateWriteTasks).write.mode("overwrite").parquet(s"$v/$name")
-    runAll(Seq(
+    // independent writes: one concurrent batch, not six job round-trips
+    Par.all(Seq(
       () => w(reps, "reps"),
       () => repsSplit.foreach(w(_, "reps_split")),
       () => w(contam, "contam"),
@@ -832,14 +795,14 @@ object IncrementalPipeline {
     // spark.read.parquet pays a driver-side listing + footer schema
     // read per table — ~50-100 ms each, serial = a visible slice of
     // the day floor. The six are independent: open them concurrently.
-    import java.util.concurrent.CompletableFuture
-    def rd(name: String) =
-      CompletableFuture.supplyAsync(() => spark.read.parquet(s"$v/$name"))
-    val (fReps, fContam, fBl, fSurv, fPacked) =
-      (rd("reps"), rd("contam"), rd("blocklist"), rd("survivors"), rd("packed"))
-    val fSplit = split.map(_ => rd("reps_split"))
-    State(m.getAs[Int]("ver"), m.getAs[Long]("max_id"), p,
-      fReps.get(), fSplit.map(_.get()),
-      fContam.get(), fBl.get(), fSurv.get(), fPacked.get())
+    Par.scope { par =>
+      def rd(name: String) = par.fork(spark.read.parquet(s"$v/$name"))
+      val (fReps, fContam, fBl, fSurv, fPacked) =
+        (rd("reps"), rd("contam"), rd("blocklist"), rd("survivors"), rd("packed"))
+      val fSplit = split.map(_ => rd("reps_split"))
+      State(m.getAs[Int]("ver"), m.getAs[Long]("max_id"), p,
+        fReps.get(), fSplit.map(_.get()),
+        fContam.get(), fBl.get(), fSurv.get(), fPacked.get())
+    }
   }
 }

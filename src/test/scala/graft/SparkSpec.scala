@@ -38,26 +38,39 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** Run `body` and count the Spark jobs it starts, for pinning a
-    * driver round-trip budget. */
-  def countJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+  /** Run `body` and return what it returned and the properties of every
+    * job started meanwhile, on any thread. The listener bus is drained
+    * before the jobs are read, so none is missed or counted late. */
+  def jobsDuring[T](body: => T): (T, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        props.add(Option(js.properties).getOrElse(new java.util.Properties))
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     try {
       val r = body
-      // listener bus is async: wait for the count to stabilize
-      var last = -1
-      var spins = 0
-      while (jobs.get() != last && spins < 20) {
-        last = jobs.get(); Thread.sleep(100); spins += 1
-      }
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+      org.apache.spark.ListenerDrain(sc)
+      (r, props.toArray(Array.empty[java.util.Properties]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Run `body` and count the Spark jobs it starts, for pinning a
+    * driver round-trip budget. The body runs under a job group of its
+    * own, and every job started meanwhile must carry it: a job that
+    * does not was started on a thread that lost the caller's local
+    * properties (or by something other than `body`). */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"countJobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "countJobs")
+    val (r, props) = try jobsDuring(body) finally sc.clearJobGroup()
+    val foreign = props.map(p => Option(p.getProperty("spark.jobGroup.id"))).filterNot(_.contains(group))
+    assert(foreign.isEmpty,
+      s"${foreign.size} of ${props.size} jobs ran outside the caller's job group: ${foreign.mkString(", ")}")
+    (r, props.size)
   }
 
   def tmpDir(prefix: String): java.io.File = {

@@ -6,11 +6,14 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd}
 
 import graft.operators.Readers
 
 /** `Tables.load(.., "events")` over both physical layouts of `events.ts`:
-  * TIMESTAMP(NANOS), which needs the legacy `nanosAsLong` read, and
+  * TIMESTAMP(NANOS), which needs the legacy `nanosAsLong` read (set
+  * from the footer, with no failing job), and
   * TIMESTAMP(MICROS), which must leave the session's parquet confs (and
   * so every memoized `Readers.parquet` schema) untouched.
   */
@@ -37,15 +40,26 @@ class TablesSpec extends SparkSpec {
     spark.conf.unset(NanosAsLong)
     val dir = tmpDir("events_nanos").toString
     writeEvents(dir, "NANOS", Seq(1L -> 1700000000123456789L, 2L -> 1700000001999999999L))
+    val failedJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobResult != JobSucceeded) failedJobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
       val rows = Tables.load(spark, dir, "events")
         .selectExpr("event_id", "ts_ns", "unix_micros(ts)").orderBy("event_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      ListenerDrain(spark.sparkContext)
+      assert(failedJobs.get == 0, s"the NANOS load ran ${failedJobs.get} failing jobs")
       assert(rows == Seq(
         (1L, 1700000000123456789L, 1700000000123456L),
         (2L, 1700000001999999999L, 1700000001999999L)))
       assert(spark.conf.getOption(NanosAsLong).contains("true"))
-    } finally spark.conf.unset(NanosAsLong)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(NanosAsLong)
+    }
   }
 
   test("a TIMESTAMP(MICROS) events load sets no parquet conf: memoized schemas stay current") {
