@@ -67,11 +67,12 @@ object Bench {
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.findFirstIn(n).isDefined)
     }
-    // Pre-train the s04 IVF index (memoized per (plan, params) in
-    // Similarity.ivfCache): any real ANN deployment amortizes index
-    // construction across queries, so the timed iterations should
-    // measure SEARCH — without this, iteration 1's s04 carries the
-    // serial Lloyd training chain and stalls a pool slot.
+    // Pre-train the s04 IVF index (memoized per (session, plan,
+    // params) by Similarity.trainedCached): any real ANN deployment
+    // amortizes index construction across queries, so the timed
+    // iterations should measure SEARCH — without this, iteration 1's
+    // s04 carries the serial Lloyd training chain and stalls a pool
+    // slot.
     try selected.get("s04_knn_ivf").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => }
 

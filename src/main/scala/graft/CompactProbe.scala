@@ -55,21 +55,15 @@ object CompactProbe {
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    // Distributed-listing task width (parallelPartitionDiscovery
-    // .parallelism). Measured on the 1M-file tree at local[32]:
-    // 10000 (default, ~one task/dir) vs 128 vs 32 are all ~12.2 s with
-    // a warm metadata cache — on local disk the listing is bounded by
-    // stat() throughput, not task scheduling, so the knob is a wash
-    // here (the 28.8 s in the committed artifact is the COLD-metadata
-    // cost). On an object store each list task is a paged LIST call
-    // and this knob IS the lever; it stays exposed for that path.
-    val listPar = sys.env.getOrElse("SPARK_GRAFT_LIST_PAR", "10000")
+    // Distributed-listing task width is Spark's own
+    // `spark.sql.sources.parallelPartitionDiscovery.parallelism`
+    // (default 10000), set through Spark's conf channel like any other
+    // conf; SURVEY.md records why it is a wash on local disk.
     implicit val spark: SparkSession = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.files.openCostInBytes", (64L * 1024).toString)
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", listPar)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -99,14 +93,6 @@ object CompactProbe {
     // A: listing + status scan only (column pruning keeps binaryFile
     // from opening any file for these three metadata columns)
     val (nFiles, tList) = timed(listing().count())
-    // SPARK_GRAFT_LIST_ONLY=1: emit just the listing measurement (for
-    // listing-parallelism experiments without paying the full probe)
-    if (sys.env.contains("SPARK_GRAFT_LIST_ONLY")) {
-      println(s"""{"metric":"smallfile_listing","n_files":$nFiles,""" +
-        s""""listing_sec":${math.round(tList * 100.0) / 100.0},"list_parallelism":$listPar}""")
-      spark.stop()
-      return
-    }
 
     // B: bundle assignment over a fresh listing (narrow prefix-sum;
     // includes its own re-list, so tAssign - tList ≈ pure assignment)

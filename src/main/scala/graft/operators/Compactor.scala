@@ -20,22 +20,28 @@ import scala.jdk.CollectionConverters._
   * stronger than the reference's sidecar files).
   *
   * == Scale design ==
-  * A directory pass already holds its file listing on the driver: the
-  * `binaryFile` source's file index. For a listing of at most
-  * `SingleBucketFiles` (2^18) files — every scheduled pass of hundreds
-  * of files — the bundle plan is computed right there
-  * ([[planBundles]]): drop empty files, sort by (mtime, path in
-  * Spark's UTF-8 byte order), exclusive running sum. The write joins
-  * the content scan to the plan as a broadcast local relation, and the
-  * manifest is a local relation, so planning costs no Spark job; at a
-  * scheduled collector's scale driver round-trips are the whole cost.
-  * The constant bounds what the driver holds: at most 262,144 narrow
-  * (path, mtime, size) rows.
+  * The directory passes ([[compactDirectory]], [[compactToText]],
+  * [[compactDirectoryIncremental]]) list, plan and write. The plan is
+  * one step that picks its planner once, on the files it plans: the
+  * listing for a full pass, the new-file delta for a fold. Either
+  * planner returns the same ids, the same `(path, bundle_id,
+  * record_bytes)` join side and the same manifest schema (CompactorSpec
+  * runs every pass through both), whatever the bucket count.
   *
-  * A larger listing is planned distributed ([[withBundleId]]). A naive
-  * `Window.orderBy(...)` with no partition key collapses to a single
-  * partition — fine at 60k rows, fatal at 100 TB. Instead we do a
-  * deterministic two-phase distributed prefix sum:
+  * At most `SingleBucketFiles` (2^18) files — every scheduled pass of
+  * hundreds of files — are planned on the driver ([[planBundles]]):
+  * drop empty files, sort by (mtime, path in Spark's UTF-8 byte order),
+  * exclusive running sum, over the `binaryFile` source's own file index.
+  * The plan and the manifest are local relations, the plan broadcast to
+  * the content scan, so planning costs no Spark job; at a scheduled
+  * collector's scale driver round-trips are the whole cost. The
+  * constant bounds what the driver holds: 262,144 narrow (path, mtime,
+  * size) rows.
+  *
+  * More files are planned by [[withBundleId]] and pinned with a
+  * `localCheckpoint`. A naive `Window.orderBy(...)` with no partition
+  * key collapses to a single partition — fine at 60k rows, fatal at
+  * 100 TB. Instead a deterministic two-phase distributed prefix sum:
   *
   *  1. bucket rows by *range* of the primary order key, with boundaries
   *     from `approxQuantile` (deterministic Greenwald-Khanna sketch, one
@@ -48,28 +54,18 @@ import scala.jdk.CollectionConverters._
   *     task ever sorts more than one bucket.
   *
   * `offset(bucket) + local_prefix == global_prefix` for ANY bucket
-  * boundaries, so results do not depend on the quantile sketch accuracy —
-  * only balance does. Everything is expressible as one SQL window in the
-  * DuckDB oracle. The three phases live in [[PrefixSum.runningTotal]],
-  * shared verbatim with [[Curation.packByBudget]] (stratum = constant
-  * here).
-  *
-  * Bucket count: the full passes over a larger listing use the
-  * `spark.sql.shuffle.partitions` default, as [[withBundleId]] called
-  * directly does; the incremental pass over one runs a delta of at most
-  * 2^18 new files as ONE bucket, which needs none of phases 1-2.
-  * Assignment depends neither on the bucket count nor on where it is
-  * planned: the driver plan gives [[withBundleId]]'s ids (CompactorSpec
-  * checks both).
+  * boundaries (the `spark.sql.shuffle.partitions` default here), so
+  * results do not depend on the quantile sketch accuracy — only balance
+  * does. Everything is expressible as one SQL window in the DuckDB
+  * oracle. The three phases live in [[PrefixSum.runningTotal]], shared
+  * verbatim with [[Curation.packByBudget]] (stratum = constant here).
   */
 object Compactor {
 
   /** Columns appended by [[withBundleId]]. */
   val BundleCol = "bundle_id"
 
-  /** Largest listing the directory passes plan on the driver (and the
-    * largest incremental delta a distributed plan runs as one
-    * prefix-sum bucket). */
+  /** Most files a directory pass plans on the driver. */
   private val SingleBucketFiles: Long = 1L << 18
 
   /** Assign `bundle_id = floor(exclusive_prefix_sum(size) / targetBytes)`
@@ -197,6 +193,82 @@ object Compactor {
         min(keyCol).as("first_key"),
         max(keyCol).as("last_key"))
 
+  /** A directory pass's planner: every public pass plans `BySize` (see
+    * the object doc); tests pin either side. */
+  private[graft] sealed trait PlanSide
+  private[graft] object PlanSide {
+    case object BySize extends PlanSide
+    case object Driver extends PlanSide
+    case object Distributed extends PlanSide
+  }
+
+  /** A directory pass's bundle plan: the write's join side, the
+    * manifest and, for a fold, the delta's max path (Spark's string
+    * order) and oldest mtime (None: nothing new, or a full pass). */
+  private final case class BundlePlan(assign: DataFrame, manifest: DataFrame,
+                                      delta: Option[(String, java.sql.Timestamp)])
+
+  /** Plan the non-empty files of `files`' listing (a full pass) or,
+    * given the lake's path scan `done`, those the lake does not hold (a
+    * fold), with ids from `firstBundle`. The one place a planner is
+    * chosen. */
+  private def planPass(files: DataFrame, done: Option[DataFrame], targetBytes: Long,
+                       firstBundle: Long, side: PlanSide)
+                      (implicit spark: org.apache.spark.sql.SparkSession): BundlePlan = {
+    def onDriver(nFiles: Long): Boolean = side match {
+      case PlanSide.BySize => nFiles <= SingleBucketFiles
+      case _ => side == PlanSide.Driver
+    }
+    def driverPlan(fresh: Seq[Listed]): BundlePlan = {
+      val plan = planBundles(fresh, targetBytes, firstBundle)
+      BundlePlan(planFrame(plan), localManifest(plan),
+        if (done.isEmpty || plan.isEmpty) None
+        else Some((sparkMax(plan.map(_.file.path)).get,
+          new java.sql.Timestamp(plan.iterator.map(_.file.mtime).min))))
+    }
+    def distributedPlan(rows: DataFrame, delta: Option[(String, java.sql.Timestamp)]): BundlePlan = {
+      // Pinned: the write and the manifest both read it, a fold's
+      // manifest after its append. A localCheckpoint, not a Caches
+      // entry, which would stay referenced until Caches.release().
+      val assign = withBundleId(rows, col("modificationTime"), Seq(col("path")),
+          col("length"), targetBytes)
+        .select(col("path"), (col(BundleCol) + firstBundle).as(BundleCol), col("record_bytes"))
+        .localCheckpoint()
+      BundlePlan(assign, manifest(assign, col("path")), delta)
+    }
+    // path, mtime and size come from file status: no file is opened
+    val listing = listed(files).filter(_.length > 0)
+    val rows = files.select(col("path"), col("modificationTime"), col("length"))
+      .filter(col("length") > 0)
+    done match {
+      case None if onDriver(listing.length) => driverPlan(listing)
+      case None => distributedPlan(rows, None)
+      case Some(lake) if onDriver(listing.length) =>
+        // the delta: listed files whose path the lake does not hold. The
+        // lake's path scan is semi-joined to the broadcast listing, so
+        // at most the listing comes back; on the driver, the append
+        // cannot change the delta (a lazy plan would re-read the lake).
+        val seen = lake
+          .join(broadcast(local(listing.map(f => Row(f.path)),
+            StructType(Seq(StructField("path", StringType, nullable = false))))),
+            Seq("path"), "left_semi")
+          .collect().iterator.map(_.getString(0)).toSet
+        driverPlan(listing.filterNot(f => seen(f.path)))
+      case Some(lake) =>
+        // The delta, evaluated ONCE (an eager localCheckpoint): its
+        // lineage reads the lake, so a recompute after the append would
+        // anti-join away every new file.
+        val delta = rows.join(lake, Seq("path"), "left_anti").localCheckpoint()
+        val stats = delta.agg(count(lit(1)), max(col("path")), min(col("modificationTime")))
+          .collect()(0)
+        val nNew = stats.getLong(0)
+        if (nNew == 0) driverPlan(Nil)
+        else if (onDriver(nNew)) driverPlan(delta.collect().toSeq.map(r =>
+          Listed(r.getString(0), r.getTimestamp(1).getTime, r.getLong(2))))
+        else distributedPlan(delta, Some((stats.getString(1), stats.getTimestamp(2))))
+    }
+  }
+
   /** End-to-end directory compaction: read every file under `inputDir` as
     * an opaque blob (reference S1+S3: whole-file records in mtime order —
     * `utils/file/processor.py:9-118`, `utils/file/reader/json.py:8-12`),
@@ -209,30 +281,20 @@ object Compactor {
     */
   def compactDirectory(inputDir: String, outputDir: String, targetBytes: Long,
                        glob: Option[String] = None)
-                      (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+                      (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    compactDirectory(inputDir, outputDir, targetBytes, glob, PlanSide.BySize)
+
+  /** [[compactDirectory]] through the planner `side` picks. */
+  private[graft] def compactDirectory(inputDir: String, outputDir: String, targetBytes: Long,
+                                      glob: Option[String], side: PlanSide)
+                                     (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val files = binaryFiles(inputDir, glob)
-    // Bundle assignment runs on the LISTING ONLY (path, mtime, size come
-    // from file status, so no file is opened for it). Content is then
-    // read once and shuffled once (the per-bundle co-location in
+    // Bundle assignment runs on the LISTING ONLY. Content is then read
+    // once and shuffled once (the per-bundle co-location in
     // writeBundles); payload bytes never pass through a sort.
-    val listing = listed(files)
-    if (listing.length <= SingleBucketFiles) {
-      val plan = planBundles(listing, targetBytes, 0L)
-      writeBundles(files.select(col("path"), col("modificationTime"), col("content")),
-        planFrame(plan), SaveMode.Overwrite, outputDir)
-      localManifest(plan)
-    } else {
-      // The prefix-sum window shuffles a few dozen bytes per file, not
-      // payloads. The assignment is cached (Caches.release() hook)
-      // because the join and the manifest both consume it.
-      val assign = Caches.track(withBundleId(
-        files.select(col("path"), col("modificationTime"), col("length"))
-          .filter(col("length") > 0),
-        col("modificationTime"), Seq(col("path")), col("length"), targetBytes))
-      writeBundles(files.select(col("path"), col("content")), assign,
-        SaveMode.Overwrite, outputDir)
-      manifest(assign, col("path"))
-    }
+    val plan = planPass(files, None, targetBytes, 0L, side)
+    writeBundles(files, plan.assign, SaveMode.Overwrite, outputDir)
+    plan.manifest
   }
 
   private def binaryFiles(inputDir: String, glob: Option[String])
@@ -241,13 +303,12 @@ object Compactor {
     glob.fold(reader)(g => reader.option("pathGlobFilter", g)).load(inputDir)
   }
 
-  /** Write each `content` file (path, content, modificationTime on one
-    * side or the other) into its bundle directory per `assign`
+  /** Write each of `files` into its bundle directory per `assign`
     * (path -> bundle_id, record_bytes).
     */
-  private def writeBundles(content: DataFrame, assign: DataFrame, mode: SaveMode,
+  private def writeBundles(files: DataFrame, assign: DataFrame, mode: SaveMode,
                            outputDir: String): Unit =
-    content
+    files.select(col("path"), col("modificationTime"), col("content"))
       // a distributed assignment has no broadcast hint: AQE broadcasts
       // it while it fits (≲10M files) and falls back to a shuffle join
       // beyond — both keep the single content shuffle
@@ -488,18 +549,17 @@ object Compactor {
     * (empty when nothing new).
     *
     * Scale: the processed-set read prunes to the `path` column only.
-    * For a listing of at most 2^18 files the delta lives on the driver:
-    * one narrow scan of the lake's paths, semi-joined to the broadcast
-    * listing, returns the listed paths already bundled, and the rest is
-    * planned on the driver (see the object doc). The content scan then
-    * filters on `modificationTime >= ` the delta's oldest mtime, which
+    * The plan step (see the object doc) finds the delta: for a listing
+    * of at most 2^18 files, one narrow scan of the lake's paths
+    * semi-joined to the broadcast listing; for a larger one, a pinned
+    * distributed anti-join with one `agg(count, max(path),
+    * min(modificationTime))`. Either way the delta is planned on the
+    * driver when it has at most 2^18 files. The content scan filters
+    * on `modificationTime >=` the delta's oldest mtime, which
     * `binaryFile` applies before opening a file, so bundled files older
-    * than the delta are not read. A larger listing anti-joins it
-    * against the lake distributed, pins the delta once, and takes
-    * emptiness, the bucket count and the watermark's max path from one
-    * `agg(count, max(path))`. The next bundle id comes from the lake's
-    * `bundle_id=N` directory names, which the lake's file index has
-    * already listed — no scan.
+    * than the delta are not read. The next bundle id comes from the
+    * lake's `bundle_id=N` directory names, which the lake's file index
+    * has already listed — no scan.
     *
     * == High-water-mark fast path ==
     * On date-shaped inputs (every partition level a `k=v` directory
@@ -531,7 +591,16 @@ object Compactor {
   def compactDirectoryIncremental(inputDir: String, outputDir: String,
                                   targetBytes: Long, glob: Option[String] = None,
                                   watermark: WatermarkMode = WatermarkAuto)
-                                 (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+                                 (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    compactDirectoryIncremental(inputDir, outputDir, targetBytes, glob, watermark,
+      PlanSide.BySize)
+
+  /** [[compactDirectoryIncremental]] through the planner `side` picks. */
+  private[graft] def compactDirectoryIncremental(inputDir: String, outputDir: String,
+                                                 targetBytes: Long, glob: Option[String],
+                                                 watermark: WatermarkMode, side: PlanSide)
+                                                (implicit spark: org.apache.spark.sql.SparkSession)
+      : DataFrame = {
     val gate = watermark == WatermarkAuto
     // partition depth when the layout is eligible under the gate; the
     // single source of truth for whether marks are written at all
@@ -549,7 +618,7 @@ object Compactor {
       } catch { case _: org.apache.spark.sql.AnalysisException => None }
     prev match {
       case None =>
-        val mf = compactDirectory(inputDir, outputDir, targetBytes, glob)
+        val mf = compactDirectory(inputDir, outputDir, targetBytes, glob, side)
         // manifest last_key is max(path) per bundle: the global max
         // bundled path falls out of the manifest's rows, which a driver
         // plan's local manifest returns without a job
@@ -587,12 +656,8 @@ object Compactor {
         val nextBundle = p.inputFiles.iterator
           .flatMap(f => BundleDir.findFirstMatchIn(f).map(_.group(1).toLong))
           .foldLeft(-1L)(math.max) + 1
-        val listing = listed(files)
-        val appended =
-          if (listing.length <= SingleBucketFiles)
-            appendPlanned(files, listing, done, outputDir, targetBytes, nextBundle)
-          else appendDistributed(files, done, outputDir, targetBytes, nextBundle)
-        appended match {
+        val plan = planPass(files, Some(done), targetBytes, nextBundle, side)
+        plan.delta match {
           case None =>
             // nothing new. Install the watermark if the layout supports
             // one and none exists yet (one narrow max(path) scan of the
@@ -600,8 +665,13 @@ object Compactor {
             if (mark.isEmpty && watermark != WatermarkOff)
               installMark(Option(
                 p.agg(max(col("path"))).collect()(0).getString(0)))
-            localManifest(Array.empty)
-          case Some((mf, maxPath)) =>
+            plan.manifest
+          case Some((maxPath, oldest)) =>
+            // binaryFile tests the pushed mtime filter on a file's status
+            // before opening it, so bundled files older than the delta
+            // are not read; the join decides which rows are kept
+            writeBundles(files.filter(col("modificationTime") >= lit(oldest)),
+              plan.assign, SaveMode.Append, outputDir)
             // advance the watermark to the newest dir this pass bundled
             // from (the delta's max path; never regresses below the
             // existing mark — a full-depth new mark always compares past
@@ -610,80 +680,8 @@ object Compactor {
               (mark.toSeq ++ relPartitionOf(maxPath, d)).maxOption
                 .foreach(writeWatermark(outputDir, _))
             }
-            mf
+            plan.manifest
         }
-    }
-  }
-
-  /** The incremental append of a listing of at most
-    * [[SingleBucketFiles]] files, planned on the driver. Returns the new
-    * bundles' manifest and the delta's max path (Spark's string order),
-    * or None when nothing is new.
-    */
-  private def appendPlanned(files: DataFrame, listing: Seq[Listed], done: DataFrame,
-                            outputDir: String, targetBytes: Long, nextBundle: Long)
-                           (implicit spark: org.apache.spark.sql.SparkSession)
-      : Option[(DataFrame, String)] = {
-    val nonEmpty = listing.filter(_.length > 0)
-    // the delta: listed files whose path the lake does not hold. The
-    // lake's path scan is semi-joined to the broadcast listing, so at
-    // most the listing comes back; on the driver, the append below
-    // cannot change the delta (a lazy plan would re-read the lake).
-    val seen = done
-      .join(broadcast(local(nonEmpty.map(f => Row(f.path)),
-        StructType(Seq(StructField("path", StringType, nullable = false))))),
-        Seq("path"), "left_semi")
-      .collect().iterator.map(_.getString(0)).toSet
-    val fresh = nonEmpty.filterNot(f => seen(f.path))
-    if (fresh.isEmpty) None
-    else {
-      val plan = planBundles(fresh, targetBytes, nextBundle)
-      // binaryFile tests the pushed mtime filter on a file's status
-      // before opening it, so bundled files older than the delta are
-      // not read; the join decides which rows are kept
-      val oldest = new java.sql.Timestamp(fresh.iterator.map(_.mtime).min)
-      writeBundles(files.filter(col("modificationTime") >= lit(oldest))
-          .select(col("path"), col("modificationTime"), col("content")),
-        planFrame(plan), SaveMode.Append, outputDir)
-      Some((localManifest(plan), sparkMax(fresh.map(_.path)).get))
-    }
-  }
-
-  /** The incremental append of a listing above [[SingleBucketFiles]]
-    * files, planned distributed; same result as [[appendPlanned]].
-    */
-  private def appendDistributed(files: DataFrame, done: DataFrame, outputDir: String,
-                                targetBytes: Long, nextBundle: Long)
-                               (implicit spark: org.apache.spark.sql.SparkSession)
-      : Option[(DataFrame, String)] = {
-    // The new-file delta, evaluated ONCE: eager localCheckpoint of its
-    // narrow (path, mtime, size) rows. Its lineage reads outputDir
-    // through the anti-join, so the append below would invalidate a
-    // mere cache and a recompute would see its own output —
-    // anti-joining away every new file. The stats, the assignment
-    // and the manifest all read the pinned PRE-write delta.
-    val delta = files
-      .select(col("path"), col("modificationTime"), col("length"))
-      .filter(col("length") > 0)
-      .join(done, Seq("path"), "left_anti")
-      .localCheckpoint()
-    val stats = delta.agg(count(lit(1)), max(col("path"))).collect()(0)
-    val nNew = stats.getLong(0)
-    if (nNew == 0) None
-    else {
-      // The assignment is pinned too: the write and the returned
-      // manifest both consume it, and the manifest is read after the
-      // append. A localCheckpoint, not a Caches entry, which would
-      // stay referenced until Caches.release() — one per pass. A delta
-      // of at most 2^18 files is one prefix-sum bucket.
-      val assign = withBundleId(delta, col("modificationTime"),
-        Seq(col("path")), col("length"), targetBytes,
-        if (nNew <= SingleBucketFiles) 1 else 0)
-        .withColumn(BundleCol, col(BundleCol) + nextBundle)
-        .localCheckpoint()
-      writeBundles(files.select(col("path"), col("content")), assign,
-        SaveMode.Append, outputDir)
-      Some((manifest(assign, col("path")), stats.getString(1)))
     }
   }
 
@@ -720,7 +718,15 @@ object Compactor {
                     codec: Option[String] = Some("gzip"),
                     glob: Option[String] = None,
                     targetCompressed: Boolean = false)
-                   (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+                   (implicit spark: org.apache.spark.sql.SparkSession): DataFrame =
+    compactToText(inputDir, outputDir, targetBytes, codec, glob, targetCompressed,
+      PlanSide.BySize)
+
+  /** [[compactToText]] through the planner `side` picks. */
+  private[graft] def compactToText(inputDir: String, outputDir: String, targetBytes: Long,
+                                   codec: Option[String], glob: Option[String],
+                                   targetCompressed: Boolean, side: PlanSide)
+                                  (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val files = binaryFiles(inputDir, glob).filter(col("length") > 0)
     val effectiveTarget =
       if (!targetCompressed || codec.forall(_ == "none")) targetBytes
@@ -743,26 +749,14 @@ object Compactor {
         math.max(1L, math.round(targetBytes / ratio))
       }
     // same listing-only assignment as compactDirectory
-    def write(assign: DataFrame): Unit = {
-      val writer = files.select(col("path"), col("content"))
-        .join(assign, "path")
-        .select(col(BundleCol), col("content").cast("string").as("value"))
-        .repartition(col(BundleCol)) // one text file per bundle
-        .write.mode(SaveMode.Overwrite).partitionBy(BundleCol)
-      codec.fold(writer)(c => writer.option("compression", c)).text(outputDir)
-    }
-    val listing = listed(files)
-    if (listing.length <= SingleBucketFiles) {
-      val plan = planBundles(listing, effectiveTarget, 0L)
-      write(planFrame(plan))
-      localManifest(plan)
-    } else {
-      val assign = Caches.track(withBundleId(
-        files.select(col("path"), col("modificationTime"), col("length")),
-        col("modificationTime"), Seq(col("path")), col("length"), effectiveTarget))
-      write(assign)
-      manifest(assign, col("path"))
-    }
+    val plan = planPass(files, None, effectiveTarget, 0L, side)
+    val writer = files.select(col("path"), col("content"))
+      .join(plan.assign, "path")
+      .select(col(BundleCol), col("content").cast("string").as("value"))
+      .repartition(col(BundleCol)) // one text file per bundle
+      .write.mode(SaveMode.Overwrite).partitionBy(BundleCol)
+    codec.fold(writer)(c => writer.option("compression", c)).text(outputDir)
+    plan.manifest
   }
 
   /** Parquet-lake OPTIMIZE — the standard lake-maintenance pass every
@@ -828,12 +822,8 @@ object Compactor {
     // listings (inputFiles comes from the relation's file index, the
     // assignment manifest is file-level), so the check costs a set
     // diff, not a data pass. Fail loudly; never "optimize" rows away.
-    def norm(p: String): String = {
-      val u = new org.apache.hadoop.fs.Path(p).toUri
-      s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
-    }
-    val listed = assign.select(col("path")).collect().map(r => norm(r.getString(0))).toSet
-    val unassigned = rows.inputFiles.map(norm).filterNot(listed.contains)
+    val listed = assign.select(col("path")).collect().map(r => normPath(r.getString(0))).toSet
+    val unassigned = rows.inputFiles.map(normPath(_)).filterNot(listed.contains)
     require(unassigned.isEmpty,
       s"optimizeParquet($inputDir): ${unassigned.length} data file(s) in the " +
         s"relation have no bundle assignment (non-'*.parquet' names or files " +
@@ -998,14 +988,8 @@ object Compactor {
         s"zorderParquet($inputDir): ${zorderCols.mkString(",")} includes a " +
           s"partition column (${zPartCols.mkString(",")}) — directory " +
           "pruning already covers those; z-order data columns only")
-      val base = new org.apache.hadoop.fs.Path(inputDir)
-        .toUri.getPath.stripSuffix("/")
-      val leafRel = rows.inputFiles.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath
-        require(p.startsWith(base),
-          s"zorderParquet($inputDir): input file $f outside the lake root")
-        p.stripPrefix(base).stripPrefix("/")
-      }.distinct.sorted.toSeq
+      val leafRel = rows.inputFiles.map(partitionDirOf(inputDir, _, "zorderParquet"))
+        .distinct.sorted.toSeq
       require(leafRel.forall(_.nonEmpty),
         s"zorderParquet($inputDir): mixed flat+partitioned layout")
       val perPart = leafRel.map { rel =>
@@ -1075,6 +1059,17 @@ object Compactor {
   // binary search but waste bucket ids — collapse them)
   private def dedupSorted(bounds: Array[Double]): Array[Double] =
     bounds.distinct.sorted
+
+  /** The directory of lake file `file` relative to the lake root
+    * `root` ("" for a file at the root); `caller` names a file outside
+    * the root in the failure.
+    */
+  private def partitionDirOf(root: String, file: String, caller: String): String = {
+    val base = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
+    val dir = new org.apache.hadoop.fs.Path(file).getParent.toUri.getPath
+    require(dir.startsWith(base), s"$caller($root): input file $file outside the lake root")
+    dir.stripPrefix(base).stripPrefix("/")
+  }
 
   /** Partition columns of a parquet relation, from the relation itself
     * (never name guessing); shared by [[optimizeParquet]] and
@@ -1459,13 +1454,8 @@ object Compactor {
       else spark.read.parquet(s"$lake/$StatsDir").select(col("file"))
         .collect().map(r => (r.getString(0), normPath(r.getString(0))))
     val known: Set[String] = knownPairs.map(_._2).toSet
-    val base = new org.apache.hadoop.fs.Path(lake).toUri.getPath.stripSuffix("/")
     val byPart: Seq[(String, Array[String])] = rows.inputFiles
-      .groupBy { f =>
-        val p = new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath
-        require(p.startsWith(base), s"maintainLake($lake): $f outside the lake")
-        p.stripPrefix(base).stripPrefix("/")
-      }.toSeq.sortBy(_._1)
+      .groupBy(partitionDirOf(lake, _, "maintainLake")).toSeq.sortBy(_._1)
     val dirty = byPart.filter(_._2.exists(f => !known.contains(normPath(f))))
     // manifest entries with no current file (retention purge, manual
     // delete — possibly of a whole partition directory): these need no
@@ -1565,8 +1555,8 @@ object Compactor {
           spark.read.option("basePath", lake).parquet(rewrittenFiles: _*),
           statsCols, dictCols))
       // prefix test runs on URI PATHS (scheme spellings differ between
-      // the caller's lake string and input_file_name output; `base` is
-      // already the lake's URI path)
+      // the caller's lake string and input_file_name output)
+      val base = new org.apache.hadoop.fs.Path(lake).toUri.getPath.stripSuffix("/")
       val dirtyPrefixes = dirty.map { case (rel, _) =>
         (if (rel.isEmpty) base else s"$base/$rel") + "/" }
       val all =

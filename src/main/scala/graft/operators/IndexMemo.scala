@@ -25,7 +25,10 @@ import org.apache.spark.sql.SparkSession
   *    repair, the manifest-pruned scans and [[graft.Tables]];
   *  - `Compactor`'s stats manifests: the digest of each manifest's
   *    file set, plus its rows when the manifest is small enough to
-  *    prune over locally ([[Compactor.readPrunedEq]] and its siblings).
+  *    prune over locally ([[Compactor.readPrunedEq]] and its siblings);
+  *  - [[Similarity.trainedCached]]: trained IVF centroids, keyed by
+  *    the corpus plan's semantic hash and the training parameters,
+  *    under a constant fingerprint.
   *
   * Semantics:
   *  - Freshness: each entry stores the fingerprint it was loaded
@@ -137,9 +140,11 @@ private[graft] final class IndexMemo[K, V](fingerprint: (SparkSession, K) => Any
 private[graft] object IndexMemo {
   // `serve` holds 1 live index, its 3 table schemas, a lake and its
   // manifest, and the schemas of the tables its queries read; the
-  // Bench wave 3 indexes and 10 tables. An IVF entry is about 8 KB of
-  // centroids (16 x 64 doubles) plus a frozen listing, and a schema is
-  // well under 1 KB, so 64 entries bound those memos near 1 MB. A
+  // Bench wave 3 indexes, 10 tables and the s04 trained centroids. An
+  // IVF entry is about 8 KB of centroids (16 x 64 doubles) plus a
+  // frozen listing, a trained-centroid entry the same 8 KB without one,
+  // and a schema is well under 1 KB, so 64 entries bound those memos
+  // near 1 MB. A
   // manifest entry keeps rows only for a manifest of at most
   // `Compactor.LocalManifestBytes` (256 KiB) on disk, about 1 MB on
   // the driver, so that memo's worst case is under 100 MB; `serve`'s

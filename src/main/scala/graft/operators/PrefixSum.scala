@@ -35,9 +35,7 @@ import org.apache.spark.sql.functions._
   * One bucket (`buckets` = 1) is the small-input case: no quantile
   * pass, no narrow persist, no totals pass — every offset is 0 and
   * phase 3 alone is the running sum. Callers that know their input is
-  * small pass 1 ([[Compactor]]'s incremental pass does for a delta of
-  * at most 2^18 files when its listing is too large to plan on the
-  * driver).
+  * small pass 1.
   *
   * `offset(group, bucket) + local_prefix == group_prefix` for ANY bucket
   * boundaries, so results never depend on sketch accuracy or boundary

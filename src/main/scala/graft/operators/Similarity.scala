@@ -562,40 +562,24 @@ object Similarity {
   /** IVF search: train (or take) centroids, assign corpus cells once,
     * probe each query's `nprobe` nearest cells.
     */
-  // one trained index per (plan, params) — index construction is
-  // amortized across queries in any real ANN deployment. LRU-bounded:
-  // a session training indexes over unboundedly many corpora must not
-  // grow driver memory without bound (each entry is k x dim doubles,
-  // ~8 KB at 16x64; 64 entries ≈ 0.5 MB worst case).
-  private val ivfCacheCap = 64
+  // one trained index per (session, plan, params) — index construction
+  // is amortized across queries in any real ANN deployment. The key
+  // names the corpus plan, so the fingerprint is constant.
   private val ivfCache =
-    new java.util.LinkedHashMap[String, Array[Array[Double]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[Array[Double]]]): Boolean =
-        size() > ivfCacheCap
-    }
+    new IndexMemo[String, Array[Array[Double]]]((_, _) => ())
 
-  /** [[trainIvfCentroids]] through the session LRU cache — the
-    * build-once amortization every trained-index consumer shares
-    * (knnIvf, semDedup, semFlags). Train OUTSIDE the cache lock
-    * (training runs Spark jobs); a lost race costs one redundant
-    * training, and training is deterministic so either result is
-    * byte-identical.
+  /** [[trainIvfCentroids]] through the session memo — the build-once
+    * amortization every trained-index consumer shares (knnIvf,
+    * semDedup, semFlags). Training is deterministic, so a lost race's
+    * duplicate training returns byte-identical centroids.
     */
   def trainedCached(corpus: DataFrame, nCells: Int, iters: Int, dim: Int,
                     seedMode: String = "lowid",
                     seedEvery: Int = 1): Array[Array[Double]] = {
     val cacheKey = s"${corpus.queryExecution.analyzed.semanticHash()}:" +
       s"$nCells:$iters:$dim:$seedMode:$seedEvery"
-    val hit = ivfCache.synchronized(ivfCache.get(cacheKey))
-    if (hit != null) hit
-    else {
-      val t = trainIvfCentroids(corpus, nCells, iters, dim, seedMode, seedEvery)
-      ivfCache.synchronized {
-        val prev = ivfCache.get(cacheKey)
-        if (prev != null) prev else { ivfCache.put(cacheKey, t); t }
-      }
-    }
+    ivfCache.getOrLoad(corpus.sparkSession, cacheKey)(
+      trainIvfCentroids(corpus, nCells, iters, dim, seedMode, seedEvery))
   }
 
   def knnIvf(queries: DataFrame, corpus: DataFrame, k: Int,

@@ -106,7 +106,7 @@ object AnnStream {
     // Only a SAME-LINEAGE marker counts as replay evidence: a direct
     // processBatch call with no lineage never trusts markers at all.
     val alreadyCommitted =
-      lineage.nonEmpty && committed(batch, indexDir, batchId, lineage)
+      lineage.nonEmpty && CommitMarkers.committed(batch, indexDir, batchId, lineage)
     val spark = batch.sparkSession
     val rows = batch.select(col("vec_id"), col("embedding"))
     // duplicate ids WITHIN a batch are a source keying bug, not a
@@ -167,24 +167,6 @@ object AnnStream {
         }
       }
     }
-    markCommitted(batch, indexDir, batchId, lineage)
-  }
-
-  private def marker(indexDir: String, batchId: Long,
-                     lineage: String): Path =
-    if (lineage.isEmpty) new Path(s"$indexDir/commits/$batchId")
-    else new Path(s"$indexDir/commits/$lineage-$batchId")
-
-  private def committed(df: DataFrame, indexDir: String,
-                        batchId: Long, lineage: String): Boolean = {
-    val p = marker(indexDir, batchId, lineage)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(df: DataFrame, indexDir: String,
-                            batchId: Long, lineage: String): Unit = {
-    val p = marker(indexDir, batchId, lineage)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      .create(p, true).close()
+    CommitMarkers.markCommitted(batch, indexDir, batchId, lineage)
   }
 }

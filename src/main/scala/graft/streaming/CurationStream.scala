@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -77,7 +76,7 @@ object CurationStream {
     // consulted, never gated on — see the scaladoc: a new checkpoint
     // lineage restarts batchIds at 0, so the marker alone cannot prove
     // a batch is a replay; only "marker AND all ids <= horizon" can
-    val alreadyCommitted = committed(batch, stateDir, batchId)
+    val alreadyCommitted = CommitMarkers.committed(batch, stateDir, batchId)
     val spark = batch.sparkSession
     val out = IncrementalPipeline.committedHorizon(spark, stateDir) match {
       case None =>
@@ -110,20 +109,6 @@ object CurationStream {
           batch.filter(col("doc_id") > hz), benchPred)
     }
     out.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    markCommitted(batch, stateDir, batchId)
-  }
-
-  private def marker(stateDir: String, batchId: Long): Path =
-    new Path(s"$stateDir/commits/$batchId")
-
-  private def committed(df: DataFrame, stateDir: String, batchId: Long): Boolean = {
-    val p = marker(stateDir, batchId)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(df: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val p = marker(stateDir, batchId)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      .create(p, true).close()
+    CommitMarkers.markCommitted(batch, stateDir, batchId)
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,10 +23,13 @@ import graft.operators.{Dedup, DedupIndex}
   *  - flag output is written to `outDir/batch_id=<id>` with OVERWRITE —
   *    a replayed batch rewrites its own partition, so the flag lake is
   *    idempotent and readers see each verdict once;
-  *  - the index append is guarded by a `commits/<batchId>` marker under
-  *    the index: a replay of a fully-committed batch is a no-op. A
-  *    crash BETWEEN append and marker can re-append one batch's novel
-  *    slice; duplicate index rows never change a verdict (every
+  *  - the index append is guarded by a `commits/<lineage>-<batchId>`
+  *    marker under the index, scoped to the checkpoint
+  *    ([[AnnStream.lineageOf]]): a replay of a fully-committed batch is
+  *    a no-op, and a fresh checkpoint, whose batchIds restart at 0, is
+  *    never gated by another one's markers. A crash BETWEEN append
+  *    and marker can re-append one batch's novel slice; duplicate
+  *    index rows never change a verdict (every
   *    consumer takes `min(base_id)` over set-semantics tables — same
   *    content, same id), they only cost bytes until the next full
   *    rebuild. That is the standard at-least-once-with-idempotent-
@@ -47,11 +49,12 @@ object DedupStream {
     */
   def indexedDedupSink(docs: DataFrame, indexPath: String, outDir: String,
                        checkpointDir: String,
-                       minSim: Double = 0.3): StreamingQuery =
+                       minSim: Double = 0.3): StreamingQuery = {
+    val lineage = AnnStream.lineageOf(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!committed(batch, indexPath, batchId)) {
+        if (!CommitMarkers.committed(batch, indexPath, batchId, lineage)) {
           val spark = batch.sparkSession
           val b = batch.persist() // consumed by flags AND appendNovel
           val ix = DedupIndex.load(spark, indexPath)
@@ -60,7 +63,7 @@ object DedupStream {
           try {
             flags.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
             DedupIndex.appendNovel(indexPath, b, col("doc_id"), col("text"), flags)
-            markCommitted(batch, indexPath, batchId)
+            CommitMarkers.markCommitted(batch, indexPath, batchId, lineage)
           } finally {
             flags.unpersist()
             b.unpersist()
@@ -69,18 +72,5 @@ object DedupStream {
         ()
       }
       .start()
-
-  private def marker(indexPath: String, batchId: Long): Path =
-    new Path(s"$indexPath/commits/$batchId")
-
-  private def committed(df: DataFrame, indexPath: String, batchId: Long): Boolean = {
-    val p = marker(indexPath, batchId)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def markCommitted(df: DataFrame, indexPath: String, batchId: Long): Unit = {
-    val p = marker(indexPath, batchId)
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      .create(p, true).close()
   }
 }

@@ -162,4 +162,76 @@ class CompactorSpec extends SparkSpec {
       }
     }
   }
+
+  test("each directory pass writes the same lake and manifest through either planner") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import Compactor.{PlanSide, WatermarkOff}
+    // the plan-equality case's stems: UTF-16 and UTF-8 order disagree
+    // between U+1D11E (a surrogate pair) and U+E000
+    val stems = Seq("a", "b", "\u00e9", "e\u0301", "\uD834\uDD1E", "\uE000", "\uFF21", "z")
+    val in = tmpDir("sides_in")
+    // tied mtimes (three files a second) and every seventh file empty
+    def add(ids: Range, mtimeOf: Int => Long): Unit = ids.foreach { i =>
+      val p = Paths.get(in.toString, s"${stems(i % stems.size)}$i.json")
+      val body = if (i % 7 == 3) "" else s"""{"i":$i,"pad":"${"x" * (i * 13 % 89)}"}"""
+      Files.write(p, body.getBytes("UTF-8"), StandardOpenOption.CREATE)
+      p.toFile.setLastModified(mtimeOf(i))
+    }
+    add(0 until 30, i => 1700000000000L + (i / 3) * 1000L)
+    val sides = Seq[PlanSide](PlanSide.Driver, PlanSide.Distributed)
+    def outs(name: String) = sides.map(side => side -> tmpDir(s"sides_${name}_$side").toString).toMap
+    def manifestOf(mf: DataFrame) = (mf.schema, mf.collect().toSet)
+    def parquetLake(dir: String) = spark.read.parquet(dir)
+      .select(col(Compactor.BundleCol), $"path", $"modificationTime", $"record_bytes",
+        $"content".cast("string"))
+      .collect().toSet
+    def assertSame[T](what: String)(of: PlanSide => T): Unit =
+      assert(of(PlanSide.Driver) == of(PlanSide.Distributed), what)
+    // each side really ran its own planner: only the driver's manifest is local
+    def assertPlanned(mfs: Map[PlanSide, DataFrame]): Unit = sides.foreach { side =>
+      assert(mfs(side).queryExecution.analyzed.isInstanceOf[LocalRelation] ==
+        (side == PlanSide.Driver), s"$side manifest")
+    }
+
+    val full = outs("full")
+    val fullMf = sides.map(side => side ->
+      Compactor.compactDirectory(in.toString, full(side), 300L, None, side)).toMap
+    assertPlanned(fullMf)
+    assertSame("compactDirectory manifest")(side => manifestOf(fullMf(side)))
+    assertSame("compactDirectory lake")(side => parquetLake(full(side)))
+    assert(fullMf(PlanSide.Driver).collect().map(_.getAs[Long]("n_records")).sum == 30 - 4)
+
+    val text = outs("text")
+    val textMf = sides.map(side => side -> Compactor.compactToText(
+      in.toString, text(side), 300L, None, None, targetCompressed = false, side)).toMap
+    assertPlanned(textMf)
+    assertSame("compactToText manifest")(side => manifestOf(textMf(side)))
+    assertSame("compactToText lake")(side => spark.read.text(text(side))
+      .select(col(Compactor.BundleCol), $"value").as[(Long, String)].collect().sorted.toSeq)
+
+    val fold = outs("fold")
+    def foldAll() = sides.map(side => side -> Compactor.compactDirectoryIncremental(
+      in.toString, fold(side), 300L, None, WatermarkOff, side)).toMap
+    val first = foldAll()
+    assertPlanned(first)
+    assertSame("first fold manifest")(side => manifestOf(first(side)))
+    // new files after the lake's newest, and one late file whose mtime
+    // ties already-bundled files: the delta's oldest mtime admits
+    // bundled files to the content scan, and the join drops them
+    add(30 until 45, i => 1700000100000L + i * 1000L)
+    add(46 until 47, _ => 1700000004000L)
+    val delta = foldAll()
+    assertPlanned(delta)
+    assertSame("delta fold manifest")(side => manifestOf(delta(side)))
+    assert(delta(PlanSide.Driver).collect().map(_.getAs[Long]("n_records")).sum == 14)
+    assertSame("folded lake")(side => parquetLake(fold(side)))
+    assert(spark.read.parquet(fold(PlanSide.Driver)).count() == 26 + 14)
+    val none = foldAll()
+    assert(none.values.forall(_.isEmpty))
+    assertSame("no-op fold manifest")(side => manifestOf(none(side)))
+    assertSame("lake after a no-op fold")(side => parquetLake(fold(side)))
+  }
 }
