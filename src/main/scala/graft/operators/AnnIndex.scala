@@ -217,9 +217,11 @@ object AnnIndex {
     // over a non-deterministic input (sample, unordered limit) would
     // otherwise persist divergent row sets and silently break the
     // "row-identical to a full rebuild" search contract
-    corpus.toDF("vec_id", "c_vec")
-      .write.mode("overwrite").parquet(s"$path/vectors")
-    spark.read.parquet(s"$path/vectors")
+    // the written table is read with the schema just written (every
+    // parquet column nullable), so no footer is inferred
+    val vectors = corpus.toDF("vec_id", "c_vec")
+    vectors.write.mode("overwrite").parquet(s"$path/vectors")
+    spark.read.schema(Readers.nullable(vectors.schema)).parquet(s"$path/vectors")
       .select(col("vec_id"), sketch_project(col("c_vec"), r).as("sk"))
       .write.mode("overwrite").parquet(s"$path/sketches")
     // the int8 sibling is OPT-IN (r16): a float-only serving path never

@@ -2,8 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType,
+  TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
@@ -323,6 +327,35 @@ object Compactor {
       .partitionBy(BundleCol)
       .parquet(outputDir)
 
+  /** The data columns [[writeBundles]] writes, as a read types them
+    * (every column nullable); `bundle_id` is the partition column. */
+  private val BundleSchema = StructType(Seq(
+    StructField("path", StringType), StructField("modificationTime", TimestampType),
+    StructField("record_bytes", LongType), StructField("content", BinaryType)))
+
+  /** Whether `dir` holds a parquet lake with a `path` column: the footer
+    * of its first visible non-empty data file, read on the driver (no
+    * job). False when `dir` is missing or holds no such file.
+    */
+  private def isBundleLake(dir: String)
+                          (implicit spark: org.apache.spark.sql.SparkSession): Boolean = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def firstFile(p: Path): Option[FileStatus] =
+      fs.listStatus(p).iterator.filter(visible).flatMap { st =>
+        if (st.isDirectory) firstFile(st.getPath) else Option.when(st.getLen > 0)(st)
+      }.nextOption()
+    fs.exists(root) && firstFile(root).exists { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getFooter.getFileMetaData.getSchema.containsField("path")
+      finally reader.close()
+    }
+  }
+
   /** Name of the advisory listing high-water-mark sidecar written next
     * to the bundled lake. Underscore-prefixed, so every parquet reader
     * ignores it. Losing or deleting it only costs speed (the full
@@ -611,11 +644,11 @@ object Compactor {
       markDepth.foreach { d =>
         maxPath.flatMap(relPartitionOf(_, d)).foreach(writeWatermark(outputDir, _))
       }
+    // a bundled lake is read with the schema writeBundles writes: no
+    // footer inference
     val prev =
-      try {
-        val p = spark.read.parquet(outputDir)
-        if (p.columns.contains("path")) Some(p) else None
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
+      if (isBundleLake(outputDir)) Some(spark.read.schema(BundleSchema).parquet(outputDir))
+      else None
     prev match {
       case None =>
         val mf = compactDirectory(inputDir, outputDir, targetBytes, glob, side)
@@ -792,7 +825,7 @@ object Compactor {
     require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
     val rows = spark.read.parquet(inputDir)
     // partition columns come from the relation, not name guessing
-    val partCols = partitionColsOf(rows)
+    val partCols = fsRelation(rows).partitionSchema.fieldNames.toSeq
     // listing-only planning pass: binaryFile surfaces (path, length)
     // from file status without opening anything
     val listing = spark.read.format("binaryFile")
@@ -973,7 +1006,9 @@ object Compactor {
     require(zorderCols.nonEmpty, "zorderParquet: need at least one column")
     require(zorderCols.size * bits <= 63,
       s"zorderParquet: ${zorderCols.size} cols x $bits bits exceeds 63")
+    // the lake's one footer read: every rewrite reads with its data schema
     val rows = spark.read.parquet(inputDir)
+    val relation = fsRelation(rows)
     // A partitioned lake is rewritten PER PARTITION DIRECTORY — a
     // whole-lake rewrite would silently FLATTEN (partition dirs become
     // plain columns), and partition values don't need z-bits anyway:
@@ -982,76 +1017,97 @@ object Compactor {
     // that partition's file count), and the output reproduces the
     // exact dir layout, so readers and manifest pruning see the same
     // partitioned lake, just clustered within each partition.
-    val zPartCols = partitionColsOf(rows)
-    if (zPartCols.nonEmpty) {
-      require(zorderCols.forall(c => !zPartCols.contains(c)),
-        s"zorderParquet($inputDir): ${zorderCols.mkString(",")} includes a " +
-          s"partition column (${zPartCols.mkString(",")}) — directory " +
-          "pruning already covers those; z-order data columns only")
-      val leafRel = rows.inputFiles.map(partitionDirOf(inputDir, _, "zorderParquet"))
-        .distinct.sorted.toSeq
-      require(leafRel.forall(_.nonEmpty),
-        s"zorderParquet($inputDir): mixed flat+partitioned layout")
-      val perPart = leafRel.map { rel =>
-        zorderFlat(s"$inputDir/$rel", s"$outputDir/$rel",
-          targetBytes, zorderCols, bits)
-          .select(col("rows"), col("n_files"), col("total_bytes")).collect()(0)
+    val zPartCols = relation.partitionSchema.fieldNames.toSeq
+    val written =
+      if (zPartCols.isEmpty)
+        Seq(zorderFlat(inputDir, outputDir, relation.dataSchema, targetBytes, zorderCols, bits))
+      else {
+        require(zorderCols.forall(c => !zPartCols.contains(c)),
+          s"zorderParquet($inputDir): ${zorderCols.mkString(",")} includes a " +
+            s"partition column (${zPartCols.mkString(",")}) — directory " +
+            "pruning already covers those; z-order data columns only")
+        val leafRel = Readers.leafFiles(rows)
+          .map(st => partitionDirOf(inputDir, st.getPath, "zorderParquet")).distinct.sorted
+        require(leafRel.forall(_.nonEmpty),
+          s"zorderParquet($inputDir): mixed flat+partitioned layout")
+        leafRel.map(rel => zorderFlat(s"$inputDir/$rel", s"$outputDir/$rel",
+          relation.dataSchema, targetBytes, zorderCols, bits))
       }
-      import spark.implicits._
-      return Seq((perPart.map(_.getLong(0)).sum,
-        perPart.map(_.getLong(1)).sum,
-        perPart.map(_.getLong(2)).sum))
-        .toDF("rows", "n_files", "total_bytes")
-    }
-    zorderFlat(inputDir, outputDir, targetBytes, zorderCols, bits)
+    import spark.implicits._
+    Seq((written.map(_.rows).sum, written.map(_.files.length.toLong).sum,
+      written.map(_.totalBytes).sum))
+      .toDF("rows", "n_files", "total_bytes")
   }
 
-  /** The single-directory z-order rewrite behind [[zorderParquet]]. */
-  private def zorderFlat(inputDir: String, outputDir: String, targetBytes: Long,
-                         zorderCols: Seq[String], bits: Int)
-                        (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+  /** What one [[zorderFlat]] rewrite wrote: its row count, its output
+    * files' listing, the input's byte total, and the per-file stats rows
+    * of the output (`statsSchema`; `file` spelled at the output dir).
+    */
+  private final case class ZWrite(rows: Long, files: Seq[org.apache.hadoop.fs.FileStatus],
+                                  totalBytes: Long, statsSchema: StructType, stats: Array[Row])
+
+  /** The single-directory z-order rewrite behind [[zorderParquet]] and
+    * [[maintainLake]]: every read uses the lake's data schema `schema`,
+    * so no footer is inferred. Jobs: one aggregate for the row count and
+    * the quantile bounds, the range-partitioned write, and one read-back
+    * of the output, [[statsOf]] over `statsCols`/`dictCols` (plus the
+    * constant columns `extra`) collected, which is both the row check and
+    * the new files' manifest rows. The byte total comes from the
+    * relation's own listing.
+    */
+  private def zorderFlat(inputDir: String, outputDir: String, schema: StructType,
+                         targetBytes: Long, zorderCols: Seq[String], bits: Int,
+                         statsCols: Seq[String] = Nil, dictCols: Seq[String] = Nil,
+                         extra: Seq[Column] = Nil)
+                        (implicit spark: org.apache.spark.sql.SparkSession): ZWrite = {
     import graft.expressions.NativeFns.{range_bucket, z_value}
-    val rows = spark.read.parquet(inputDir)
-    val inRows = rows.count()
+    val rows = spark.read.schema(schema).parquet(inputDir)
     // per-column bucket bounds: 2^bits - 1 interior quantiles of the
-    // double-cast columns, ONE Greenwald-Khanna pass for all of them.
-    // approxQuantile ignores nulls; null values produce a null z and
-    // cluster together at the range boundary.
+    // double-cast columns, in the same aggregate as the row count.
+    // Quantiles ignore nulls; null values produce a null z and cluster
+    // together at the range boundary.
     val nB = 1 << bits
-    val probs = (1 until nB).map(_.toDouble / nB).toArray
-    val qNames = zorderCols.indices.map(i => s"_q$i")
-    val allBounds = rows
-      .select(zorderCols.zip(qNames).map { case (c, a) =>
-        col(c).cast("double").as(a) }: _*)
-      .stat.approxQuantile(qNames.toArray, probs, 0.001)
+    val (inRows, allBounds) = countAndQuantiles(rows,
+      zorderCols.map(c => col(c).cast("double")), (1 until nB).map(_.toDouble / nB), 0.001)
     val zInput = array(zorderCols.zipWithIndex.map { case (c, i) =>
       range_bucket(col(c).cast("double"), dedupSorted(allBounds(i)))
     }: _*)
-    val totalBytesRow = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.parquet")
-      .option("recursiveFileLookup", "true")
-      .load(inputDir)
-      .agg(sum(col("length"))).collect()(0)
     // same mismatch optimizeParquet fail-louds: a readable lake whose
     // data files lack the .parquet extension lists to nothing here
-    require(!totalBytesRow.isNullAt(0),
+    val parquetFiles = Readers.leafFiles(rows).filter(_.getPath.getName.endsWith(".parquet"))
+    require(parquetFiles.nonEmpty,
       s"zorderParquet($inputDir): no '*.parquet' files in the listing — " +
         "refusing to plan output sizing from an empty byte total")
-    val totalBytes = totalBytesRow.getLong(0)
+    val totalBytes = parquetFiles.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     rows.withColumn("_z", z_value(zInput, bits))
       .repartitionByRange(nFiles, col("_z"))
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode(SaveMode.Overwrite).parquet(outputDir)
-    val out = spark.read.parquet(outputDir)
-    val outRows = out.count()
+    val out = spark.read.schema(schema).parquet(outputDir)
+    val stats = statsOf(out.select(col("*") +: extra: _*), statsCols, dictCols)
+    val perFile = stats.collect()
+    val outRows = perFile.iterator.map(_.getAs[Long]("n_rows")).sum
     require(outRows == inRows,
       s"zorderParquet($inputDir): wrote $outRows rows, expected $inRows — " +
         "refusing to report a lossy rewrite as success")
-    import spark.implicits._
-    Seq((outRows, out.inputFiles.length.toLong, totalBytes))
-      .toDF("rows", "n_files", "total_bytes")
+    ZWrite(outRows, Readers.leafFiles(out), totalBytes, stats.schema, perFile)
+  }
+
+  /** `df`'s row count and, for each of `cols`, the bounds
+    * `approxQuantile(probs, relErr)` gives, in one aggregate. The
+    * quantiles are Spark's own form of `approxQuantile`: `approx_percentile`
+    * at accuracy `ceil(1 / relErr)` over the column's non-null, non-NaN
+    * values, empty when there are none.
+    */
+  private[graft] def countAndQuantiles(df: DataFrame, cols: Seq[Column], probs: Seq[Double],
+                                       relErr: Double): (Long, Seq[Array[Double]]) = {
+    val accuracy = math.min(Int.MaxValue.toLong, math.ceil(1.0 / relErr).toLong).toInt
+    val r = df.agg(count(lit(1)), cols.map(c =>
+      approx_percentile(when(!isnan(c), c), lit(probs.toArray), lit(accuracy))): _*).collect()(0)
+    (r.getLong(0), cols.indices.map(i =>
+      if (r.isNullAt(i + 1)) Array.empty[Double] else r.getSeq[Double](i + 1).toArray))
   }
 
   // approxQuantile bounds can repeat on skewed data; RangeBucket
@@ -1064,26 +1120,36 @@ object Compactor {
     * `root` ("" for a file at the root); `caller` names a file outside
     * the root in the failure.
     */
-  private def partitionDirOf(root: String, file: String, caller: String): String = {
+  private def partitionDirOf(root: String, file: org.apache.hadoop.fs.Path,
+                             caller: String): String = {
     val base = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
-    val dir = new org.apache.hadoop.fs.Path(file).getParent.toUri.getPath
+    val dir = file.getParent.toUri.getPath
     require(dir.startsWith(base), s"$caller($root): input file $file outside the lake root")
     dir.stripPrefix(base).stripPrefix("/")
   }
 
-  /** Partition columns of a parquet relation, from the relation itself
-    * (never name guessing); shared by [[optimizeParquet]] and
-    * [[zorderParquet]].
+  /** The file relation `df` reads. */
+  private def fsRelation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
+      case f: HadoopFsRelation => f
+    }.getOrElse(throw new IllegalStateException(s"not a file read: ${df.queryExecution.analyzed}"))
+
+  /** The partition columns of `df`'s relation as constant columns, at
+    * the values its partition discovery parsed for directory `dir`
+    * (none for a directory it did not discover as a partition).
     */
-  private def partitionColsOf(df: DataFrame): Seq[String] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            f.partitionSchema.fieldNames.toSeq
-          case _ => Seq.empty[String]
+  private def partitionValues(df: DataFrame, dir: org.apache.hadoop.fs.Path): Seq[Column] =
+    fsRelation(df).location match {
+      case ix: PartitioningAwareFileIndex =>
+        val spec = ix.partitionSpec()
+        spec.partitions.find(_.path == dir).toSeq.flatMap { p =>
+          spec.partitionColumns.fields.toSeq.zipWithIndex.map { case (f, i) =>
+            lit(CatalystTypeConverters.convertToScala(p.values.get(i, f.dataType), f.dataType))
+              .cast(f.dataType).as(f.name)
+          }
         }
-    }.getOrElse(Seq.empty)
+      case _ => Nil
+    }
 
   /** Underscore-prefixed stats-manifest directory inside a lake: every
     * parquet reader ignores it, same convention as [[WatermarkFile]].
@@ -1097,11 +1163,12 @@ object Compactor {
     * to discover "nothing here" IS the query bottleneck; the manifest
     * answers the same question from one KB-scale table.
     *
-    * Computed with one data pass at OPTIMIZE time (when the rewrite
-    * just touched every row anyway — [[zorderParquet]] + this is one
-    * job each); queries then call [[readPruned]] forever after. The
-    * manifest is advisory like the watermark: losing it costs the
-    * prune, never correctness.
+    * Computed with one data pass over the lake ([[maintainLake]] takes
+    * the same rows from its rewrite's own read-back instead); queries
+    * then call [[readPruned]] forever after. The returned frame reads
+    * the written manifest with the schema just written, so it infers no
+    * footer. The manifest is advisory like the watermark: losing it
+    * costs the prune, never correctness.
     */
   def writeStatsManifest(dir: String, cols: Seq[String],
                          dictCols: Seq[String] = Nil,
@@ -1116,13 +1183,13 @@ object Compactor {
     val manFiles = math.max(1,
       ((lake.inputFiles.length + ManifestRowsPerFile - 1)
         / ManifestRowsPerFile)).toInt
-    statsOf(lake, cols, dictCols, dictCap)
-      .repartitionByRange(manFiles, col("file"))
+    val stats = statsOf(lake, cols, dictCols, dictCap)
+    stats.repartitionByRange(manFiles, col("file"))
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/$StatsDir")
     // return the WRITTEN manifest, not the aggregation plan — the plan
     // would re-scan the whole lake on every downstream action
-    spark.read.parquet(s"$dir/$StatsDir")
+    spark.read.schema(Readers.nullable(stats.schema)).parquet(s"$dir/$StatsDir")
   }
 
   /** Manifest rows per manifest file — 500k ~ a few tens of MB. */
@@ -1204,7 +1271,8 @@ object Compactor {
         .parquet(newFiles: _*), cols, dictCols, dictCap)
       .select(existing.columns.toIndexedSeq.map(col): _*)
       .write.mode(SaveMode.Append).parquet(s"$dir/$StatsDir")
-    spark.read.parquet(s"$dir/$StatsDir")
+    // the appended rows carry `existing`'s columns: no footer to infer
+    spark.read.schema(existing.schema).parquet(s"$dir/$StatsDir")
   }
 
   /** Read only the lake files whose [min, max] interval for `colName`
@@ -1418,9 +1486,9 @@ object Compactor {
     * rewrite) and swapped in with [[commitOptimized]]'s atomic rename
     * pair; clean partitions are NOT touched — maintenance cost tracks
     * the dirty fraction, not lake volume. The manifest is then rebuilt
-    * as (LIVE entries of clean partitions) UNION (fresh delta-pass
-    * stats of the rewritten ones) and swapped into place, so the prune
-    * is live again the moment the call returns. Deletions are handled
+    * as (LIVE entries of clean partitions) UNION (the rewritten files'
+    * stats rows) and swapped into place, so the prune is live again the
+    * moment the call returns. Deletions are handled
     * too, without a rewrite: a manifest entry whose file no longer
     * exists (retention purge) would otherwise trip [[readPruned]]'s
     * staleness fallback on every query forever — maintain drops the
@@ -1433,48 +1501,91 @@ object Compactor {
     * wants a quiet lake — run it from the maintenance schedule, not
     * under live readers.
     *
+    * Job shape: the lake's footer is read once, and every later read
+    * uses its data schema; an existing manifest is read once (its
+    * footer and its `file` column). Each dirty partition's
+    * [[zorderFlat]] rewrite counts rows and finds its quantile bounds in
+    * one aggregate, sizes its output from the listing, writes, and reads
+    * the staged output back once: that read-back's per-file stats rows
+    * are both the pre-commit row check and the partition's new manifest
+    * rows. The manifest is written from them with one more job. A first
+    * run over a flat 24-file lake is 9 jobs, a no-op 3 (MaintainSpec).
+    *
     * @return one row per partition directory:
     *         (partition, maintained, n_files, rows)
     */
   def maintainLake(lake: String, targetBytes: Long, zorderCols: Seq[String],
                    bits: Int = 12)
                   (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     require(zorderCols.nonEmpty, "maintainLake: need at least one z-order column")
+    // the lake's one footer read: its data schema serves every rewrite,
+    // its file index the listing
     val rows = spark.read.parquet(lake)
-    val partCols = partitionColsOf(rows)
+    val relation = fsRelation(rows)
+    val partCols = relation.partitionSchema.fieldNames.toSeq
     require(zorderCols.forall(c => !partCols.contains(c)),
       s"maintainLake($lake): z-order data columns only (directory pruning " +
         s"already covers ${partCols.mkString(",")})")
     val (fs, statsPath) = hadoopPath(lake, StatsDir)
     val hadManifest = fs.exists(statsPath)
+    // the existing manifest, read once: its columns name the stats and
+    // dict columns, its `file` column drives the dirty test, and it is
+    // the keep side of the resync
+    val oldManifest = if (hadManifest) Some(spark.read.parquet(s"$lake/$StatsDir")) else None
     // (raw, normalized) pairs: raw values drive the manifest resync
     // semi-join below, normalized ones the dirty-partition test
-    val knownPairs: Array[(String, String)] =
-      if (!hadManifest) Array.empty
-      else spark.read.parquet(s"$lake/$StatsDir").select(col("file"))
-        .collect().map(r => (r.getString(0), normPath(r.getString(0))))
+    val knownPairs: Array[(String, String)] = oldManifest.fold(Array.empty[(String, String)])(
+      _.select(col("file")).collect().map(r => (r.getString(0), normPath(r.getString(0)))))
     val known: Set[String] = knownPairs.map(_._2).toSet
-    val byPart: Seq[(String, Array[String])] = rows.inputFiles
-      .groupBy(partitionDirOf(lake, _, "maintainLake")).toSeq.sortBy(_._1)
-    val dirty = byPart.filter(_._2.exists(f => !known.contains(normPath(f))))
+    // a listed file as inputFiles and input_file_name() spell it
+    def spelled(st: FileStatus): String = st.getPath.toUri.toString
+    val byPart: Seq[(String, Seq[FileStatus])] = Readers.leafFiles(rows)
+      .groupBy(st => partitionDirOf(lake, st.getPath, "maintainLake")).toSeq.sortBy(_._1)
+    val dirty = byPart.filter(_._2.exists(f => !known.contains(normPath(spelled(f)))))
     // manifest entries with no current file (retention purge, manual
     // delete — possibly of a whole partition directory): these need no
     // rewrite, but they DO disable the prune — readPruned's staleness
     // check sees current != known and full-scans every query until the
     // dead rows are dropped. Detected here, resolved in the resync.
-    val currentNorm: Set[String] = rows.inputFiles.map(normPath(_)).toSet
+    val currentNorm: Set[String] = byPart.flatMap(_._2).map(f => normPath(spelled(f))).toSet
     val deadEntries = knownPairs.filterNot(kp => currentNorm.contains(kp._2))
+    val resync = dirty.nonEmpty || deadEntries.nonEmpty || !hadManifest
+    val (statsCols, dictCols) = oldManifest.fold((zorderCols, Seq.empty[String])) { m =>
+      def named(prefix: String) =
+        m.columns.filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).toSeq
+      val c = named("min_")
+      require(!resync || c.sorted == zorderCols.sorted,
+        s"maintainLake($lake): manifest stats cols $c != z-order cols " +
+          s"$zorderCols — rewrite the manifest explicitly to change them")
+      // dict columns ride the existing manifest shape, like append:
+      // a maintenance pass must not silently drop point-skip coverage
+      (c, named("dict_"))
+    }
 
-    // one partition's rewrite-and-swap; runs on a maintenance thread
-    def rewriteOne(rel: String): (Long, Long) = {
+    // one partition's rewrite-and-swap; runs on a maintenance thread.
+    // Its stats rows come from the rewrite's read-back of the staged
+    // files, renamed to where the swap puts them.
+    def rewriteOne(rel: String, files: Seq[FileStatus]): ZWrite = {
       val src = if (rel.isEmpty) lake else s"$lake/$rel"
       // dot-prefixed staging dir: invisible to readers and partition
       // discovery while the rewrite runs
       val tmp =
         if (rel.isEmpty) s"$lake.maintain-tmp"
         else s"$lake/.maintain-tmp-${rel.replace('/', '_')}"
-      val man = zorderFlat(src, tmp, targetBytes, zorderCols, bits)
-        .collect()(0)
+      val dir = files.head.getPath.getParent
+      val w = zorderFlat(src, tmp, relation.dataSchema, targetBytes, zorderCols, bits,
+        statsCols, dictCols, partitionValues(rows, dir))
+      // a staged file keeps its name through the swap, and under `src`
+      // it is spelled as the listing spells the partition's old files:
+      // what input_file_name() returns there (URI-encoded)
+      val first = spelled(files.head)
+      val dirSpelled = first.substring(0, first.lastIndexOf('/'))
+      val fileIx = w.statsSchema.fieldIndex("file")
+      val stats = w.stats.map { r =>
+        val f = r.getString(fileIx)
+        Row.fromSeq(r.toSeq.updated(fileIx, dirSpelled + f.substring(f.lastIndexOf('/'))))
+      }
       if (rel.isEmpty) {
         // flat lake: the manifest dir must survive the swap — move it
         // into the staging dir before promoting. If the promote fails
@@ -1483,8 +1594,7 @@ object Compactor {
         // stranded in the staging dir — every read full-scans and the
         // next maintain pays a whole-lake rewrite.
         if (hadManifest) {
-          val moved =
-            fs.rename(statsPath, new org.apache.hadoop.fs.Path(tmp, StatsDir))
+          val moved = fs.rename(statsPath, new Path(tmp, StatsDir))
           // abort BEFORE the swap: an ignored failed rename would let
           // the manifest ride the retired lake directory into
           // fs.delete, and the post-commit resync would then throw on
@@ -1493,97 +1603,67 @@ object Compactor {
           require(moved, s"could not stage the stats manifest out of " +
             s"$src before the swap — aborting pre-commit (lake untouched)")
         }
-        try fs.delete(new org.apache.hadoop.fs.Path(commitOptimized(src, tmp)), true)
+        try fs.delete(new Path(commitOptimized(src, tmp)), true)
         catch { case t: Throwable =>
-          val stranded = new org.apache.hadoop.fs.Path(tmp, StatsDir)
+          val stranded = new Path(tmp, StatsDir)
           if (hadManifest && fs.exists(stranded)) fs.rename(stranded, statsPath)
           throw t
         }
       } else {
-        fs.delete(new org.apache.hadoop.fs.Path(commitOptimized(src, tmp)), true)
+        fs.delete(new Path(commitOptimized(src, tmp)), true)
       }
-      (man.getLong(1), man.getLong(0))
+      w.copy(stats = stats)
     }
 
     // dirty partitions rewrite CONCURRENTLY, at most 4 at once: each
-    // rewrite is ~5 small driver-blocking jobs (count, quantiles,
-    // listing, write, verify), so a daily-partition lake with many
-    // small dirty dirs would otherwise idle the cluster between jobs.
-    // Staging dirs and swaps stay strictly per-partition (no shared
-    // mutable state); partitions committed before a failure are
-    // absorbed by the next idempotent run.
-    val dirtyResults: Map[String, (Long, Long)] =
-      Par.all(dirty.map { case (rel, _) => () => rel -> rewriteOne(rel) }, width = 4).toMap
+    // rewrite is ~7 small driver-blocking jobs (the count-and-quantile
+    // aggregate, the range-partitioned write, the stats read-back), so
+    // a daily-partition lake with many small dirty dirs would otherwise
+    // idle the cluster between jobs. Staging dirs and swaps stay
+    // strictly per-partition (no shared mutable state); partitions
+    // committed before a failure are absorbed by the next idempotent run.
+    val dirtyResults: Map[String, ZWrite] =
+      Par.all(dirty.map { case (rel, files) => () => rel -> rewriteOne(rel, files) },
+        width = 4).toMap
 
     val report = byPart.map { case (rel, files) =>
       dirtyResults.get(rel) match {
-        case Some((nFiles, nRows)) => (rel, true, nFiles, nRows)
+        case Some(w) => (rel, true, w.files.length.toLong, w.rows)
         case None => (rel, false, files.length.toLong, -1L)
       }
     }
 
     // manifest resync: keep clean partitions' LIVE entries (dead ones
     // — deletions with no accompanying ingest — are dropped so the
-    // staleness fallback stops full-scanning), fresh-stats the
-    // rewritten partitions (delta pass only), swap atomically
-    if (dirty.nonEmpty || deadEntries.nonEmpty || !hadManifest) {
-      val statsCols =
-        if (!hadManifest) zorderCols
-        else {
-          val c = spark.read.parquet(s"$lake/$StatsDir").columns
-            .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
-          require(c.sorted == zorderCols.sorted,
-            s"maintainLake($lake): manifest stats cols $c != z-order cols " +
-              s"$zorderCols — rewrite the manifest explicitly to change them")
-          c
-        }
-      // dict columns ride the existing manifest shape, like append:
-      // a maintenance pass must not silently drop point-skip coverage
-      val dictCols =
-        if (!hadManifest) Nil
-        else spark.read.parquet(s"$lake/$StatsDir").columns
-          .filter(_.startsWith("dict_")).map(_.stripPrefix("dict_")).toSeq
-      val rewrittenFiles = dirty.map(_._1).flatMap { rel =>
-        val dir = if (rel.isEmpty) lake else s"$lake/$rel"
-        spark.read.parquet(dir).inputFiles
-      }
-      // a pure-deletion resync has nothing to rewrite and nothing to
-      // fresh-stat — it only drops dead rows from the kept entries
-      val fresh =
-        if (rewrittenFiles.isEmpty) None
-        else Some(statsOf(
-          spark.read.option("basePath", lake).parquet(rewrittenFiles: _*),
-          statsCols, dictCols))
-      // prefix test runs on URI PATHS (scheme spellings differ between
-      // the caller's lake string and input_file_name output)
-      val base = new org.apache.hadoop.fs.Path(lake).toUri.getPath.stripSuffix("/")
-      val dirtyPrefixes = dirty.map { case (rel, _) =>
-        (if (rel.isEmpty) base else s"$base/$rel") + "/" }
-      val all =
-        if (!hadManifest)
+    // staleness fallback stops full-scanning), add the rewrites' stats
+    // rows (already on the driver), swap atomically
+    if (resync) {
+      val fresh = dirtyResults.values.headOption.map(w =>
+        local(dirtyResults.values.flatMap(_.stats).toSeq, w.statsSchema))
+      // clean = manifest entries of files listed outside the rewritten
+      // partitions (entries with no current file are dropped here),
+      // resolved driver-side and re-joined on the RAW file strings
+      val dirtyRels = dirty.map(_._1).toSet
+      val cleanNorm = byPart.filterNot(p => dirtyRels(p._1))
+        .flatMap(_._2).map(f => normPath(spelled(f))).toSet
+      val all = oldManifest match {
+        case None =>
           fresh.getOrElse(throw new IllegalStateException(
             s"maintainLake($lake): no manifest and nothing to stat"))
-        else {
+        case Some(m) =>
           import spark.implicits._
-          // clean = manifest entries NOT under a rewritten partition
-          // AND still present in the current listing (dead entries are
-          // dropped here); resolved driver-side on the already-
-          // collected listing and re-joined on the RAW file strings
-          // (no path-normalization expression needed in the plan)
-          val cleanRaw = knownPairs.collect {
-            case (raw, n) if currentNorm.contains(n) && !dirtyPrefixes.exists(
-              new org.apache.hadoop.fs.Path(raw).toUri.getPath.startsWith) => raw
-          }.toSeq
-          val keep = spark.read.parquet(s"$lake/$StatsDir")
-            .join(cleanRaw.toDF("file"), Seq("file"), "left_semi")
+          val cleanRaw = knownPairs.collect { case (raw, n) if cleanNorm(n) => raw }.toSeq
+          val keep = m.join(cleanRaw.toDF("file"), Seq("file"), "left_semi")
           fresh.fold(keep)(f =>
             keep.unionByName(f.select(keep.columns.toIndexedSeq.map(col): _*)))
-        }
-      val tmpStats = new org.apache.hadoop.fs.Path(lake, s".$StatsDir-tmp")
+      }
+      val tmpStats = new Path(lake, s".$StatsDir-tmp")
       val manFiles = math.max(1,
-        (rows.inputFiles.length + ManifestRowsPerFile - 1) / ManifestRowsPerFile)
-      all.repartitionByRange(manFiles, col("file"))
-        .write.mode(SaveMode.Overwrite).parquet(tmpStats.toString)
+        (currentNorm.size + ManifestRowsPerFile - 1) / ManifestRowsPerFile)
+      // one manifest file needs no range exchange
+      val placed =
+        if (manFiles == 1) all.coalesce(1) else all.repartitionByRange(manFiles, col("file"))
+      placed.write.mode(SaveMode.Overwrite).parquet(tmpStats.toString)
       fs.delete(statsPath, true)
       require(fs.rename(tmpStats, statsPath),
         s"maintainLake($lake): failed to promote the rebuilt manifest")

@@ -292,6 +292,22 @@ class AnnIndexSpec extends SparkSpec {
     assert(search <= 2, s"first search after an append ran $search jobs")
   }
 
+  test("writeSketch job budget: <= 3 jobs, no footer read of the table it wrote") {
+    val dir = Files.createTempDirectory("graft-sk-write-jobs").toString
+    // a local corpus frame, as the serve benchmark passes: a frame over
+    // a table would add its own scan and exchange jobs
+    val corpus = spark.createDataFrame(
+      java.util.Arrays.asList(emb.collect(): _*), emb.schema)
+    AnnIndex.writeSketch(s"$dir/warm", corpus, sketchDim = 16, dim = 64)
+    // the vectors, sketches and meta writes; sketches read the written
+    // vectors with the schema just written
+    val (_, jobs) = countJobs(AnnIndex.writeSketch(s"$dir/ix", corpus, sketchDim = 16, dim = 64))
+    assert(jobs <= 3, s"writeSketch ran $jobs jobs")
+    val q = corpus.filter(col("vec_id") < 3)
+    assert(AnnIndex.searchSketch(spark, s"$dir/ix", q, k = 5, m = 20).collect().toSeq ==
+      AnnIndex.searchSketch(spark, s"$dir/warm", q, k = 5, m = 20).collect().toSeq)
+  }
+
   test("searchSketch job budget: an unchanged index pays no footer reads") {
     val dir = Files.createTempDirectory("graft-sk-search-jobs").toString
     AnnIndex.writeSketch(dir, emb, sketchDim = 16, dim = 64)

@@ -228,6 +228,102 @@ class MaintainSpec extends SparkSpec {
       math.max(files("vectors"), files("sketches")))))
   }
 
+  test("maintainLake job budget: a first run of a perfbench-shaped flat lake <= 9 jobs, a no-op <= 3") {
+    implicit val s = spark
+    val lake = Files.createTempDirectory("graft-maint-jobs").toString + "/lake"
+    // as the serve benchmark lands its lake: lineitem in 24 part files,
+    // maintained to 32 KiB files on l_orderkey
+    spark.read.parquet(s"$sf0001/lineitem.parquet").repartition(24).write.parquet(lake)
+    val in = spark.read.parquet(lake).count()
+    def maintain() = Compactor.maintainLake(lake, 32L << 10, Seq("l_orderkey")).collect()
+    // the lake's footer read, the count-and-quantile aggregate (2), the
+    // range-partitioned write (3: bounds sample, exchange, write), the
+    // stats read-back (2), the manifest write from driver rows
+    val (first, jobs) = countJobs(maintain())
+    assert(first.length == 1 && first(0).getBoolean(1) && first(0).getLong(3) == in)
+    assert(jobs <= 9, s"first maintainLake ran $jobs jobs")
+    // the lake's and the manifest's footer reads, the manifest's file list
+    val (again, noop) = countJobs(maintain())
+    assert(again.length == 1 && !again(0).getBoolean(1))
+    assert(noop <= 3, s"no-op maintainLake ran $noop jobs")
+    assert(spark.read.parquet(lake).count() == in)
+  }
+
+  test("maintainLake's manifest equals a fresh stats pass: flat, partitioned with dict columns, " +
+       "after a pure deletion, under an encoded directory name") {
+    implicit val s = spark
+    import s.implicits._
+    // a space and a non-ASCII letter in the lake's directory and in the
+    // partition values: input_file_name() spells both URI-encoded
+    val root = Files.createTempDirectory("graft-maint-eq").toString + "/la ke é"
+    def data(from: Int, until: Int) = (from until until).map { i =>
+      val r = (i * 2654435761L) % 4096
+      ((r % 64).toInt, (r / 64).toInt, (i % 40).toLong, s"d é${i % 2}")
+    }.toDF("x", "y", "user", "day")
+    def manifest(lake: String) = {
+      val m = spark.read.parquet(s"$lake/${Compactor.StatsDir}")
+      (m.schema, m.collect().map(_.toString).sorted.toSeq)
+    }
+    // maintainLake's manifest, then the same lake's manifest written
+    // afresh by a full stats pass: rows and schema equal
+    def assertFresh(lake: String, dictCols: Seq[String]): Unit = {
+      val (schema, rows) = manifest(lake)
+      val written = Compactor.writeStatsManifest(lake, Seq("x", "y"), dictCols)
+      val (wantSchema, want) = manifest(lake)
+      assert(schema == wantSchema && written.schema == wantSchema)
+      assert(rows.nonEmpty && rows == want, s"maintained manifest != fresh stats pass in $lake")
+      assert(rows.length == spark.read.parquet(lake).inputFiles.length)
+    }
+
+    val flat = s"$root/flat"
+    data(0, 4096).drop("day").repartition(5).write.parquet(flat)
+    Compactor.maintainLake(flat, 2 * 1024, Seq("x", "y"))
+    assertFresh(flat, Nil)
+
+    val part = s"$root/part"
+    data(0, 8192).repartition(6).write.partitionBy("day").parquet(part)
+    Compactor.maintainLake(part, 2 * 1024, Seq("x", "y"))
+    assertFresh(part, Nil)
+    // dict columns, one of them the partition column: the resync keeps
+    // the clean partition's rows and adds the rewritten partition's,
+    // dictionaries included
+    Compactor.writeStatsManifest(part, Seq("x", "y"), dictCols = Seq("user", "day"))
+    data(8192, 8448).filter($"day" === "d é0").write.mode("append").partitionBy("day").parquet(part)
+    val r = Compactor.maintainLake(part, 2 * 1024, Seq("x", "y"))
+      .collect().map(x => (x.getString(0), x.getBoolean(1))).toMap
+    assert(r == Map("day=d é0" -> true, "day=d é1" -> false), s"one dirty partition: $r")
+    assertFresh(part, Seq("user", "day"))
+    // a pure deletion: the dead row goes, nothing is rewritten
+    val victim = spark.read.parquet(part).inputFiles.map(new java.net.URI(_))
+      .filter(_.getPath.contains("/day=d é1/")).minBy(_.toString)
+    val vp = new org.apache.hadoop.fs.Path(victim)
+    assert(vp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(vp, false))
+    val d = Compactor.maintainLake(part, 2 * 1024, Seq("x", "y")).collect()
+    assert(d.forall(!_.getBoolean(1)), "a pure deletion must not rewrite")
+    assertFresh(part, Seq("user", "day"))
+  }
+
+  test("guards: data files without the .parquet extension are refused, and the lake is left as it was") {
+    implicit val s = spark
+    import s.implicits._
+    val lake = Files.createTempDirectory("graft-maint-ext").toString
+    (0 until 1024).map(i => (i % 32, i.toLong)).toDF("x", "id").repartition(3)
+      .write.mode("overwrite").parquet(lake)
+    // rename every data file: still parquet, no longer '*.parquet'
+    new java.io.File(lake).listFiles().filter(_.getName.endsWith(".parquet")).foreach(f =>
+      assert(f.renameTo(new java.io.File(lake, f.getName.stripSuffix(".parquet") + ".data"))))
+    val before = new java.io.File(lake).list().toSet
+    assert(spark.read.parquet(lake).count() == 1024, "the renamed files stay readable")
+    val z = intercept[IllegalArgumentException](
+      Compactor.zorderParquet(lake, lake + ".z", 2 * 1024, Seq("x")))
+    assert(z.getMessage.contains("no '*.parquet' files"), z.getMessage)
+    val m = intercept[IllegalArgumentException](
+      Compactor.maintainLake(lake, 2 * 1024, Seq("x")))
+    assert(m.getMessage.contains("no '*.parquet' files"), m.getMessage)
+    assert(new java.io.File(lake).list().toSet == before, "a refused maintain must not touch the lake")
+    assert(spark.read.parquet(lake).count() == 1024)
+  }
+
   test("appendStatsManifest dup-guard catches a scheme-less spelling of a known path") {
     implicit val s = spark
     import s.implicits._

@@ -42,6 +42,34 @@ class ZOrderSpec extends SparkSpec {
     assert(nulls(0).isNullAt(0))
   }
 
+  test("countAndQuantiles: the row count and the same bounds as count() and approxQuantile") {
+    import spark.implicits._
+    val probs = (1 until 256).map(_ / 256.0)
+    def check(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Unit = {
+      val (n, bounds) = Compactor.countAndQuantiles(df,
+        cols.map(c => col(c).cast("double")), probs, 0.001)
+      val qs = cols.indices.map(i => s"_q$i")
+      val want = df.select(cols.zip(qs).map { case (c, q) => col(c).cast("double").as(q) }: _*)
+        .stat.approxQuantile(qs.toArray, probs.toArray, 0.001)
+      assert(n == df.count())
+      assert(bounds.map(_.toSeq) == want.toSeq.map(_.toSeq), s"bounds differ over ${cols.mkString(",")}")
+    }
+    // the shapes the z-order rewrites see: scattered grid columns in
+    // several partitions, a skewed column, nulls and NaNs, no rows
+    val grid = (0 until 12288).map { i =>
+      val r = (i * 2654435761L) % 4096
+      ((r % 64).toInt, (r / 64).toInt, i.toLong)
+    }.toDF("x", "y", "id").repartition(6)
+    check(grid, Seq("x", "y"))
+    check(grid, Seq("id"))
+    val odd = (0 until 5000).map(i =>
+      (if (i % 7 == 0) None else Some(if (i % 11 == 0) Double.NaN else math.pow(i % 97, 3)),
+        (i % 3).toLong)).toDF("v", "w").repartition(4)
+    check(odd, Seq("v", "w"))
+    check(grid.filter($"x" < 0), Seq("x", "y"))
+    check(spark.read.parquet(s"$sf0001/lineitem.parquet").repartition(24), Seq("l_orderkey"))
+  }
+
   test("zorderParquet: rows preserved; per-file spans tighten on BOTH columns") {
     implicit val s = spark
     import s.implicits._
