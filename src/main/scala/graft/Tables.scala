@@ -87,23 +87,12 @@ object Tables {
 
   /** Whether `ts` is annotated TIMESTAMP(NANOS) in the footer of one of
     * the table's data files (the table itself when it is a single
-    * file). Read on the driver, so it starts no Spark job. */
+    * file), [[Readers.firstFooter]]: read on the driver, so it starts
+    * no Spark job. */
   private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // listStatus of a file is that file
-    val files = if (fs.exists(root)) fs.listStatus(root) else Array.empty[FileStatus]
-    files.find { st =>
-      val n = st.getPath.getName
-      st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-    }.exists { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    Readers.firstFooter(spark, path).exists { f =>
+      val schema = f.getParquetMetadata.getFileMetaData.getSchema
       schema.containsField("ts") &&
         (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
           case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
-  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType,
   TimestampType}
@@ -333,28 +332,12 @@ object Compactor {
     StructField("path", StringType), StructField("modificationTime", TimestampType),
     StructField("record_bytes", LongType), StructField("content", BinaryType)))
 
-  /** Whether `dir` holds a parquet lake with a `path` column: the footer
-    * of its first visible non-empty data file, read on the driver (no
-    * job). False when `dir` is missing or holds no such file.
-    */
+  /** Whether `dir` holds a parquet lake with a `path` column, per its
+    * [[Readers.firstFooter]] (no job). */
   private def isBundleLake(dir: String)
-                          (implicit spark: org.apache.spark.sql.SparkSession): Boolean = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    def firstFile(p: Path): Option[FileStatus] =
-      fs.listStatus(p).iterator.filter(visible).flatMap { st =>
-        if (st.isDirectory) firstFile(st.getPath) else Option.when(st.getLen > 0)(st)
-      }.nextOption()
-    fs.exists(root) && firstFile(root).exists { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try reader.getFooter.getFileMetaData.getSchema.containsField("path")
-      finally reader.close()
-    }
-  }
+                          (implicit spark: org.apache.spark.sql.SparkSession): Boolean =
+    Readers.firstFooter(spark, dir)
+      .exists(_.getParquetMetadata.getFileMetaData.getSchema.containsField("path"))
 
   /** Name of the advisory listing high-water-mark sidecar written next
     * to the bundled lake. Underscore-prefixed, so every parquet reader
@@ -456,11 +439,6 @@ object Compactor {
     Set("date", "dt", "year", "month", "day", "hour", "hr", "minute", "min")
   private val KvName = "([A-Za-z0-9_.\\-]+)=(.+)".r
 
-  private def visible(s: org.apache.hadoop.fs.FileStatus): Boolean = {
-    val n = s.getPath.getName
-    !n.startsWith("_") && !n.startsWith(".")
-  }
-
   /** One partition level's entries, validated: every visible entry a
     * directory, all sharing ONE key name; under `requireDateLike` the
     * key must be date-like and the values uniform-width digit strings
@@ -470,7 +448,7 @@ object Compactor {
   private def partitionLevel(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, requireDateLike: Boolean)
       : Option[(String, Seq[(org.apache.hadoop.fs.FileStatus, String)])] = {
-    val entries = fs.listStatus(dir).toSeq.filter(visible)
+    val entries = fs.listStatus(dir).toSeq.filter(Readers.visible)
     if (entries.isEmpty || !entries.forall(_.isDirectory)) return None
     val parsed = entries.map(e => e.getPath.getName match {
       case KvName(k, v) => Some((e, k, v))
@@ -825,7 +803,7 @@ object Compactor {
     require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
     val rows = spark.read.parquet(inputDir)
     // partition columns come from the relation, not name guessing
-    val partCols = fsRelation(rows).partitionSchema.fieldNames.toSeq
+    val partCols = Readers.fsRelation(rows).partitionSchema.fieldNames.toSeq
     // listing-only planning pass: binaryFile surfaces (path, length)
     // from file status without opening anything
     val listing = spark.read.format("binaryFile")
@@ -1006,9 +984,10 @@ object Compactor {
     require(zorderCols.nonEmpty, "zorderParquet: need at least one column")
     require(zorderCols.size * bits <= 63,
       s"zorderParquet: ${zorderCols.size} cols x $bits bits exceeds 63")
-    // the lake's one footer read: every rewrite reads with its data schema
+    // the lake's one footer read: a flat rewrite reads with its data
+    // schema, a partition's with the partition's own footer (dirSchema)
     val rows = spark.read.parquet(inputDir)
-    val relation = fsRelation(rows)
+    val relation = Readers.fsRelation(rows)
     // A partitioned lake is rewritten PER PARTITION DIRECTORY — a
     // whole-lake rewrite would silently FLATTEN (partition dirs become
     // plain columns), and partition values don't need z-bits anyway:
@@ -1030,8 +1009,10 @@ object Compactor {
           .map(st => partitionDirOf(inputDir, st.getPath, "zorderParquet")).distinct.sorted
         require(leafRel.forall(_.nonEmpty),
           s"zorderParquet($inputDir): mixed flat+partitioned layout")
-        leafRel.map(rel => zorderFlat(s"$inputDir/$rel", s"$outputDir/$rel",
-          relation.dataSchema, targetBytes, zorderCols, bits))
+        leafRel.map { rel =>
+          val src = s"$inputDir/$rel"
+          zorderFlat(src, s"$outputDir/$rel", dirSchema(src), targetBytes, zorderCols, bits)
+        }
       }
     import spark.implicits._
     Seq((written.map(_.rows).sum, written.map(_.files.length.toLong).sum,
@@ -1047,9 +1028,10 @@ object Compactor {
                                   totalBytes: Long, statsSchema: StructType, stats: Array[Row])
 
   /** The single-directory z-order rewrite behind [[zorderParquet]] and
-    * [[maintainLake]]: every read uses the lake's data schema `schema`,
-    * so no footer is inferred. Jobs: one aggregate for the row count and
-    * the quantile bounds, the range-partitioned write, and one read-back
+    * [[maintainLake]]: every read uses the data schema `schema` the
+    * caller took from the lake or the partition, so no footer is
+    * inferred. Jobs: one aggregate for the row count and the quantile
+    * bounds, the range-partitioned write, and one read-back
     * of the output, [[statsOf]] over `statsCols`/`dictCols` (plus the
     * constant columns `extra`) collected, which is both the row check and
     * the new files' manifest rows. The byte total comes from the
@@ -1095,6 +1077,19 @@ object Compactor {
     ZWrite(outRows, Readers.leafFiles(out), totalBytes, stats.schema, perFile)
   }
 
+  /** The data schema of one partition directory `dir`, from its own
+    * first footer on the driver ([[Readers.footerSchema]], no job): the
+    * lake-level read infers ONE file's footer, so a column added in later
+    * partitions only would be dropped by a rewrite read with the lake's
+    * schema.
+    */
+  private def dirSchema(dir: String)
+                       (implicit spark: org.apache.spark.sql.SparkSession): StructType = {
+    val schema = Readers.footerSchema(spark, dir)
+    require(schema.nonEmpty, s"$dir: no non-empty data file to read a schema from")
+    schema.get
+  }
+
   /** `df`'s row count and, for each of `cols`, the bounds
     * `approxQuantile(probs, relErr)` gives, in one aggregate. The
     * quantiles are Spark's own form of `approxQuantile`: `approx_percentile`
@@ -1128,18 +1123,12 @@ object Compactor {
     dir.stripPrefix(base).stripPrefix("/")
   }
 
-  /** The file relation `df` reads. */
-  private def fsRelation(df: DataFrame): HadoopFsRelation =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
-      case f: HadoopFsRelation => f
-    }.getOrElse(throw new IllegalStateException(s"not a file read: ${df.queryExecution.analyzed}"))
-
   /** The partition columns of `df`'s relation as constant columns, at
     * the values its partition discovery parsed for directory `dir`
     * (none for a directory it did not discover as a partition).
     */
   private def partitionValues(df: DataFrame, dir: org.apache.hadoop.fs.Path): Seq[Column] =
-    fsRelation(df).location match {
+    Readers.fsRelation(df).location match {
       case ix: PartitioningAwareFileIndex =>
         val spec = ix.partitionSpec()
         spec.partitions.find(_.path == dir).toSeq.flatMap { p =>
@@ -1502,8 +1491,9 @@ object Compactor {
     * under live readers.
     *
     * Job shape: the lake's footer is read once, and every later read
-    * uses its data schema; an existing manifest is read once (its
-    * footer and its `file` column). Each dirty partition's
+    * uses its data schema (a partition's rewrite uses the partition's
+    * own first footer, read on the driver); an existing manifest is
+    * read once (its footer and its `file` column). Each dirty partition's
     * [[zorderFlat]] rewrite counts rows and finds its quantile bounds in
     * one aggregate, sizes its output from the listing, writes, and reads
     * the staged output back once: that read-back's per-file stats rows
@@ -1519,10 +1509,11 @@ object Compactor {
                   (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     require(zorderCols.nonEmpty, "maintainLake: need at least one z-order column")
-    // the lake's one footer read: its data schema serves every rewrite,
-    // its file index the listing
+    // the lake's one footer read: its data schema serves a flat lake's
+    // rewrite (a partition's reads its own footer, dirSchema), its file
+    // index the listing
     val rows = spark.read.parquet(lake)
-    val relation = fsRelation(rows)
+    val relation = Readers.fsRelation(rows)
     val partCols = relation.partitionSchema.fieldNames.toSeq
     require(zorderCols.forall(c => !partCols.contains(c)),
       s"maintainLake($lake): z-order data columns only (directory pruning " +
@@ -1574,7 +1565,8 @@ object Compactor {
         if (rel.isEmpty) s"$lake.maintain-tmp"
         else s"$lake/.maintain-tmp-${rel.replace('/', '_')}"
       val dir = files.head.getPath.getParent
-      val w = zorderFlat(src, tmp, relation.dataSchema, targetBytes, zorderCols, bits,
+      val schema = if (rel.isEmpty) relation.dataSchema else dirSchema(src)
+      val w = zorderFlat(src, tmp, schema, targetBytes, zorderCols, bits,
         statsCols, dictCols, partitionValues(rows, dir))
       // a staged file keeps its name through the swap, and under `src`
       // it is spelled as the listing spells the partition's old files:

@@ -5,7 +5,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Format-aware lake ingestion (reference S3/S4/W4 semantics,
   * Spark-first).
@@ -78,6 +82,12 @@ object Readers {
         k == "spark.sql.caseSensitive"
     })
 
+  /** The file relation `df` reads. */
+  private[graft] def fsRelation(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
+      case f: HadoopFsRelation => f
+    }.getOrElse(throw new IllegalStateException(s"not a file read: ${df.queryExecution.analyzed}"))
+
   /** The leaf files `df`'s file index listed when the read was built:
     * Spark's own listing (its hidden-file rule, `pathGlobFilter`, its
     * parallel listing above
@@ -86,12 +96,47 @@ object Readers {
     * spells the file as `binaryFile`'s `path` column does.
     */
   private[graft] def leafFiles(df: DataFrame): Seq[FileStatus] =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
-      case Some(HadoopFsRelation(ix: PartitioningAwareFileIndex, _, _, _, _, _)) =>
-        ix.allFiles()
+    fsRelation(df).location match {
+      case ix: PartitioningAwareFileIndex => ix.allFiles()
       case other => throw new IllegalStateException(
         s"file read resolved to $other, not a file index")
     }
+
+  /** Whether a listed entry is a lake entry, not a side file: not `_`-
+    * or `.`-prefixed, as Spark's file index hides metadata, staging and
+    * checksum files. */
+  private[graft] def visible(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** The footer of the first [[visible]] non-empty file under `path`,
+    * depth-first in listing order (`path` itself when it is such a
+    * file), read on the driver: no Spark job. None when `path` is
+    * missing or holds no such file.
+    */
+  private[graft] def firstFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def first(p: Path): Option[FileStatus] =
+      fs.listStatus(p).iterator.filter(visible).flatMap { st =>
+        if (st.isDirectory) first(st.getPath) else Option.when(st.getLen > 0)(st)
+      }.nextOption()
+    Option.when(fs.exists(root))(first(root)).flatten.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try new Footer(st.getPath, reader.getFooter) finally reader.close()
+    }
+  }
+
+  /** The data schema `spark.read.parquet(path)` infers for a table whose
+    * files share one schema (every column nullable), taken from
+    * [[firstFooter]] as Spark's own inference converts a footer, but
+    * without its job. None when `path` holds no data file.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    firstFooter(spark, path).map(f => nullable(ParquetFileFormat.readSchemaFromFooter(f,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))))
 
   /** Digest of the `(path, length, mtime)` [[leafFiles]] of `df`. */
   private def leafDigest(df: DataFrame): String =

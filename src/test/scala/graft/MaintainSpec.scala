@@ -324,6 +324,40 @@ class MaintainSpec extends SparkSpec {
     assert(spark.read.parquet(lake).count() == 1024)
   }
 
+  test("a partition keeps its own columns: maintainLake and zorderParquet rewrite each " +
+    "partition with that partition's schema, not the lake's") {
+    implicit val s = spark
+    import s.implicits._
+    val lake = Files.createTempDirectory("graft-maint-evolve").toString
+    // a column added in the later day: the lake-level read infers one
+    // partition's footer, so it sees `extra` in one partition only
+    (0 until 600).map(i => (i % 32, i / 32, i.toLong)).toDF("x", "y", "id")
+      .repartition(3).write.parquet(s"$lake/day=d0")
+    (0 until 600).map(i => (i % 32, i / 32, i.toLong, s"e$i")).toDF("x", "y", "id", "extra")
+      .repartition(3).write.parquet(s"$lake/day=d1")
+    val days = Seq("d0", "d1")
+    def snapshot(root: String) = days.map { d =>
+      val df = spark.read.parquet(s"$root/day=$d")
+      (df.columns.toSeq, df.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+    }
+    val before = snapshot(lake)
+    assert(before.map(_._1) == Seq(Seq("x", "y", "id"), Seq("x", "y", "id", "extra")))
+    // the driver-side footer schema is the one a plain read infers
+    days.foreach(d => assert(graft.operators.Readers.footerSchema(spark, s"$lake/day=$d")
+      .contains(spark.read.parquet(s"$lake/day=$d").schema)))
+    def assertKept(root: String, what: String): Unit =
+      days.zip(snapshot(root)).zip(before).foreach { case ((d, (cols, rows)), (cols0, rows0)) =>
+        assert(cols == cols0, s"$what: day=$d has columns $cols, expected $cols0")
+        assert(rows == rows0, s"$what: day=$d rows changed")
+      }
+
+    Compactor.zorderParquet(lake, lake + ".z", 2 * 1024, Seq("x", "y")).collect()
+    assertKept(lake + ".z", "zorderParquet")
+    val r = Compactor.maintainLake(lake, 2 * 1024, Seq("x", "y")).collect()
+    assert(r.forall(_.getBoolean(1)), "no manifest yet: every partition is rewritten")
+    assertKept(lake, "maintainLake")
+  }
+
   test("appendStatsManifest dup-guard catches a scheme-less spelling of a known path") {
     implicit val s = spark
     import s.implicits._
