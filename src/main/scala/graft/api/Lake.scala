@@ -70,8 +70,10 @@ final class LakeCollector(spark: SparkSession, config: CompactionConfig) {
 
   /** Parquet-lake OPTIMIZE: rewrite `inputDir`'s many small parquet
     * files into ~targetBytes files at `outputDir`, preserving the
-    * partition layout and every row ([[Compactor.optimizeParquet]]) —
-    * the maintenance pass that keeps a streaming sink's lake scannable.
+    * partition layout, every row and every column, also one that only
+    * later files carry ([[Compactor.optimizeParquet]]: the bundles are
+    * planned on the driver from the read's own listing) — the
+    * maintenance pass that keeps a streaming sink's lake scannable.
     */
   def optimize(): DataFrame = {
     implicit val s: SparkSession = spark

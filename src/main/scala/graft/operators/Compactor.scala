@@ -60,8 +60,13 @@ import scala.jdk.CollectionConverters._
   * boundaries (the `spark.sql.shuffle.partitions` default here), so
   * results do not depend on the quantile sketch accuracy — only balance
   * does. Everything is expressible as one SQL window in the DuckDB
-  * oracle. The three phases live in [[PrefixSum.runningTotal]], shared
-  * verbatim with [[Curation.packByBudget]] (stratum = constant here).
+  * oracle. The three phases live in [[PrefixSum]]'s `runningTotal`,
+  * shared verbatim with [[Curation.packByBudget]] (stratum = constant
+  * here).
+  *
+  * [[optimizeParquet]] plans a parquet lake's files on the driver too,
+  * from the file index of its own row read, with the same running sum
+  * per partition directory.
   */
 object Compactor {
 
@@ -74,7 +79,7 @@ object Compactor {
   /** Assign `bundle_id = floor(exclusive_prefix_sum(size) / targetBytes)`
     * over the total order `(primaryOrder, tieBreakers...)`.
     *
-    * The running sum is the shared [[PrefixSum.runningTotal]] recipe
+    * The running sum is the shared [[PrefixSum]] `runningTotal` recipe
     * (range buckets from one deterministic quantile sketch, per-bucket
     * offsets computed distributed and broadcast back — no driver
     * collect anywhere), with one global group and an EXCLUSIVE frame.
@@ -138,16 +143,21 @@ object Compactor {
   private[graft] def planBundles(files: Seq[Listed], targetBytes: Long,
                                  firstBundle: Long): Array[Planned] = {
     require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val order = Ordering.by[(Listed, UTF8String), Long](_._1.mtime)
-      .orElseBy(_._2)(SparkStringOrder)
-    var prefix = 0L
-    files.iterator.filter(_.length > 0)
-      .map(f => (f, UTF8String.fromString(f.path))).toArray.sorted(order)
-      .map { case (f, _) =>
-        val id = math.floor(prefix.toDouble / targetBytes).toLong + firstBundle
-        prefix += f.length
-        Planned(f, id)
-      }
+    runningBundles(files.filter(_.length > 0), targetBytes)(_.mtime, _.path, _.length)
+      .map { case (f, id) => Planned(f, id + firstBundle) }.toArray
+  }
+
+  /** `files` in the order (`key`, `path` in Spark's byte order), each
+    * with its bundle `floor(exclusive_prefix_sum(length) / targetBytes)`,
+    * in double arithmetic as Spark's `floor(a / b)`.
+    */
+  private def runningBundles[A](files: Seq[A], targetBytes: Long)
+                               (key: A => Long, path: A => String, length: A => Long): Seq[(A, Long)] = {
+    val sorted = files.map(f => (f, key(f), UTF8String.fromString(path(f))))
+      .sorted(Ordering.by[(A, Long, UTF8String), Long](_._2).orElseBy(_._3)(SparkStringOrder))
+      .map(_._1)
+    sorted.zip(sorted.scanLeft(0L)(_ + length(_)))
+      .map { case (f, prefix) => (f, math.floor(prefix.toDouble / targetBytes).toLong) }
   }
 
   private def local(rows: Seq[Row], schema: StructType)
@@ -232,7 +242,7 @@ object Compactor {
     def distributedPlan(rows: DataFrame, delta: Option[(String, java.sql.Timestamp)]): BundlePlan = {
       // Pinned: the write and the manifest both read it, a fold's
       // manifest after its append. A localCheckpoint, not a Caches
-      // entry, which would stay referenced until Caches.release().
+      // entry, which would stay referenced until the registry's release().
       val assign = withBundleId(rows, col("modificationTime"), Seq(col("path")),
           col("length"), targetBytes)
         .select(col("path"), (col(BundleCol) + firstBundle).as(BundleCol), col("record_bytes"))
@@ -777,11 +787,13 @@ object Compactor {
     * each partition directory's files approach `targetBytes`,
     * preserving the partition layout and every row.
     *
-    * Same division of labor as [[compactDirectory]] at 100 TB:
-    *  - bundle assignment runs on the LISTING ONLY (path, size from
-    *    file status — no file is opened), one [[PrefixSum]] pass
-    *    grouped by partition directory, so the planning shuffle
-    *    carries a few dozen bytes per FILE;
+    * Same division of labor as [[compactDirectory]]:
+    *  - bundle assignment runs on the LISTING ONLY, planned on the
+    *    driver from the row read's own file index (no file is opened,
+    *    no job): per partition directory, files in (length, path)
+    *    order, `bundle_id = floor(exclusive_prefix_sum(length) /
+    *    targetBytes)`. The plan is a broadcast local relation joined to
+    *    the row scan, and the manifest a local relation;
     *  - row bytes are then read once and shuffled once, hash-clustered
     *    by (partition dir, bundle) so each task writes whole bundles
     *    into the partitioned writer (`maxRecordsPerFile`-style row
@@ -789,6 +801,11 @@ object Compactor {
     *  - targeting is on INPUT (encoded) bytes, the unit the listing
     *    has — output files land near `targetBytes` modulo re-encoding
     *    drift, the same estimate-vs-exact trade as W2 gzip targeting.
+    *
+    * The lake is read with `mergeSchema`, so a column that only later
+    * files carry is kept (null in the older rows) and conflicting
+    * column types fail with Spark's merge error. A data file whose name
+    * does not end in `.parquet` is refused before any write.
     *
     * Non-destructive: writes the optimized lake at `outputDir`
     * (swap-then-delete is the caller's commit policy, like every
@@ -801,57 +818,38 @@ object Compactor {
   def optimizeParquet(inputDir: String, outputDir: String, targetBytes: Long)
                      (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val rows = spark.read.parquet(inputDir)
+    val rows = spark.read.option("mergeSchema", "true").parquet(inputDir)
     // partition columns come from the relation, not name guessing
     val partCols = Readers.fsRelation(rows).partitionSchema.fieldNames.toSeq
-    // listing-only planning pass: binaryFile surfaces (path, length)
-    // from file status without opening anything
-    val listing = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.parquet")
-      .option("recursiveFileLookup", "true")
-      .load(inputDir)
-      .select(col("path"), col("length"))
-      .withColumn("part_dir", regexp_extract(col("path"), "^(.*)/[^/]+$", 1))
-    val assign = Caches.track(
-      PrefixSum.runningTotal(listing,
-          groupCol = col("part_dir"),
-          ordKey = col("length").cast("double"),
-          orderCols = Seq(col("length").asc, col("path").asc),
-          valueCol = col("length"),
-          buckets = 0,
-          inclusive = false,
-          nullsLast = false,
-          outCol = "_prefix",
-          keepValueAs = Some("file_bytes"))
-        .withColumn(BundleCol, floor(col("_prefix") / lit(targetBytes)))
-        .drop("_prefix"))
-    // Guard against silent row loss: the row scan reads EVERY data file
-    // of the relation, but the listing is '*.parquet'-globbed — a data
-    // file with any other extension would plan into the relation yet
-    // miss the bundle assignment, and the inner join below would drop
-    // its rows without a trace. Both file sets are already driver-side
-    // listings (inputFiles comes from the relation's file index, the
-    // assignment manifest is file-level), so the check costs a set
-    // diff, not a data pass. Fail loudly; never "optimize" rows away.
-    val listed = assign.select(col("path")).collect().map(r => normPath(r.getString(0))).toSet
-    val unassigned = rows.inputFiles.map(normPath(_)).filterNot(listed.contains)
+    val files = Readers.leafFiles(rows)
+    val unassigned = files.map(_.getPath.toString).filterNot(_.endsWith(".parquet"))
     require(unassigned.isEmpty,
       s"optimizeParquet($inputDir): ${unassigned.length} data file(s) in the " +
-        s"relation have no bundle assignment (non-'*.parquet' names or files " +
-        s"the listing missed) — refusing to drop their rows. First few: " +
-        unassigned.take(3).mkString(", "))
+        s"relation have no bundle assignment (non-'*.parquet' names) — " +
+        s"refusing to drop their rows. First few: " + unassigned.take(3).mkString(", "))
+    // (partition dir, bundle_id, file); the dir spelled as binaryFile's path
+    val plan = files.groupBy(_.getPath.getParent.toString).toSeq.flatMap {
+      case (dir, fs) => runningBundles(fs, targetBytes)(_.getLen, _.getPath.toString, _.getLen)
+        .map { case (st, id) => (dir, id, st) }
+    }
+    // input_file_name() spells a file as its path's URI
+    val assign = broadcast(local(plan.map { case (dir, id, st) =>
+      Row(st.getPath.toUri.toString, dir, id)
+    }, StructType(Seq(StructField("_path", StringType, nullable = false),
+      StructField("part_dir", StringType), StructField(BundleCol, LongType)))))
     rows
-      .withColumn("_path", col("_metadata.file_path"))
-      // AQE broadcasts the file-level assignment while it fits; the row
-      // payload shuffles exactly once either way
-      .join(assign.select(col("path").as("_path"), col("part_dir"), col(BundleCol)), "_path")
+      .withColumn("_path", input_file_name())
+      .join(assign, "_path")
       .repartition(col("part_dir"), col(BundleCol))
       .drop("_path", "part_dir", BundleCol)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partCols: _*)
       .parquet(outputDir)
-    assign.groupBy(col("part_dir"), col(BundleCol))
-      .agg(count(lit(1)).as("n_files"), sum(col("file_bytes")).as("total_bytes"))
+    local(plan.groupBy(p => (p._1, p._2)).toSeq.sortBy(_._1).map { case ((dir, id), ps) =>
+      Row(dir, id, ps.length.toLong, ps.map(_._3.getLen).sum)
+    }, StructType(Seq(StructField("part_dir", StringType),
+      StructField(BundleCol, LongType), StructField("n_files", LongType, nullable = false),
+      StructField("total_bytes", LongType))))
   }
 
   /** The swap-then-delete commit [[optimizeParquet]] delegates to the
@@ -926,7 +924,8 @@ object Compactor {
                      targetBytes: Long = 128L * 1024 * 1024)
                     (implicit spark: org.apache.spark.sql.SparkSession): Boolean = {
     require(maxFiles >= 1, s"compactTableIf: maxFiles must be >= 1, got $maxFiles")
-    val nFiles = spark.read.parquet(dir).inputFiles.length
+    // binaryFile's schema is fixed: listing it infers nothing, no job
+    val nFiles = Readers.leafFiles(spark.read.format("binaryFile").load(dir)).length
     if (nFiles <= maxFiles) false
     else {
       val opt = s"$dir.optimize-${System.currentTimeMillis()}"

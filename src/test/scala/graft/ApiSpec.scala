@@ -391,6 +391,76 @@ class ApiSpec extends SparkSpec {
       s"wrong failure: ${e.getMessage}")
   }
 
+  /** The `.parquet` files under `dir`, per parent directory name. */
+  private def partFiles(dir: java.io.File): Map[String, Int] = {
+    val it = Files.walk(dir.toPath).iterator()
+    var byDir = Map.empty[String, Int]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.toString.endsWith(".parquet")) {
+        val d = f.getParent.getFileName.toString
+        byDir = byDir.updated(d, byDir.getOrElse(d, 0) + 1)
+      }
+    }
+    byDir
+  }
+
+  test("optimize rewrites a lake whose path needs URI escaping: rows exact, layout kept") {
+    import spark.implicits._
+    // a space, a non-ASCII letter and a '+': the row scan's file URI
+    // spells the directory escaped, a file status's path does not
+    val root = new java.io.File(tmpDir("opt_escape"), "la ke é+x")
+    val in = new java.io.File(root, "in"); val out = new java.io.File(root, "out")
+    val src = (1 to 400).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p")
+    src.repartition(8).write.partitionBy("p").parquet(in.toString)
+    val nIn = partFiles(in).values.sum
+    assert(nIn >= 10, s"fixture not fragmented enough: $nIn files")
+
+    val manifest = new LakeCollector(spark,
+      CompactionConfig(in.toString, out.toString, targetBytes = 1L << 20)).optimize()
+    assert(manifest.agg(sum("n_files")).collect()(0).getLong(0) == nIn)
+    val back = spark.read.parquet(out.toString).select("id", "v", "p")
+    assert(src.exceptAll(back).isEmpty && back.exceptAll(src).isEmpty)
+    assert(partFiles(out) == Map("p=0" -> 1, "p=1" -> 1), s"layout: ${partFiles(out)}")
+  }
+
+  test("optimize keeps a column that only later partitions carry") {
+    import spark.implicits._
+    val in = tmpDir("opt_added_in"); val out = tmpDir("opt_added_out")
+    val d1 = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val d2 = (201 to 400).map(i => (i.toLong, s"v$i", s"e$i")).toDF("id", "v", "extra")
+    d1.repartition(2).write.parquet(s"$in/day=d1")
+    d2.repartition(2).write.parquet(s"$in/day=d2")
+    new LakeCollector(spark,
+      CompactionConfig(in.toString, out.toString, targetBytes = 1L << 20)).optimize()
+    val back = spark.read.parquet(out.toString)
+    assert(back.columns.sorted.sameElements(Array("day", "extra", "id", "v")),
+      s"columns: ${back.columns.mkString(",")}")
+    val want = d1.withColumn("extra", lit(null).cast("string")).withColumn("day", lit("d1"))
+      .unionByName(d2.withColumn("day", lit("d2")))
+    val got = back.select("id", "v", "extra", "day")
+    assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty)
+    assert(back.filter($"extra".isNotNull).count() == 200)
+  }
+
+  test("optimize job budget: the pass and its manifest collect <= 4 jobs, no cache left registered") {
+    import spark.implicits._
+    import graft.operators.{Caches, Compactor}
+    val in = tmpDir("opt_jobs_in"); val out = tmpDir("opt_jobs_out")
+    (1 to 2000).map(i => (i.toLong, s"payload_$i", i % 2)).toDF("id", "payload", "p")
+      .repartition(8).write.mode("overwrite").partitionBy("p").parquet(in.toString)
+    assert(partFiles(in).values.sum == 16)
+    val live = Caches.liveCount
+    // the footer merge, the shuffle to (partition dir, bundle) and the
+    // write; the manifest is a local relation
+    val (m, jobs) = countJobs(
+      Compactor.optimizeParquet(in.toString, s"$out/0", 1L << 20)(spark).collect())
+    assert(jobs <= 4, s"optimizeParquet ran $jobs jobs")
+    assert(m.map(_.getAs[Long]("n_files")).sum == 16)
+    (1 to 2).foreach(i => Compactor.optimizeParquet(in.toString, s"$out/$i", 1L << 20)(spark))
+    assert(Caches.liveCount == live, s"Caches grew ${live} -> ${Caches.liveCount}")
+  }
+
   test("commitOptimized swaps the optimized lake in at the original path, retiring a rollback copy") {
     import spark.implicits._
     import graft.operators.Compactor

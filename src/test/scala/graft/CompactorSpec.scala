@@ -234,4 +234,48 @@ class CompactorSpec extends SparkSpec {
     assertSame("no-op fold manifest")(side => manifestOf(none(side)))
     assertSame("lake after a no-op fold")(side => parquetLake(fold(side)))
   }
+
+  test("optimizeParquet's manifest equals the distributed prefix sum grouped by partition dir") {
+    implicit val s = spark
+    import graft.operators.PrefixSum
+    val one = tmpDir("opt_parity_one"); val in = tmpDir("opt_parity_in")
+    val out = tmpDir("opt_parity_out")
+    spark.range(50).selectExpr("id", "cast(id as string) as v").coalesce(1)
+      .write.mode("overwrite").parquet(one.toString)
+    val file = Files.list(one.toPath).filter(_.toString.endsWith(".parquet")).findFirst().get
+    // copies of one file: equal lengths, so the order is the path order
+    for (p <- 0 until 2; i <- 0 until 8) {
+      val d = Files.createDirectories(Paths.get(in.toString, s"p=$p"))
+      Files.copy(file, d.resolve(f"part-$i%05d.parquet"))
+    }
+    val target = Files.size(file) * 5 / 2 // 2-3 files a bundle, 3 bundles a directory
+    val manifest = Compactor.optimizeParquet(in.toString, out.toString, target)
+    // the reference plan: one PrefixSum pass grouped by partition
+    // directory over a recursive '*.parquet' binaryFile listing
+    val listing = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.parquet")
+      .option("recursiveFileLookup", "true")
+      .load(in.toString)
+      .select(col("path"), col("length"))
+      .withColumn("part_dir", regexp_extract(col("path"), "^(.*)/[^/]+$", 1))
+    val want = PrefixSum.runningTotal(listing,
+        groupCol = col("part_dir"),
+        ordKey = col("length").cast("double"),
+        orderCols = Seq(col("length").asc, col("path").asc),
+        valueCol = col("length"),
+        buckets = 0,
+        inclusive = false,
+        nullsLast = false,
+        outCol = "_prefix",
+        keepValueAs = Some("file_bytes"))
+      .withColumn(Compactor.BundleCol, floor(col("_prefix") / lit(target)))
+      .drop("_prefix")
+      .groupBy(col("part_dir"), col(Compactor.BundleCol))
+      .agg(count(lit(1)).as("n_files"), sum(col("file_bytes")).as("total_bytes"))
+    assert(manifest.schema == want.schema, s"${manifest.schema} vs ${want.schema}")
+    val rows = manifest.collect()
+    assert(rows.toSet == want.collect().toSet)
+    assert(rows.length == 6 && rows.map(_.getString(0)).distinct.length == 2)
+    assert(spark.read.parquet(out.toString).count() == 16 * 50)
+  }
 }

@@ -228,6 +228,18 @@ class MaintainSpec extends SparkSpec {
       math.max(files("vectors"), files("sketches")))))
   }
 
+  test("compactTableIf job budget: a no-op runs no job, a rewrite <= 5") {
+    implicit val s = spark
+    val dir = Files.createTempDirectory("graft-ctif-jobs").toString + "/t"
+    spark.range(400).selectExpr("id", "cast(id as string) as v").repartition(8).write.parquet(dir)
+    val (noop, j0) = countJobs(Compactor.compactTableIf(dir, maxFiles = 8))
+    assert(!noop && j0 == 0, s"a no-op ran $j0 jobs")
+    val (rewrote, j1) = countJobs(Compactor.compactTableIf(dir, maxFiles = 4))
+    assert(rewrote && j1 <= 5, s"a rewrite ran $j1 jobs")
+    val back = spark.read.parquet(dir)
+    assert(back.inputFiles.length == 1 && back.count() == 400)
+  }
+
   test("maintainLake job budget: a first run of a perfbench-shaped flat lake <= 9 jobs, a no-op <= 3") {
     implicit val s = spark
     val lake = Files.createTempDirectory("graft-maint-jobs").toString + "/lake"
